@@ -119,37 +119,11 @@ object Bench {
           (want -- headline.toSet).toSeq.sorted.filter(SparkEntry.queries.contains)
       case _ => headline
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle-partition policy knobs (same defaults as GraftSession:
-      // ceiling = cpus, advisory 64m — the fixed-count behavior, which the
-      // round-15 sf100 interleaved A/B measured as the winner on one JVM;
-      // see GraftSession.scala and SCALING.md round 15). There is NO
-      // automatic byte-based sizing: SPARK_GRAFT_INITIAL_PARTITIONS raises
-      // the ceiling for partitions-∝-bytes sweeps; SPARK_GRAFT_ADVISORY
-      // sets the per-partition byte target (memory-per-core emulation).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
+    // GraftSession's confs (the shuffle-partition policy knobs and the
+    // SPARK_GRAFT_* scale overrides included) plus one bench-only override:
+    // a 64 MB broadcast threshold.
+    val spark = GraftSession.builder(cores = cpus)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    // Scan-split size override for scale measurement on multi-row-group
-    // fixtures (dev/gen_rowgroups.py). The default 128 MB is byte-based
-    // packing; the compressed-text tables are CPU-bound at tiny byte
-    // sizes (documents at sf10 = 6 MB for 5M rows), so splitting them
-    // across cores needs a much smaller target — the same
-    // maxPartitionBytes tuning a CPU-heavy scan needs on a real cluster.
-    // Row groups are the split GRANULARITY (a one-row-group file is one
-    // task no matter what this is set to); this knob is the split SIZE.
-    val spark = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .filter(_.trim.nonEmpty)
-      .fold(builder)(b => builder.config("spark.sql.files.maxPartitionBytes", b.trim))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -12,6 +12,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * — on Spark the whole script is one DAG under one session.
   */
 object GraftSession {
+  /** Entries in Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * Spark default 100). One pass of the 79 headline queries at sf0.001
+    * compiles 1,277 distinct generated classes, one quickstart.cmr pass
+    * 1,140-1,320, and the perfbench `olap` and `iter` passes 129 and 132.
+    * Units run in a fixed cycle, so an LRU cache smaller than the cycle
+    * misses on most lookups: at 100 entries each warm `olap` pass recompiled
+    * about 115 classes with Janino, and at 1,000 each warm quickstart.cmr
+    * pass still recompiled 700-900. 3,000 holds the largest set with 2x
+    * headroom (BASELINE.md, "Compiled-class cache").
+    */
+  val CodegenCacheEntries = 3000
+
+  /** The one session factory: tests, scripts, Bench, Verify and the dev
+    * tools all build their sessions here, so a query's tested, verified and
+    * benched plans come from the same confs.
+    *
+    * `spark.sql.codegen.cache.maxEntries` is a static conf that Spark reads
+    * ONCE per JVM, when it first generates code: it takes effect only if the
+    * JVM's first session is built by this builder, before `getOrCreate`.
+    * Setting it on a running session, or building the first session
+    * elsewhere, leaves the cache at Spark's 100 entries for the life of the
+    * JVM.
+    */
   def builder(appName: String = "graft", cores: String = "32"): SparkSession.Builder = {
     val b = SparkSession
       .builder()
@@ -52,11 +75,16 @@ object GraftSession {
       // current events table is TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ),
       // against which this config is inert — kept so either generation loads
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", sys.props.getOrElse("graft.warehouse", "/tmp/graft-warehouse"))
     // Scan-split-size override for scale measurement on multi-row-group
-    // fixtures — same knob Bench honors (see Bench.scala); row groups are
-    // the split granularity, this is the split size. Unset → Spark default.
+    // fixtures (dev/gen_rowgroups.py). The default 128 MB is byte-based
+    // packing; the compressed-text tables are CPU-bound at tiny byte sizes
+    // (documents at sf10 = 6 MB for 5M rows), so splitting them across
+    // cores needs a much smaller target. Row groups are the split
+    // GRANULARITY (a one-row-group file is one task whatever this is set
+    // to); this knob is the split SIZE. Unset → Spark default.
     sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
       .filter(_.trim.nonEmpty)
       .fold(b)(v => b.config("spark.sql.files.maxPartitionBytes", v.trim))

@@ -65,20 +65,14 @@ object Matrix {
     * checkpoints stay EAGER regardless: `RDD.checkpoint` recomputes the
     * lineage a second time at materialization unless the RDD was computed
     * by the checkpointing job itself, so a lazy reliable checkpoint would
-    * double every round's work. `spark.graft.iter.eagerLocalCkpt=true`
-    * restores the pre-r17 all-eager behavior (the measurement A/B
-    * toggle).
+    * double every round's work.
     */
   private def ckpt(df: DataFrame, eager: Boolean, reliable: Boolean): DataFrame =
     if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
       df.checkpoint(true)
-    } else {
-      val forceEager = df.sparkSession.conf
-        .getOption("spark.graft.iter.eagerLocalCkpt").contains("true")
-      df.localCheckpoint(eager || forceEager)
-    }
+    } else df.localCheckpoint(eager)
 
   /** C = A × B over COO triples: A(i,k,v), B(k,j,w) → C(i,j) = Σ_k v·w.
     * Column names are positional contracts: a = (i, k, v), b = (k, j, w).

@@ -9,10 +9,14 @@ import org.apache.spark.sql.functions._
   */
 class CubePreAggSpec extends SparkSpec {
 
+  // A fresh session (so the conf toggles below stay local) from the one
+  // factory, after the shared one: the JVM's first SparkContext must come
+  // from GraftSession.builder whatever order the suites run in.
   private def extended(): SparkSession = {
+    spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder().master("local[4]").withExtensions(new GraftExtensions).getOrCreate()
+    GraftSession.builder(appName = "graft-test", cores = "4").getOrCreate()
   }
 
   private def restore(): Unit = {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -1033,5 +1034,28 @@ class PlanAuditSpec extends SparkSpec {
       s"evaluated LET constant missing from plan:\n$d")
     assert(!d.contains("$THRESH") && !d.contains("THRESH"),
       s"LET residue in executed plan:\n$d")
+  }
+
+  // Counter budget: a repeated run compiles no generated class. The
+  // sequence needs about 180 distinct classes, more than Spark's default
+  // 100-entry compiled-class cache. Each query generates the same code on
+  // every run (0 compiles over 7 repeats in one JVM); headline queries whose
+  // AQE re-planning depends on which stage finishes first (q155, q166, q167,
+  // q184, ...) generate new code now and then, and are left out.
+  test("a repeated headline sequence compiles no generated class the second time") {
+    val sequence = Seq("q15_join_merge", "q162_skyline", "q161_concurrency",
+      "q175_concurrency_by", "q147_gap_fill")
+    def runSequence(): Unit = sequence.foreach { q =>
+      SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
+    }
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    runSequence()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    runSequence()
+    val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(added == 0, s"the second run of ${sequence.mkString(", ")} recompiled $added " +
+      s"generated classes; the compiled-class cache (${GraftSession.CodegenCacheEntries} " +
+      "entries) no longer holds the working set, or a plan generates new code per run")
   }
 }

@@ -31,6 +31,7 @@ class UdafExtensionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects SQL functions into a new session") {
+    spark // the JVM's first SparkContext comes from GraftSession.builder
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
