@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR at local[32] and prints ONE JSON line
+  * SPARK_GRAFT_SF_DIR at local[GraftSession.defaultCores] and prints ONE JSON line
   * {"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}.
   *
   * Headline set = the queries that represent the engine's hot paths
@@ -105,7 +105,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCores
     // Optional comma-separated subset (e.g. the round-5 matched-22) so a
     // regression can be re-measured in an isolated JVM without the full
     // suite's GC/code-cache pressure.
@@ -119,12 +119,9 @@ object Bench {
           (want -- headline.toSet).toSeq.sorted.filter(SparkEntry.queries.contains)
       case _ => headline
     }
-    // GraftSession's confs (the shuffle-partition policy knobs and the
-    // SPARK_GRAFT_* scale overrides included) plus one bench-only override:
-    // a 64 MB broadcast threshold.
-    val spark = GraftSession.builder(cores = cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .getOrCreate()
+    // GraftSession's confs and nothing else, so the benched plan is the
+    // tested and oracle-checked plan (BASELINE.md, "Bench broadcast threshold")
+    val spark = GraftSession.builder(cores = cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // warm the JVM + parquet footers once so per-query numbers measure the
@@ -168,10 +165,6 @@ object Bench {
     // (JIT/codegen warmup excluded — measured still settling on run 2)
     // while every run re-reads parquet, re-plans, re-shuffles, and
     // re-broadcasts — standard warm single-node throughput methodology
-    // computed ONCE: the timing loop and the archive's "consume" field must
-    // never drift apart on which body produced the numbers
-    val consume =
-      if (sys.env.get("SPARK_GRAFT_BENCH_CONSUME").contains("count")) "count" else "noop"
     val rawRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val results = selected.map { name =>
       val fn = overrides.getOrElse(name, SparkEntry.queries(name))
@@ -189,12 +182,7 @@ object Bench {
           // every output column, so the number measures producing the
           // result (round-13 methodology; totals shift up slightly vs
           // count()-based rounds — BASELINE.md records the change).
-          // SPARK_GRAFT_BENCH_CONSUME=count restores the old body for
-          // same-session methodology A/Bs only.
-          if (consume == "count")
-            fn(spark, sfDir).count()
-          else
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
@@ -247,7 +235,7 @@ object Bench {
       val cpusJson = if (cpus.toIntOption.map(_.toString).contains(cpus)) cpus
         else "\"" + cpus + "\""
       val full =
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"spread":$spreadJson,"sf":"$sfDir","cpus":$cpusJson,"consume":"$consume"}"""
+        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"spread":$spreadJson,"sf":"$sfDir","cpus":$cpusJson,"consume":"noop"}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch {

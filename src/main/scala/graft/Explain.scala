@@ -10,7 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else Bench.headline
-    val spark = GraftSession.builder(cores = "8").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

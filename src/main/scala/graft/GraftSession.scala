@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with engine defaults sized for the local[32] test rig but
+/** Session factory with engine defaults sized for a local[cores] rig but
   * designed for cluster deployment: AQE on (runtime re-plan, skew-join
   * handling), shuffle partitions matched to parallelism rather than the 200
   * default, UTC session time zone for oracle parity.
@@ -24,6 +24,13 @@ object GraftSession {
     */
   val CodegenCacheEntries = 3000
 
+  /** Task threads for a session whose caller does not choose:
+    * `SPARK_GRAFT_CPUS`, else the host's available processors.
+    */
+  def defaultCores: String =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
+      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
+
   /** The one session factory: tests, scripts, Bench, Verify and the dev
     * tools all build their sessions here, so a query's tested, verified and
     * benched plans come from the same confs.
@@ -35,7 +42,7 @@ object GraftSession {
     * elsewhere, leaves the cache at Spark's 100 entries for the life of the
     * JVM.
     */
-  def builder(appName: String = "graft", cores: String = "32"): SparkSession.Builder = {
+  def builder(appName: String = "graft", cores: String = defaultCores): SparkSession.Builder = {
     val b = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -88,12 +95,6 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
       .filter(_.trim.nonEmpty)
       .fold(b)(v => b.config("spark.sql.files.maxPartitionBytes", v.trim))
-  }
-
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }
 

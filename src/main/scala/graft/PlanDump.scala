@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
   * the optimization rounds' before/after plan evidence
   * (plans/rNN/<query>_{before,after}.txt). Usage:
   *   SPARK_GRAFT_SF_DIR=... dev/run.sh graft.PlanDump <outDir> <suffix> q1,q2,...
-  * Uses the same session settings as Bench so the dumped plan is the
-  * benched plan (AQE initial plan; the runtime plan may coalesce further).
+  * Bench, Verify, the tests and this tool all take their confs from
+  * `GraftSession.builder` alone, so the dumped plan is the benched and
+  * oracle-checked plan (AQE initial plan; the runtime plan may coalesce
+  * further).
   *
   * The iterative queries' final plans are only the last checkpoint's
   * LogicalRDD scan (the loop erases per-round plans), so for those the
@@ -61,30 +63,6 @@ object PlanDump {
           .localCheckpoint()
         graft.operators.Matrix.lpaRound(e, labels, side)
       }),
-      // EXECUTED (AQE-final) q26 plan: runs the query, then reports the
-      // final plan — the initial plan shows one Exchange per union branch,
-      // reuse only materializes at runtime
-      "q26_executed_probe" -> (() => {
-        val df = SparkEntry.queries("q26_duple_cube")(spark, sfDir)
-        val bytes = new java.util.concurrent.atomic.AtomicLong
-        val recs = new java.util.concurrent.atomic.AtomicLong
-        val stages = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            stages.incrementAndGet()
-            bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            recs.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        df.write.mode("overwrite").format("noop").save()
-        Thread.sleep(2000) // let the listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-        println(s"PROBE stages=${stages.get} shuffleWriteBytes=${bytes.get} " +
-          s"shuffleWriteRecords=${recs.get}")
-        df
-      }),
       "q159_round" -> (() => {
         val edges = t("documents")
           .select(expr("doc_id div 8").as("a"),
@@ -106,8 +84,7 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...>")
     val Array(outDir, suffix, csv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val frags = fragments(spark, sfDir)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** CLI entry point for script execution — the analog of the reference's
@@ -59,7 +60,9 @@ object ScriptRunner {
   }
 
   /** The runner body, callable in-process (tests pass stopSession = false
-    * to keep the shared session alive). Returns the defined relations.
+    * to keep the shared session alive). Runs in the live session if there
+    * is one, with its confs untouched; otherwise builds one with
+    * `GraftSession.builder`. Returns the defined relations.
     */
   def run(args: Array[String], stopSession: Boolean):
       Map[String, org.apache.spark.sql.DataFrame] = {
@@ -104,9 +107,14 @@ object ScriptRunner {
     }
 
     val source = new String(Files.readAllBytes(Paths.get(scriptPath)), "UTF-8")
-    var b = GraftSession.builder(appName = s"graft-script:$scriptPath")
-    if (fair) b = b.config("spark.scheduler.mode", "FAIR")
-    val spark = b.getOrCreate()
+    // a live session runs the script as it is: the builder's getOrCreate
+    // would re-apply its runtime confs (shuffle partitions sized for the
+    // builder's cores) to a session its owner configured
+    val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .getOrElse {
+        val b = GraftSession.builder(appName = s"graft-script:$scriptPath")
+        (if (fair) b.config("spark.scheduler.mode", "FAIR") else b).getOrCreate()
+      }
     if (fair) {
       val mode = spark.sparkContext.getSchedulingMode.toString
       println(s"SCHEDULER=$mode")

@@ -5,7 +5,7 @@ package graft
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     val n = df.count()

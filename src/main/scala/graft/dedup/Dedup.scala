@@ -399,18 +399,8 @@ object Dedup {
     // the prefix join, and the pair-dedup groupBy then applies the
     // aggregate PPJoin+ bound, all BEFORE the verification join sees a pair
     //
-    // Tried and NOT shipped (r18): the PPJoin indexing-prefix asymmetry
-    // (orient pairs smaller-(n_sh, id) first; that side contributes only
-    // its n − ceil(2t/(1+t)·n) + 1 smallest shingles — lossless by Xiao et
-    // al. WWW'08 §3.2). Measured at sw50 (125k docs): candidate pairs
-    // 8,479,762 → 8,479,762 — a ZERO pair cut, because the df order
-    // already sinks every discriminating collision into the first ~n/9
-    // positions — and the join's residual condition gets strictly more
-    // expensive (size-then-id orientation + the prefix bound per
-    // co-occurrence): wall-neutral-to-negative. The hook stays available
-    // as ppjoinCandidates(indexSideA = true) with the Profile q142x probe
-    // as its harness, for corpora whose prefix collisions are less
-    // order-concentrated.
+    // The r18 indexing-prefix asymmetry cut zero candidate pairs at sw50 and
+    // was rejected (OPTIMIZATION_r18.md, "Changes tried, measured, and REJECTED").
     val cand = ppjoinCandidates(pref, pref,
       col(s"a.$idCol") < col(s"b.$idCol"), idCol, threshold)
     // sets are sorted: one allocation-free merge-count per candidate,
@@ -445,30 +435,14 @@ object Dedup {
     * lower-bound caveat gets correspondingly deeper. With the default
     * (no cap, the prefix paths' production posture) the bound is exact.
     */
-  private[graft] def ppjoinCandidates(prefA: DataFrame, prefB: DataFrame,
+  private def ppjoinCandidates(prefA: DataFrame, prefB: DataFrame,
                                pairCond: Column, idCol: String,
-                               threshold: Double,
-                               indexSideA: Boolean = false): DataFrame = {
-    // indexSideA (self-join asymmetry): when the caller orients pairs so
-    // that "a" is the smaller-(n_sh, id) side, a's contribution can be
-    // restricted to its INDEXING prefix pos ≤ n − ceil(2t/(1+t)·n) + 1
-    // without losing a qualifying pair (see ngramJaccardPrefix). The
-    // restriction pos ≤ n − ceil(v) + 1 ⟺ (n − pos + 1)·(1+t) ≥ 2t·n in
-    // exact reals; the file's standard −1.0 slack absorbs the double
-    // rounding of the two int-valued products admit-only (a boundary row
-    // kept = a slightly longer effective prefix, never a shorter one).
-    // A single-side predicate, so Catalyst pushes it below the join into
-    // a's stream — the prefix exchange itself shrinks.
-    val indexPrefix =
-      if (indexSideA)
-        (col("a.n_sh") - col("a.__pos") + lit(1)).cast("double") * lit(1.0 + threshold) >=
-          col("a.n_sh").cast("double") * lit(2.0 * threshold) - lit(1.0)
-      else lit(true)
+                               threshold: Double): DataFrame = {
     // the aliases are applied HERE; pairCond is built against the
     // documented names "a"/"b" (the one extra-condition caller uses
     // col("a.<id>") < col("b.<id>") for the self-join ordering)
     prefA.as("a").join(prefB.as("b"),
-        col("a.shingle") === col("b.shingle") && pairCond && indexPrefix &&
+        col("a.shingle") === col("b.shingle") && pairCond &&
           // single IEEE products are safe unslacked: a real product of two
           // doubles that is ≤ an integer never ROUNDS above it (the
           // integer is representable, so round-to-nearest cannot

@@ -25,44 +25,9 @@ object Builtins {
     default.map(chained.otherwise).getOrElse(chained)
   }
 
-  /** MATCHES(s, regex) — the reference compiles to dk.brics.automaton for
-    * speed (functions/builtin/Match.java:37); Spark's codegen'd `rlike` is
-    * the modern equivalent.
-    */
-  def matches(c: Column, regex: String): Column = c.rlike(regex)
-
-  /** CONCAT — reference: functions/builtin/Concat.java:34. */
-  def concatAll(cols: Column*): Column = concat(cols: _*)
-
-  /** SIZEOF over array/map/string — reference: functions/builtin/Sizeof.java:33. */
-  def sizeof(c: Column): Column = size(c)
-
-  /** UNIQUEID — unique long per row (reference: functions/builtin/UniqueId.java:32,
-    * which combines task id + counter; `monotonically_increasing_id` is the
-    * partition-id + offset analog).
-    */
-  def uniqueId(): Column = monotonically_increasing_id()
-
   /** SEQNO — sequential number within the partition ("block"), 1-based
     * (reference: functions/builtin/SeqNo.java:34 counts per task).
     */
   def seqNo(): Column =
     expr("row_number() over (partition by spark_partition_id() order by monotonically_increasing_id())")
-
-  /** Typecasts — reference: functions/builtin/Typecast.java:30. */
-  def castToInt(c: Column): Column = c.cast("int")
-  def castToLong(c: Column): Column = c.cast("long")
-  def castToFloat(c: Column): Column = c.cast("float")
-  def castToDouble(c: Column): Column = c.cast("double")
-  def castToString(c: Column): Column = c.cast("string")
-
-  /** TOBYTEARRAY — reference: functions/builtin/ToByteArray.java:32. */
-  def toByteArray(c: Column): Column = encode(c, "UTF-8")
-
-  /** Map projection `m#"key"` — grammar CubertPhysical.g4:178-179. */
-  def mapGet(m: Column, key: String): Column = m(key)
-
-  /** Bit shifts (LSHIFT/RSHIFT) — reference: functions/builtin/ArithmeticFunction.java:43. */
-  def lshift(c: Column, n: Int): Column = shiftleft(c, n)
-  def rshift(c: Column, n: Int): Column = shiftright(c, n)
 }

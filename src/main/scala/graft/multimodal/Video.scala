@@ -121,10 +121,6 @@ object Video {
     Some(AviInfo(width, height, uspf, total, spans.result(), payload))
   }
 
-  /** The JPEG frame blobs of an MJPEG AVI (empty for junk payloads). */
-  def jpegFrames(payload: Array[Byte]): Vector[Array[Byte]] =
-    parseAvi(payload).map(_.frames).getOrElse(Vector.empty)
-
   /** Evenly sample up to `n` of `total` indices — first frame always
     * included, deterministic.
     */

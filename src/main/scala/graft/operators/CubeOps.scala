@@ -103,8 +103,8 @@ object CubeOps {
     * A/B at that scale read best-of-3 24.6 s vs the Expand form's 18.5 s
     * with one arm failing outright under memory pressure — the sf0.1 win
     * inverts exactly where scale matters, so the Expand form (bounded
-    * partials, graceful spill) stays. Evidence: OPTIMIZATION_r17.md,
-    * Profile's "q26" sections, dev/r17-opt.
+    * partials, graceful spill) stays. Evidence: OPTIMIZATION_r17.md
+    * ("Changes tried, measured, and REJECTED" 1), dev/r17-opt.
     */
   def dupleCube(df: DataFrame, dims: Seq[String], inner: Seq[String],
                 outerAggSql: String, innerAggSql: String, as: String): DataFrame =

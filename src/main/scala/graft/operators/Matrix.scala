@@ -317,7 +317,7 @@ object Matrix {
     // buffers are not hash-aggregable) — two keyed sorts of the collapsed
     // (node, label, cnt) relation per round; the decimal(38,0) scalar is
     // hash-aggregable (partial_min pins still green) and measured 0.53 s
-    // vs 0.69 s per round at sf0.1 (Profile "lpaRound" pair). All decimal
+    // vs 0.69 s per round at sf0.1 (OPTIMIZATION_r17.md). All decimal
     // arithmetic here is exact integer arithmetic within the guarded
     // range, so the elected winner — and every q201 oracle hash — is
     // bit-identical to the struct form.

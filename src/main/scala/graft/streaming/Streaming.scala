@@ -335,16 +335,4 @@ object Streaming {
         }
       }
       .start()
-
-  /** Sink a stream to parquet with checkpointing; returns the query handle. */
-  def writeParquet(df: DataFrame, path: String, checkpoint: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger =
-                     org.apache.spark.sql.streaming.Trigger.AvailableNow()) =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .start()
 }

@@ -11,7 +11,7 @@ class ScriptRunnerSpec extends SparkSpec {
   }
 
   test("runs a script file with $param substitution and STORE") {
-    spark // force shared session so the runner's getOrCreate reuses it
+    spark // force the shared session so the runner reuses it
     val out = Files.createTempDirectory("graft-runner-out").toString
     val path = writeScript(
       """li = LOAD '$DIR/lineitem.parquet' USING PARQUET;
@@ -284,6 +284,18 @@ class ScriptRunnerSpec extends SparkSpec {
     val rc = proc.waitFor()
     assert(rc == 0, s"subprocess rc=$rc:\n$out")
     assert(out.contains("SCHEDULER=FAIR"), out)
+  }
+
+  test("run in a live session leaves its shuffle-partition confs as they were") {
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    // the shared session's own setting: SparkSpec builds it with 4 cores
+    confs.foreach(spark.conf.set(_, "4"))
+    val path = writeScript(
+      """li = LOAD '$DIR/lineitem.parquet' USING PARQUET;
+        |agg = GROUP li BY l_returnflag AGGREGATES COUNT(1) AS n;""".stripMargin)
+    ScriptRunner.run(Array(path, "DIR=/root/testdata/sf0.001"), stopSession = false)
+    assert(confs.map(spark.conf.get) == Seq("4", "4"))
   }
 }
 
