@@ -16,8 +16,9 @@ controls the first: row groups are the split GRANULARITY (a one-group
 file is one task no matter the session config), while
 spark.sql.files.maxPartitionBytes is the split SIZE — the compressed-
 text tables are CPU-bound at tiny byte sizes (documents at sf10 = 6 MB
-for 500k rows), so Bench exposes SPARK_GRAFT_MAX_PARTITION_BYTES to
-size the splits to the CPU density rather than the default 128 MB.
+for 500k rows), so size the splits to the CPU density rather than the
+default 128 MB with
+GRAFT_JAVA_OPTS=-Dspark.sql.files.maxPartitionBytes=<bytes> dev/run.sh ...
 
 Bench-only data: correctness still gates on the driver's sf0.01 parquet.
 Usage: python3 dev/gen_rowgroups.py <srcdir> <outdir> [rows] [tbl=rows ...]

@@ -226,16 +226,8 @@ object Bench {
         val ratio = if (ok.size >= 2 && ok.min > 0) ok.max / ok.min else -1.0
         "\"" + k + f"\":$ratio%.3f"
       }.mkString("{", ",", "}")
-      // cpus stays a JSON number when numeric (matching the r15-era rows;
-      // r16's rows are quoted strings — trend reads coerce); only a
-      // non-numeric setting like SPARK_GRAFT_CPUS="*" (valid for local[*])
-      // is quoted to keep the JSON well-formed
-      // round-trip through Int so "08" (leading zero — illegal JSON) and
-      // non-ASCII Unicode digits are quoted, not emitted as bare tokens
-      val cpusJson = if (cpus.toIntOption.map(_.toString).contains(cpus)) cpus
-        else "\"" + cpus + "\""
       val full =
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"spread":$spreadJson,"sf":"$sfDir","cpus":$cpusJson,"consume":"noop"}"""
+        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"spread":$spreadJson,"sf":"$sfDir","cpus":$cpus,"consume":"noop"}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch {

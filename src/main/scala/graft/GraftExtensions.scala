@@ -30,7 +30,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // allocation-free merge-count kernel (graft.plans.IntersectCountRewrite)
     ext.injectOptimizerRule(_ => graft.plans.IntersectCountRewrite)
     // default-on planning-time guard against accidental large cartesians
-    // (disable with spark.graft.guard.cartesian=false; graft.plans.CartesianGuard)
+    // (graft.plans.CartesianGuard). Spark's spark.sql.optimizer.excludedRules
+    // drops any of these rules by class name.
     ext.injectOptimizerRule(_ => graft.plans.CartesianGuard)
     // plan screen-pipeline pushdown fences as identity projections
     // (graft.plans.PushdownBarrier — must survive the whole optimizer, so

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with engine defaults sized for a local[cores] rig but
-  * designed for cluster deployment: AQE on (runtime re-plan, skew-join
-  * handling), shuffle partitions matched to parallelism rather than the 200
-  * default, UTC session time zone for oracle parity.
+/** Session factory: the confs the engine needs on top of Spark's defaults
+  * (its extensions, shuffle partitions matched to the task threads rather
+  * than the 200 default, a UTC session time zone for oracle parity, the
+  * compiled-class cache). Every other setting is Spark's own and keeps
+  * Spark's name and default.
   *
   * Replaces the reference's per-job Hadoop configuration plumbing
   * (reference: plan/physical/JobExecutor.java:44, app/CmrExecutor.java:41-116)
@@ -27,9 +28,20 @@ object GraftSession {
   /** Task threads for a session whose caller does not choose:
     * `SPARK_GRAFT_CPUS`, else the host's available processors.
     */
-  def defaultCores: String =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
-      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
+  def defaultCores: String = coresFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A `SPARK_GRAFT_CPUS` setting as a positive integer, trimmed and
+    * normalized ("08" -> "8"); unset or blank falls back to the host's
+    * available processors. Anything else fails here, naming the variable,
+    * instead of inside Spark's session-state construction.
+    */
+  private[graft] def coresFrom(setting: Option[String]): String =
+    setting.map(_.trim).filter(_.nonEmpty) match {
+      case None => Runtime.getRuntime.availableProcessors.toString
+      case Some(v) => v.toIntOption.filter(_ > 0).map(_.toString).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
 
   /** The one session factory: tests, scripts, Bench, Verify and the dev
     * tools all build their sessions here, so a query's tested, verified and
@@ -42,60 +54,22 @@ object GraftSession {
     * elsewhere, leaves the cache at Spark's 100 entries for the life of the
     * JVM.
     */
-  def builder(appName: String = "graft", cores: String = defaultCores): SparkSession.Builder = {
-    val b = SparkSession
+  def builder(appName: String = "graft", cores: String = defaultCores): SparkSession.Builder =
+    SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
+      // one shuffle partition per task thread; AQE coalesces from there
+      // (its initialPartitionNum defaults to this). Raising the ceiling so
+      // partitions grow with bytes lost on one JVM: per-partition sorts
+      // stayed in memory and extra reduce tasks cost more than bounded
+      // sorts saved (SCALING.md round 15, q15_join_merge at sf100)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Shuffle-partition policy knobs. AQE stages START at the
-      // initialPartitionNum ceiling and coalesce down to
-      // clamp(bytes/parallelism, 1 MB, advisory) from measured map-output
-      // stats, so raising the ceiling makes partition count grow ∝ bytes
-      // once a shuffle outgrows cores × advisory — bounding per-partition
-      // sort/build size. The DEFAULT keeps the ceiling at cores because
-      // the growth regime was measured and LOST on this execution model
-      // (SCALING.md round 15, q15_join_merge at sf100 = a 15 GB shuffle,
-      // interleaved A/B): per-partition sorts of 470 MB at ~1 GB-per-core
-      // heap stay in memory and fixed-count wins every pairwise run, while
-      // 59-partition/256 MB configs cost ~5-20% and 234-partition/64 MB
-      // configs +25-125% — on one JVM, reduce-side fetch/task overhead
-      // above ~cores exceeds what bounded sorts save until memory is the
-      // binding constraint. Deployments whose per-partition bytes WOULD
-      // outgrow memory-per-core (≳ sf300 here, or any real multi-node
-      // cluster, where the same knobs are per-executor) raise
-      // SPARK_GRAFT_INITIAL_PARTITIONS (the ceiling — sizing it from
-      // input bytes over the advisory, the way a production job sizes
-      // shuffle partitions from scan stats, is the right call for a known
-      // job) and set SPARK_GRAFT_ADVISORY to the per-partition byte
-      // budget; the engine's plans need no other change.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cores))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
       .config("spark.sql.session.timeZone", "UTC")
-      // earlier testdata generations carried INT64 TIMESTAMP(NANOS); the
-      // current events table is TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ),
-      // against which this config is inert — kept so either generation loads
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", sys.props.getOrElse("graft.warehouse", "/tmp/graft-warehouse"))
-    // Scan-split-size override for scale measurement on multi-row-group
-    // fixtures (dev/gen_rowgroups.py). The default 128 MB is byte-based
-    // packing; the compressed-text tables are CPU-bound at tiny byte sizes
-    // (documents at sf10 = 6 MB for 5M rows), so splitting them across
-    // cores needs a much smaller target. Row groups are the split
-    // GRANULARITY (a one-row-group file is one task whatever this is set
-    // to); this knob is the split SIZE. Unset → Spark default.
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .filter(_.trim.nonEmpty)
-      .fold(b)(v => b.config("spark.sql.files.maxPartitionBytes", v.trim))
-  }
 }
 
 /** Loaders for the driver-generated test tables (see /root/repo/TESTDATA.md).
@@ -129,23 +103,6 @@ object Tables {
           resolved.put(spark, m2); m2
         }
       }
-      perSession.getOrElseUpdate((sfDir, name), doLoad(spark, sfDir, name))
+      perSession.getOrElseUpdate((sfDir, name), spark.read.parquet(s"$sfDir/$name.parquet"))
     }
-
-  private def doLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    // Backward-compat: if events.ts arrives as INT64 TIMESTAMP(NANOS)
-    // (earlier testdata generations, read as long under nanosAsLong),
-    // restore TimestampType at micro precision. The current generation
-    // writes TIMESTAMP(MICROS) (TIMESTAMP_NTZ here) and passes through.
-    df.schema.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType) match {
-      case Some(_) =>
-        // integer division — `ts / 1000` would go through double and lose
-        // precision above 2^53 nanoseconds (~1972)
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      case None => df
-    }
-  }
 }

@@ -43,8 +43,7 @@ object PlanDump {
         val nodes = e.select(col("src").as("node"))
           .union(e.select(col("dst"))).distinct().localCheckpoint()
         val n = nodes.count()
-        val side = graft.operators.Matrix.stateSide(n, None,
-          graft.operators.Matrix.BroadcastNodeThreshold)
+        val side = graft.operators.Matrix.stateSide(n)
         val state = nodes
           .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
           .select(col("node"), lit(62500L).as("r"), col("deg"))
@@ -57,8 +56,7 @@ object PlanDump {
         val nodes = e.select(col("src").as("node"))
           .union(e.select(col("dst"))).distinct().localCheckpoint()
         val n = nodes.count()
-        val side = graft.operators.Matrix.stateSide(n, None,
-          graft.operators.Matrix.BroadcastNodeThreshold)
+        val side = graft.operators.Matrix.stateSide(n)
         val labels = nodes.select(col("node"), col("node").as("label"))
           .localCheckpoint()
         graft.operators.Matrix.lpaRound(e, labels, side)

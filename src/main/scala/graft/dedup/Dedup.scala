@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Matrix
+
 /** Deduplication operators for training-data pipelines, in increasing
   * sophistication: exact (hash groupBy), n-gram Jaccard (exact pairwise over
   * a shingle join), MinHash+LSH (banded candidate generation — the 100 TB
@@ -944,38 +946,25 @@ object Dedup {
                             bCol: String = "id_b",
                             maxIter: Int = 50,
                             reliableCheckpoint: Boolean = false): (DataFrame, Int) = {
-    // localCheckpoint (default) keeps blocks on executors only — losing
-    // one mid-run kills the job (truncated lineage can't recompute).
-    // reliableCheckpoint = true writes each round to the configured
-    // checkpoint dir instead: slower per round, survives executor loss —
-    // the posture for long runs at cluster scale
-    // local checkpoints are LAZY (r17, the Matrix-iterative posture): the
-    // per-round count() is the action that materializes-and-caches the
-    // round, so a round is one job instead of an eager-checkpoint job
-    // plus a count job; reliable checkpoints stay eager
-    def ck(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) {
-        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
-        df.checkpoint(true)
-      } else df.localCheckpoint(false)
     val e0 = ccEdgeIds(pairs, aCol, bCol, "u", "v")
     val allNodes = e0.select(col("u").as("id"))
       .union(e0.select(col("v").as("id"))).distinct().persist()
     // localCheckpoint (not persist) per round: each star round nests the
     // previous plan ~12×, so without truncation the logical plan grows
     // exponentially in rounds — checkpointing cuts lineage to O(1) while
-    // keeping the loop deterministic
-    var edges = ck(e0.filter(col("u") =!= col("v"))
+    // keeping the loop deterministic. Local checkpoints are lazy: the
+    // per-round count() materializes-and-caches the round, so a round is
+    // one job instead of an eager-checkpoint job plus a count job
+    var edges = Matrix.ckpt(e0.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct())
+      .distinct(), false, reliableCheckpoint)
     // carry the cardinality forward (the kCore idiom): `edges` was already
     // counted as `next` last round — re-counting it was a redundant job
     var eCount = edges.count()
     var i = 0
     var done = eCount == 0
     while (!done && i < maxIter) {
-      val next = ck(smallStar(largeStar(edges)))
+      val next = Matrix.ckpt(smallStar(largeStar(edges)), false, reliableCheckpoint)
       val nextCount = next.count()
       done = nextCount == eCount && next.except(edges).count() == 0
       // no unpersist: `edges` is checkpoint-backed (LogicalRDD), which

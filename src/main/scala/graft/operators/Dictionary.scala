@@ -37,8 +37,7 @@ object Dictionary {
     * CHILD size (Catalyst's Aggregate/Window estimate never shrinks for
     * cardinality), so a 5-value dictionary built from a 100 GB table
     * estimates 100 GB and would otherwise silently shuffle the whole
-    * fact table. Callers who know better force either side via
-    * `broadcastDict` and skip both tiers.
+    * fact table.
     */
   val BroadcastDictMaxBytes: Long = 1L << 30
 
@@ -47,24 +46,20 @@ object Dictionary {
     */
   val BroadcastDictMaxRows: Long = 10000000L
 
-  /** The dictionary side of the encode/decode join: explicit override
-    * wins; then the plan-stats estimate; then a bounded count.
+  /** The dictionary side of the encode/decode join: the plan-stats
+    * estimate, then a bounded count.
     */
-  private def dictSide(dict: DataFrame, forced: Option[Boolean]): DataFrame =
-    forced match {
-      case Some(b) => if (b) broadcast(dict) else dict
-      case None =>
-        if (dict.queryExecution.optimizedPlan.stats.sizeInBytes <=
-            BigInt(BroadcastDictMaxBytes)) broadcast(dict)
-        else {
-          // tier two needs a job anyway — snapshot first so an expensive
-          // in-query dictionary (distinct + window over the fact) computes
-          // once for BOTH the bounded probe and the join, not twice
-          val snap = dict.localCheckpoint(false)
-          if (snap.limit((BroadcastDictMaxRows + 1).toInt).count() <= BroadcastDictMaxRows)
-            broadcast(snap)
-          else snap
-        }
+  private def dictSide(dict: DataFrame): DataFrame =
+    if (dict.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        BigInt(BroadcastDictMaxBytes)) broadcast(dict)
+    else {
+      // tier two needs a job anyway — snapshot first so an expensive
+      // in-query dictionary (distinct + window over the fact) computes
+      // once for BOTH the bounded probe and the join, not twice
+      val snap = dict.localCheckpoint(false)
+      if (snap.limit((BroadcastDictMaxRows + 1).toInt).count() <= BroadcastDictMaxRows)
+        broadcast(snap)
+      else snap
     }
 
   /** CREATE DICTIONARY — distinct values of `column`, codes 1..N assigned in
@@ -133,24 +128,20 @@ object Dictionary {
     * dictionary (reference grammar: ENCODE ID on columns — plural).
     */
   def encodeMulti(df: DataFrame, cols: Seq[String], dict: DataFrame,
-                  nullsAs: Int = 0, unknownsAs: Option[Int] = None,
-                  broadcastDict: Option[Boolean] = None): DataFrame =
-    cols.foldLeft(df)((d, c) =>
-      encode(d, c, forColumn(dict, c), nullsAs, unknownsAs, broadcastDict))
+                  nullsAs: Int = 0, unknownsAs: Option[Int] = None): DataFrame =
+    cols.foldLeft(df)((d, c) => encode(d, c, forColumn(dict, c), nullsAs, unknownsAs))
 
   /** DECODE over several columns against a (possibly multi-column) dictionary. */
   def decodeMulti(df: DataFrame, cols: Seq[String], dict: DataFrame,
-                  unknownsAs: Option[String] = None,
-                  broadcastDict: Option[Boolean] = None): DataFrame =
-    cols.foldLeft(df)((d, c) => decode(d, c, forColumn(dict, c), unknownsAs, broadcastDict))
+                  unknownsAs: Option[String] = None): DataFrame =
+    cols.foldLeft(df)((d, c) => decode(d, c, forColumn(dict, c), unknownsAs))
 
   /** ENCODE x ON col USING dict [NULLS AS v] [UNKNOWNS AS n] — replace the
     * string column by its int code via broadcast join
     * (reference: DictionaryEncodeOperator.java:48).
     */
   def encode(df: DataFrame, column: String, dict: DataFrame,
-             nullsAs: Int = 0, unknownsAs: Option[Int] = None,
-             broadcastDict: Option[Boolean] = None): DataFrame = {
+             nullsAs: Int = 0, unknownsAs: Option[Int] = None): DataFrame = {
     // both sides ride under private positional names: a fact table with
     // its own 'code'/'colvalue' column — or duplicate column names from an
     // upstream join — must neither become ambiguous nor lose a column
@@ -161,7 +152,7 @@ object Dictionary {
     val dfT = df.toDF(tmp: _*)
     val target = col(tmp(idx))
     val d = dictSide(dict.select(col("colvalue").as("__graft_dict_value"),
-      col("code").as("__graft_dict_code")), broadcastDict)
+      col("code").as("__graft_dict_code")))
     val joined = dfT.join(d,
       target.cast("string") === col("__graft_dict_value"), "left_outer")
     // Without UNKNOWNS AS, a value missing from the dictionary fails loudly
@@ -188,7 +179,6 @@ object Dictionary {
     */
   def decode(df: DataFrame, column: String, dict: DataFrame,
              unknownsAs: Option[String] = None,
-             broadcastDict: Option[Boolean] = None,
              nullsAs: Int = 0): DataFrame = {
     val idx = df.columns.indexOf(column)
     require(idx >= 0, s"decode: no column $column in ${df.columns.mkString(", ")}")
@@ -197,7 +187,7 @@ object Dictionary {
     val dfT = df.toDF(tmp: _*)
     val target = col(tmp(idx))
     val d = dictSide(dict.select(col("colvalue").as("__graft_dict_value"),
-      col("code").as("__graft_dict_code")), broadcastDict)
+      col("code").as("__graft_dict_code")))
     val joined = dfT.join(d, target === col("__graft_dict_code"), "left_outer")
     val value = unknownsAs match {
       case Some(u) =>

@@ -26,20 +26,16 @@ object Matrix {
     * the practical ceiling for comfortable executor replication; beyond
     * it a guaranteed-OOM broadcast is strictly worse than reshuffling the
     * edges. The ops measure `n` anyway (they need it for the teleport
-    * base), so the switch is free; callers can force either side via the
-    * `broadcastRanks`/`broadcastLabels` override.
+    * base), so the switch is free.
     */
   val BroadcastNodeThreshold: Long = 50000000L
 
   /** Broadcast the per-node state relation only while it provably fits:
-    * explicit override wins, otherwise node count vs
-    * [[BroadcastNodeThreshold]] decides.
+    * node count vs `maxNodes` decides.
     */
-  private[graft] def stateSide(n: Long, forced: Option[Boolean],
-                               maxNodes: Long): DataFrame => DataFrame = {
-    val doBroadcast = forced.getOrElse(n <= maxNodes)
-    if (doBroadcast) df => broadcast(df) else identity
-  }
+  private[graft] def stateSide(n: Long, maxNodes: Long = BroadcastNodeThreshold)
+      : DataFrame => DataFrame =
+    if (n <= maxNodes) df => broadcast(df) else identity
 
   /** Checkpoint for the iterative family: `localCheckpoint` (default) is
     * fast but stores blocks on executors ONLY — an executor loss mid-run
@@ -67,7 +63,7 @@ object Matrix {
     * by the checkpointing job itself, so a lazy reliable checkpoint would
     * double every round's work.
     */
-  private def ckpt(df: DataFrame, eager: Boolean, reliable: Boolean): DataFrame =
+  private[graft] def ckpt(df: DataFrame, eager: Boolean, reliable: Boolean): DataFrame =
     if (reliable) {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
@@ -162,8 +158,6 @@ object Matrix {
     */
   def pageRankPortable(edges: DataFrame, iters: Int,
                        dampingPct: Int = 85,
-                       broadcastRanks: Option[Boolean] = None,
-                       broadcastMaxNodes: Long = BroadcastNodeThreshold,
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(dampingPct >= 0 && dampingPct <= 100, s"bad dampingPct: $dampingPct")
@@ -192,8 +186,8 @@ object Matrix {
     // edges beats reshuffling them — UNTIL the rank relation itself
     // outgrows what an executor can replicate (an O(V) broadcast at the
     // op's declared 10^9-node ceiling is ~16 GB): auto-switch on the
-    // already-measured node count, overridable either way
-    val side = stateSide(n, broadcastRanks, broadcastMaxNodes)
+    // already-measured node count
+    val side = stateSide(n)
     val base = (scale * (100 - dampingPct) / 100) / n
     // deg rides the checkpointed state (node, r, deg) — joined ONCE here,
     // never re-joined per round: checkpointed relations are LogicalRDDs
@@ -268,8 +262,6 @@ object Matrix {
     * localCheckpoint for O(1) lineage.
     */
   def labelPropagation(edges: DataFrame, iters: Int,
-                       broadcastLabels: Option[Boolean] = None,
-                       broadcastMaxNodes: Long = BroadcastNodeThreshold,
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val e = ckpt(edges.toDF("src", "dst").distinct(), false, reliableCheckpoint)
@@ -279,8 +271,8 @@ object Matrix {
     // same posture as pageRankPortable: the (node, label) relation — and
     // the equally O(V) per-round winner relation — ride to the edges only
     // while they provably fit an executor; above the threshold both joins
-    // fall back to shuffles (override via broadcastLabels)
-    val side = stateSide(n, broadcastLabels, broadcastMaxNodes)
+    // fall back to shuffles
+    val side = stateSide(n)
     var labels = nodes.select(col("node"), col("node").as("label"))
     for (_ <- 0 until iters) {
       labels = ckpt(lpaRound(e, labels, side),

@@ -9,11 +9,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * classic 100 TB incident: a join whose condition was misspelled (or
   * references only one side) silently plans as a cross product and runs
   * for days. Any Inner/Cross join with NO usable equality condition whose
-  * BOTH sides exceed `spark.graft.guard.cartesian.maxBytes` (default
-  * 256 MB — generous: 4x the broadcast ceiling, so every deliberate
-  * dim-side product in the engine clears it with room) fails at PLANNING
-  * time with the offending plan fragment, before a single task launches.
-  * Three deliberate-product shapes stay legal under the default:
+  * BOTH sides exceed [[MaxBytes]] (256 MB — generous: 4x the broadcast
+  * ceiling, so every deliberate dim-side product in the engine clears it
+  * with room) fails at PLANNING time with the offending plan fragment,
+  * before a single task launches. Three deliberate-product shapes stay
+  * legal:
   *
   *  - small-side cartesians (dim × dim, the pivot/duple shapes) — both
   *    sides under the cap;
@@ -36,8 +36,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * The guard is ON by default (round 13 — planning-time only,
   * false-positive-safe post-pushdown, and the incident it kills is
-  * common); set `spark.graft.guard.cartesian=false` to restore the old
-  * permissive behavior for a deliberate huge unhinted product.
+  * common); for a deliberate huge unhinted product, exclude it with
+  * `spark.sql.optimizer.excludedRules=graft.plans.CartesianGuard`.
   *
   * An optimizer rule, not an analyzer one, so it sees the join AFTER
   * predicate pushdown has had the chance to turn a WHERE clause into the
@@ -45,12 +45,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object CartesianGuard extends Rule[LogicalPlan] {
 
+  /** Both sides of an unconditioned join must exceed this estimate to fail. */
+  val MaxBytes: Long = 256L << 20
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.guard.cartesian", "true").toBoolean)
-      return plan
-    val maxBytes = conf
-      .getConfString("spark.graft.guard.cartesian.maxBytes", (256L << 20).toString)
-      .toLong
     plan.foreach {
       case j @ Join(left, right, Inner | Cross, cond, hint)
           if !cond.exists(hasEquiJoinKey(_, left, right)) &&
@@ -67,12 +65,13 @@ object CartesianGuard extends Rule[LogicalPlan] {
         def known(s: BigInt) = s < unknownFloor && s != BigInt(conf.defaultSizeInBytes)
         val l = left.stats.sizeInBytes
         val r = right.stats.sizeInBytes
-        if (l > maxBytes && r > maxBytes && known(l) && known(r))
+        if (l > MaxBytes && r > MaxBytes && known(l) && known(r))
           throw new IllegalStateException(
             s"CartesianGuard: unconditioned ${j.joinType} join of two large " +
-              s"inputs (left ~$l bytes, right ~$r bytes, cap $maxBytes). " +
-              s"Add an equality condition, broadcast a side, or disable " +
-              s"spark.graft.guard.cartesian.\n${j.simpleString(3)}")
+              s"inputs (left ~$l bytes, right ~$r bytes, cap $MaxBytes). " +
+              s"Add an equality condition, broadcast a side, or exclude " +
+              s"graft.plans.CartesianGuard via spark.sql.optimizer.excludedRules." +
+              s"\n${j.simpleString(3)}")
       case _ =>
     }
     plan

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Cubert's partitioned-additive CUBE trick as a Catalyst optimizer rule
@@ -24,12 +23,9 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
   * Fires only when every aggregate is exactly reassociable — COUNT, MIN,
   * MAX, or SUM over integral/decimal types (floating-point SUM is excluded
   * so results stay bit-identical to the unrewritten plan). Disable with
-  * `spark.graft.cube.preagg=false`.
+  * `spark.sql.optimizer.excludedRules=graft.plans.CubePreAggregate`.
   */
 object CubePreAggregate extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.cube.preagg", "true").toBoolean
 
   private def isGroupingExpand(e: Expand): Boolean =
     e.output.exists(_.name == "spark_grouping_id")
@@ -47,13 +43,10 @@ object CubePreAggregate extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
-      case agg @ Aggregate(groupings, aggExprs, expand: Expand, _)
-          if isGroupingExpand(expand) && !expand.child.isInstanceOf[Aggregate] =>
-        rewrite(agg, expand).getOrElse(agg)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(groupings, aggExprs, expand: Expand, _)
+        if isGroupingExpand(expand) && !expand.child.isInstanceOf[Aggregate] =>
+      rewrite(agg, expand).getOrElse(agg)
   }
 
   private def rewrite(agg: Aggregate, expand: Expand): Option[LogicalPlan] = {

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.functions.expressions.{ShingleHashSet, SortedIntersectCount}
@@ -24,12 +23,9 @@ import graft.functions.expressions.{ShingleHashSet, SortedIntersectCount}
   * `array_intersect` dedups its output, so on inputs WITH duplicates its
   * size differs from a pairwise merge count ([1,1] ∩ [1,1] → size 1, merge
   * count 2). Hence the conservative structural proof. Disable with
-  * `spark.graft.intersect.rewrite=false`.
+  * `spark.sql.optimizer.excludedRules=graft.plans.IntersectCountRewrite`.
   */
 object IntersectCountRewrite extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.intersect.rewrite", "true").toBoolean
 
   private def longArray(e: Expression): Boolean = e.dataType match {
     case ArrayType(LongType, _) => true
@@ -51,8 +47,7 @@ object IntersectCountRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformAllExpressions {
+    plan.transformAllExpressions {
       case Size(ArrayIntersect(a, b), _)
           if longArray(a) && longArray(b) && sortedDistinct(a) && sortedDistinct(b) =>
         SortedIntersectCount(a, b)

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Matrix
+
 /** Similarity search over an embedding column (`Array[Float]`): brute-force
   * cosine top-k as the exact baseline, and a random-hyperplane LSH bucketed
   * variant as the 100 TB scale path (candidates from bucket-equi-joins, then
@@ -468,9 +470,6 @@ object Similarity {
                             idCol: String = "vec_id", vecCol: String = "embedding",
                             reliableCheckpoint: Boolean = false): DataFrame = {
     require(k >= 1 && scale >= 1, s"bad k=$k scale=$scale")
-    if (reliableCheckpoint)
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
     val spark = df.sparkSession
     import spark.implicits._
     val q = df.select(col(idCol).cast("long").as("vec_id"),
@@ -482,16 +481,13 @@ object Similarity {
     def distTo(c: Seq[Long]) =
       aggregate(zip_with(col("xq"), typedLit(c), (a, b) => (a - b) * (a - b)),
         lit(0L), (acc, d) => acc + d)
-    // local checkpoints are LAZY (r17, the Matrix-iterative posture): the
-    // round's top-1 collect is the action that materializes-and-caches the
-    // folded state, so each round is one job instead of two (fold job +
-    // pick job); the fold's second reference reads the cached blocks.
-    // Reliable checkpoints stay eager (RDD.checkpoint recomputes lineage
-    // at materialization otherwise).
-    def ckpt(s: DataFrame): DataFrame =
-      if (reliableCheckpoint) s.checkpoint(true) else s.localCheckpoint(false)
-    var state = ckpt(q.select(col("vec_id"), col("xq"),
-      distTo(seedXq).as("md"), (col("vec_id") === lit(seedId)).as("sel")))
+    // lazy local checkpoints: the round's top-1 collect is the action that
+    // materializes-and-caches the folded state, so each round is one job
+    // instead of two (fold job + pick job); the fold's second reference
+    // reads the cached blocks
+    var state = Matrix.ckpt(q.select(col("vec_id"), col("xq"),
+      distTo(seedXq).as("md"), (col("vec_id") === lit(seedId)).as("sel")),
+      false, reliableCheckpoint)
     var selected = Vector[(Long, Long)]((seedId, 0L))
     for (i <- 2 to k) {
       val next = kCenterPick(state).limit(1).collect()
@@ -502,7 +498,7 @@ object Similarity {
       if (i < k)
         // checkpoint blocks from prior rounds are reclaimed by the
         // ContextCleaner once unreferenced; only the newest state is live
-        state = ckpt(kCenterFold(state, pickId, pickXq))
+        state = Matrix.ckpt(kCenterFold(state, pickId, pickXq), false, reliableCheckpoint)
     }
     selected.zipWithIndex
       .map { case ((id, d), i) => (i + 1L, id, d) }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CubePreAggregate: the rewrite fires for reassociable aggregates, leaves
@@ -8,98 +7,66 @@ import org.apache.spark.sql.functions._
   * unrewritten plan on data that includes NULL dimension values).
   */
 class CubePreAggSpec extends SparkSpec {
+  import spark.implicits._
 
-  // A fresh session (so the conf toggles below stay local) from the one
-  // factory, after the shared one: the JVM's first SparkContext must come
-  // from GraftSession.builder whatever order the suites run in.
-  private def extended(): SparkSession = {
-    spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    GraftSession.builder(appName = "graft-test", cores = "4").getOrCreate()
+  /** `f` planned without the rule, through Spark's own switch. */
+  private def withoutRule[A](f: => A): A = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.CubePreAggregate")
+    try f
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
-  private def restore(): Unit = {
-    SparkSession.setActiveSession(spark)
-    SparkSession.setDefaultSession(spark)
-  }
-
-  private def data(s: SparkSession) = {
-    import s.implicits._
-    Seq(("a", "x", 1L, 1.5), ("a", "y", 2L, 2.5), ("b", "x", 3L, 3.5),
-      (null, "x", 4L, 4.5), ("a", null, 5L, 5.5))
-      .toDF("d1", "d2", "m", "f")
-  }
+  private def data = Seq(("a", "x", 1L, 1.5), ("a", "y", 2L, 2.5), ("b", "x", 3L, 3.5),
+    (null, "x", 4L, 4.5), ("a", null, 5L, 5.5)).toDF("d1", "d2", "m", "f")
 
   test("rule fires for count/min/max/integral-sum and preserves results incl NULL dims") {
-    val s2 = extended()
-    try {
-      val df = data(s2)
-      val cubed = df.cube(col("d1"), col("d2"))
-        .agg(sum("m").as("sm"), count(lit(1)).as("n"), min("f").as("mn"), max("f").as("mx"))
-      val optimized = cubed.queryExecution.optimizedPlan.treeString
-      assert(optimized.contains("Expand"))
-      // leaf aggregate inserted below the Expand
-      assert("(?s)Expand.*Aggregate.*Relation".r.findFirstIn(optimized).isDefined,
-        s"expected Aggregate below Expand in:\n$optimized")
-
-      s2.conf.set("spark.graft.cube.preagg", "false")
-      val baseline = df.cube(col("d1"), col("d2"))
-        .agg(sum("m").as("sm"), count(lit(1)).as("n"), min("f").as("mn"), max("f").as("mx"))
-        .collect().map(_.toSeq).toSet
-      s2.conf.set("spark.graft.cube.preagg", "true")
-      assert(cubed.collect().map(_.toSeq).toSet == baseline)
-    } finally restore()
+    def cubed = data.cube(col("d1"), col("d2"))
+      .agg(sum("m").as("sm"), count(lit(1)).as("n"), min("f").as("mn"), max("f").as("mx"))
+    val optimized = cubed.queryExecution.optimizedPlan.treeString
+    assert(optimized.contains("Expand"))
+    // leaf aggregate inserted below the Expand
+    assert("(?s)Expand.*Aggregate.*Relation".r.findFirstIn(optimized).isDefined,
+      s"expected Aggregate below Expand in:\n$optimized")
+    val baseline = withoutRule {
+      val plan = cubed.queryExecution.optimizedPlan.treeString
+      assert("(?s)Expand.*Aggregate.*Relation".r.findFirstIn(plan).isEmpty,
+        s"excluded rule still fired:\n$plan")
+      cubed.collect().map(_.toSeq).toSet
+    }
+    assert(cubed.collect().map(_.toSeq).toSet == baseline)
   }
 
   test("rule does not fire for float sums or distinct aggregates") {
-    val s2 = extended()
-    try {
-      val df = data(s2)
-      val floatSum = df.cube(col("d1")).agg(sum("f").as("sf"))
-      assert(!"(?s)Expand.*Aggregate.*Relation".r
-        .findFirstIn(floatSum.queryExecution.optimizedPlan.treeString).isDefined)
-      val dist = df.cube(col("d1")).agg(count_distinct(col("m")).as("nd"))
-      // distinct plans its own expand machinery; assert the exact results
-      // (null d1 appears twice — as the NULL group and the grand total — so
-      // collect the multiset of (key, nd) rows rather than a map)
-      val got = dist.collect().map(r => Option(r.get(0)) -> r.getLong(1)).toSet
-      assert(got == Set(Some("a") -> 3L, Some("b") -> 1L, None -> 1L, None -> 5L),
-        s"unexpected cube count_distinct rows: $got")
-      assert(dist.count() == 4) // a, b, null, total
-    } finally restore()
+    val floatSum = data.cube(col("d1")).agg(sum("f").as("sf"))
+    assert(!"(?s)Expand.*Aggregate.*Relation".r
+      .findFirstIn(floatSum.queryExecution.optimizedPlan.treeString).isDefined)
+    val dist = data.cube(col("d1")).agg(count_distinct(col("m")).as("nd"))
+    // distinct plans its own expand machinery; assert the exact results
+    // (null d1 appears twice — as the NULL group and the grand total — so
+    // collect the multiset of (key, nd) rows rather than a map)
+    val got = dist.collect().map(r => Option(r.get(0)) -> r.getLong(1)).toSet
+    assert(got == Set(Some("a") -> 3L, Some("b") -> 1L, None -> 1L, None -> 5L),
+      s"unexpected cube count_distinct rows: $got")
+    assert(dist.count() == 4) // a, b, null, total
   }
 
   test("keys-only aggregate over Expand (count() pruning) is pre-aggregated and exact") {
-    val s2 = extended()
-    try {
-      val df = data(s2)
-      // count() prunes the measures, leaving Aggregate(keys-only, Expand):
-      // the rule must still insert the leaf distinct below the Expand
-      val cubed = df.cube(col("d1"), col("d2")).agg(sum("m").as("sm"))
-      val countPlan = cubed.select(count(lit(1)))
-        .queryExecution.optimizedPlan.treeString
-      val n = cubed.count()
-      s2.conf.set("spark.graft.cube.preagg", "false")
-      val base = df.cube(col("d1"), col("d2")).agg(sum("m").as("sm")).count()
-      s2.conf.set("spark.graft.cube.preagg", "true")
-      assert(n == base, s"keys-only preagg changed the cube row count: $n != $base")
-      // the leaf aggregate sits below the Expand in the pruned plan
-      assert("(?s)Expand.*Aggregate.*Relation".r.findFirstIn(countPlan).isDefined,
-        s"expected leaf Aggregate below Expand in pruned plan:\n$countPlan")
-    } finally restore()
+    // count() prunes the measures, leaving Aggregate(keys-only, Expand):
+    // the rule must still insert the leaf distinct below the Expand
+    val cubed = data.cube(col("d1"), col("d2")).agg(sum("m").as("sm"))
+    val countPlan = cubed.select(count(lit(1)))
+      .queryExecution.optimizedPlan.treeString
+    val n = cubed.count()
+    val base = withoutRule(cubed.count())
+    assert(n == base, s"keys-only preagg changed the cube row count: $n != $base")
+    // the leaf aggregate sits below the Expand in the pruned plan
+    assert("(?s)Expand.*Aggregate.*Relation".r.findFirstIn(countPlan).isDefined,
+      s"expected leaf Aggregate below Expand in pruned plan:\n$countPlan")
   }
 
   test("rollup and grouping-id queries match under the rule") {
-    val s2 = extended()
-    try {
-      val df = data(s2)
-      val ru = df.rollup(col("d1"), col("d2")).agg(count(lit(1)).as("n"), sum("m").as("sm"))
-      s2.conf.set("spark.graft.cube.preagg", "false")
-      val base = df.rollup(col("d1"), col("d2")).agg(count(lit(1)).as("n"), sum("m").as("sm"))
-        .collect().map(_.toSeq).toSet
-      s2.conf.set("spark.graft.cube.preagg", "true")
-      assert(ru.collect().map(_.toSeq).toSet == base)
-    } finally restore()
+    def ru = data.rollup(col("d1"), col("d2")).agg(count(lit(1)).as("n"), sum("m").as("sm"))
+    val base = withoutRule(ru.collect().map(_.toSeq).toSet)
+    assert(ru.collect().map(_.toSeq).toSet == base)
   }
 }

@@ -10,6 +10,17 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("SPARK_GRAFT_CPUS takes a positive integer only, trimmed and normalized") {
+    val host = Runtime.getRuntime.availableProcessors.toString
+    assert(GraftSession.coresFrom(None) == host)
+    assert(GraftSession.coresFrom(Some("  ")) == host)
+    assert(GraftSession.coresFrom(Some(" 08 ")) == "8")
+    for (bad <- Seq("*", "0", "-2", "4x")) {
+      val e = intercept[IllegalArgumentException](GraftSession.coresFrom(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
+
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

@@ -28,15 +28,14 @@ class IntersectRewriteSpec extends SparkSpec {
   test("answers equal the unrewritten form (rule disabled)") {
     val expr = size(array_intersect(sort_array(array_distinct(col("a"))),
       sort_array(array_distinct(col("b"))))).as("n")
-    spark.conf.set("spark.graft.intersect.rewrite", "false")
-    try {
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.IntersectCountRewrite")
+    val expected = try {
       val off = df.select(expr)
       assert(!off.queryExecution.optimizedPlan.toString.toLowerCase
         .contains("sortedintersectcount"))
-      val expected = off.collect().map(_.getInt(0)).toSeq
-      spark.conf.set("spark.graft.intersect.rewrite", "true")
-      assert(df.select(expr).collect().map(_.getInt(0)).toSeq == expected)
-    } finally spark.conf.unset("spark.graft.intersect.rewrite")
+      off.collect().map(_.getInt(0)).toSeq
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    assert(df.select(expr).collect().map(_.getInt(0)).toSeq == expected)
   }
 
   test("does NOT fire on arrays that may carry duplicates or wrong order") {

@@ -156,18 +156,6 @@ class MatrixSpec extends SparkSpec {
       (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
     val g = undirected((1L, 2L), (1L, 3L), (2L, 3L),
       (10L, 11L), (10L, 12L), (11L, 12L), (3L, 10L))
-    // above-threshold (maxNodes=2 on a 6-node graph): the auto path must
-    // produce the SAME labels/ranks as the forced-broadcast path
-    val prB = Matrix.pageRankPortable(g, iters = 3, broadcastRanks = Some(true))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prS = Matrix.pageRankPortable(g, iters = 3, broadcastMaxNodes = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prB == prS, s"broadcast $prB vs auto-shuffle $prS")
-    val lpB = Matrix.labelPropagation(g, iters = 4, broadcastLabels = Some(true))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpS = Matrix.labelPropagation(g, iters = 4, broadcastMaxNodes = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lpB == lpS, s"broadcast $lpB vs auto-shuffle $lpS")
     // plan pin on the iteration shape itself (the loop's checkpoints erase
     // per-iteration plans): above the threshold stateSide is identity and
     // the contribution join carries NO BroadcastExchange; below it, it does.
@@ -181,21 +169,26 @@ class MatrixSpec extends SparkSpec {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val autoShuffle = Matrix.stateSide(n = 6, forced = None, maxNodes = 2)
+      val autoShuffle = Matrix.stateSide(n = 6, maxNodes = 2)
       val pShuffle = Matrix.prRound(g, state, autoShuffle, base = 100L, dampingPct = 85)
       pShuffle.queryExecution.toRdd.foreach(_ => ())
       val planS = pShuffle.queryExecution.executedPlan.toString
       assert(!planS.contains("BroadcastExchange"),
         s"auto-switch above threshold still broadcasts:\n$planS")
-      val autoBcast = Matrix.stateSide(n = 6, forced = None, maxNodes = 100)
+      val autoBcast = Matrix.stateSide(n = 6, maxNodes = 100)
       val pBcast = Matrix.prRound(g, state, autoBcast, base = 100L, dampingPct = 85)
       pBcast.queryExecution.toRdd.foreach(_ => ())
       val planB = pBcast.queryExecution.executedPlan.toString
       assert(planB.contains("BroadcastExchange"),
         s"below threshold the rank side should broadcast:\n$planB")
-      // the forced override beats the count in both directions
-      assert(Matrix.stateSide(n = 1, forced = Some(false), maxNodes = 100)(state)
-        .queryExecution.logical.toString == state.queryExecution.logical.toString)
+      // either side gives one round the same rows (6 nodes: maxNodes=2
+      // shuffles, maxNodes=100 broadcasts)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      val pr = rows(pShuffle)
+      assert(pr.size == 6 && pr == rows(pBcast), s"$pr vs ${rows(pBcast)}")
+      val labels = state.select(col("node"), col("node").as("label"))
+      assert(rows(Matrix.lpaRound(g, labels, autoShuffle)) ==
+        rows(Matrix.lpaRound(g, labels, autoBcast)))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 

@@ -448,7 +448,8 @@ class PlanAuditSpec extends SparkSpec {
     val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val ceilingKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val old = spark.conf.get(advisoryKey)
-    val oldCeiling = spark.conf.get(ceilingKey)
+    // unset by default: Spark then starts AQE at spark.sql.shuffle.partitions
+    val oldCeiling = spark.conf.getOption(ceilingKey)
     try {
       spark.conf.set(advisoryKey, "1m")
       spark.conf.set(ceilingKey, "64")
@@ -483,7 +484,7 @@ class PlanAuditSpec extends SparkSpec {
           s"proportional growth regime never engaged")
     } finally {
       spark.conf.set(advisoryKey, old)
-      spark.conf.set(ceilingKey, oldCeiling)
+      oldCeiling.fold(spark.conf.unset(ceilingKey))(spark.conf.set(ceilingKey, _))
     }
   }
 

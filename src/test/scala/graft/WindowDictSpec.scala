@@ -180,23 +180,24 @@ class WindowDictSpec extends SparkSpec {
     assert(smallFromBig.queryExecution.optimizedPlan.stats.sizeInBytes >
       BigInt(Dictionary.BroadcastDictMaxBytes))
     assert(hinted(Dictionary.encode(df, "v", smallFromBig, unknownsAs = Some(-1))))
-    // the override knob wins in both directions
-    assert(hinted(Dictionary.encode(df, "v", huge, unknownsAs = Some(-1),
-      broadcastDict = Some(true))))
-    assert(!hinted(Dictionary.encode(df, "v", dict, unknownsAs = Some(-1),
-      broadcastDict = Some(false))))
-    // and the shuffle-join path answers identically to the broadcast path
-    def encPairs(b: Option[Boolean]) =
-      Dictionary.encode(df, "v", dict, unknownsAs = Some(-1), broadcastDict = b)
-        .collect().map(r => (r.getAs[Int]("k"), r.getAs[Int]("v"))).sortBy(_._1).toSeq
-    assert(encPairs(None) == encPairs(Some(false)))
-    def decPairs(b: Option[Boolean]) =
-      Dictionary.decode(
-          Dictionary.encode(df, "v", dict, unknownsAs = Some(-1)), "v", dict,
-          broadcastDict = b)
-        .collect().map(r => (r.getAs[Int]("k"), Option(r.getAs[String]("v"))))
-        .sortBy(_._1).toSeq
-    assert(decPairs(None) == decPairs(Some(false)))
+    // and Spark's shuffle join (hints off, no size-based broadcast)
+    // answers identically to the broadcast path
+    def pairs = {
+      val enc = Dictionary.encode(df, "v", dict, unknownsAs = Some(-1))
+      val dec = Dictionary.decode(enc, "v", dict, unknownsAs = Some("?"))
+      (enc.collect().map(r => (r.getAs[Int]("k"), r.getAs[Int]("v"))).sortBy(_._1).toSeq,
+        dec.collect().map(r => (r.getAs[Int]("k"), Option(r.getAs[String]("v")))).sortBy(_._1).toSeq)
+    }
+    val viaBroadcast = pairs
+    val shuffleConfs = Seq("spark.sql.optimizer.disableHints" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    shuffleConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val plan = Dictionary.encode(df, "v", dict, unknownsAs = Some(-1))
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("Broadcast"), s"hints off still broadcasts:\n$plan")
+      assert(pairs == viaBroadcast)
+    } finally shuffleConfs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("encodeAll/decodeAll round-trip several columns through their dictionaries") {
