@@ -1153,8 +1153,8 @@ class SortedNeighborhood extends UserOperator {
 
 /** K-center greedy coreset selection for scripts (farthest-first
   * traversal, bit-portable integer arithmetic — see
-  * Similarity.kCenterGreedyPortable). Params: k (required), scale
-  * (1000000), id (vec_id), vec (embedding).
+  * Similarity.kCenterGreedyPortable; one Spark job per pick at any k).
+  * Params: k (required), scale (1000000), id (vec_id), vec (embedding).
   */
 class KCenterSelect extends UserOperator {
   def apply(inputs: Seq[DataFrame], params: Map[String, String]): DataFrame =
@@ -1165,8 +1165,8 @@ class KCenterSelect extends UserOperator {
 
 /** MMR diversity re-rank for scripts: input 1 = corpus, input 2 = a
   * one-row query table carrying the query vector in `vec`. Params: k
-  * (required), lambdaPct (70), scale (1000000), id (vec_id), vec
-  * (embedding).
+  * (required; one Spark job per pick at any k), lambdaPct (70), scale
+  * (1000000), id (vec_id), vec (embedding).
   */
 class MmrSelect extends UserOperator {
   def apply(inputs: Seq[DataFrame], params: Map[String, String]): DataFrame = {

@@ -1,9 +1,9 @@
 package graft.similarity
 
+import org.apache.spark.SparkException
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import graft.operators.Matrix
 
 /** Similarity search over an embedding column (`Array[Float]`): brute-force
   * cosine top-k as the exact baseline, and a random-hyperplane LSH bucketed
@@ -382,166 +382,18 @@ object Similarity {
     * function of integers and an external engine replays the whole
     * traversal hash-for-hash (same posture as [[kmeansFitPortable]]).
     *
-    * Scale shape — TWO regimes, answer-identical (property-pinned):
-    *
-    *   - '''small k (≤ [[LiteralPlanMaxK]])''': each round is ONE narrow
-    *     scan with the whole selected set riding the plan as an r×d
-    *     literal (the [[ivfAssign]] discipline, zero exchange) and
-    *     `orderBy(...).limit(1)` planning as TakeOrderedAndProject
-    *     (per-partition top-1, driver merge — never a global sort). No
-    *     state to materialize, but round r pays O(r·d) expression work
-    *     per row — O(k²·d·n) total — and the literal plan itself grows
-    *     O(k·d), so Catalyst analysis/codegen cost blows up around k in
-    *     the low thousands.
-    *   - '''large k''': [[kCenterGreedyScalable]] — carry `mindist_sq` as
-    *     a MATERIALIZED column and fold in only the NEWEST pick each
-    *     round (`least(old, dist-to-newest)`), the standard incremental
-    *     form of farthest-first. Constant-size plans, O(k·d·n) total
-    *     compute, one localCheckpoint per round to keep lineage O(1).
-    *     This is the coreset-scale path (k = 10⁴–10⁶, the Sener &
-    *     Savarese regime).
-    *
-    * This entry point picks automatically: literal plans up to
-    * `maxLiteralK` (default [[LiteralPlanMaxK]]), the mindist-carrying
-    * traversal beyond. The k sequential driver rounds are the algorithm's
-    * inherent data dependency either way; corpus size only widens each
-    * scan.
+    * Runs on [[greedySelect]]: each point carries its `mindist_sq` and
+    * folds in only the newest pick (`min(old, dist²-to-newest)`, the
+    * incremental form of farthest-first), so a round costs one Spark job
+    * and O(n·d) work at any k, from a shortlist to a 10⁴–10⁶ coreset. The
+    * k sequential rounds are the algorithm's inherent data dependency;
+    * corpus size only widens each scan.
     */
   def kCenterGreedyPortable(df: DataFrame, k: Int, scale: Long = 1000000L,
-                            idCol: String = "vec_id", vecCol: String = "embedding",
-                            maxLiteralK: Int = LiteralPlanMaxK): DataFrame = {
+                            idCol: String = "vec_id",
+                            vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && scale >= 1, s"bad k=$k scale=$scale")
-    if (k > maxLiteralK)
-      return kCenterGreedyScalable(df, k, scale, idCol, vecCol)
-    val spark = df.sparkSession
-    import spark.implicits._
-    // persist the quantized projection for the duration of the k driver
-    // rounds (r17 optimization): every round scans the whole corpus, and
-    // without this each of the k jobs re-reads and re-quantizes the
-    // parquet input — k source scans collapse to one read + (k−1) cached
-    // scans. MEMORY_AND_DISK so an over-RAM corpus degrades to local disk
-    // instead of failing; released before returning.
-    val q = df.select(col(idCol).cast("long").as("vec_id"),
-      transform(col(vecCol).cast("array<double>"),
-        x => floor(x * lit(scale.toDouble)).cast("long")).as("xq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seed = q.orderBy("vec_id").limit(1).collect()
-      require(seed.nonEmpty, "kCenterGreedyPortable: empty input")
-      var selected = Vector[(Long, Seq[Long], Long)](
-        (seed(0).getLong(0), seed(0).getSeq[Long](1), 0L))
-      for (_ <- 2 to k) {
-        val next = kCenterRound(q, selected.map(t => (t._1, t._2))).limit(1).collect()
-        require(next.nonEmpty, s"kCenterGreedyPortable: k=$k exceeds input size")
-        selected :+= ((next(0).getLong(0), next(0).getSeq[Long](1), next(0).getLong(2)))
-      }
-      selected.zipWithIndex
-        .map { case ((id, _, d), i) => (i + 1L, id, d) }
-        .toDF("sel_rank", "vec_id", "mindist_sq")
-    } finally q.unpersist()
-  }
-
-  /** Selected-set size above which [[kCenterGreedyPortable]] abandons the
-    * literal-unrolled round for the mindist-carrying traversal: past a few
-    * hundred literals the O(r·d) plan stops being "free metadata" —
-    * whole-stage codegen hits its 64 KB method limits and driver
-    * analysis time grows quadratically over the run.
-    */
-  val LiteralPlanMaxK: Int = 500
-
-  /** Large-k farthest-first traversal — answer-identical to
-    * [[kCenterGreedyPortable]] (property-pinned at k=32), built for
-    * coreset-scale budgets (k = 10⁴–10⁶) where the literal-unrolled round
-    * is quadratic in k and its plan outgrows Catalyst.
-    *
-    * Instead of re-deriving min-dist-to-selected from scratch each round,
-    * the state `(vec_id, xq, mindist_sq, sel)` is materialized once and
-    * each round folds in only the NEWEST pick:
-    * `mindist_sq ← least(mindist_sq, dist²-to-newest)` — the textbook
-    * incremental identity (min over a set = min of (min over prefix,
-    * newest member)). Every round is one narrow scan over the state with
-    * a single d-length literal, top-1 via TakeOrderedAndProject, then a
-    * localCheckpoint (or reliable checkpoint, opt-in for executor-loss
-    * survival on long runs — same posture as the [[graft.operators.Matrix]]
-    * iterative family) that keeps the lineage depth O(1) no matter how
-    * many rounds run. Total compute O(k·d·n); plan size O(d), constant.
-    */
-  def kCenterGreedyScalable(df: DataFrame, k: Int, scale: Long = 1000000L,
-                            idCol: String = "vec_id", vecCol: String = "embedding",
-                            reliableCheckpoint: Boolean = false): DataFrame = {
-    require(k >= 1 && scale >= 1, s"bad k=$k scale=$scale")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val q = df.select(col(idCol).cast("long").as("vec_id"),
-      transform(col(vecCol).cast("array<double>"),
-        x => floor(x * lit(scale.toDouble)).cast("long")).as("xq"))
-    val seed = q.orderBy("vec_id").limit(1).collect()
-    require(seed.nonEmpty, "kCenterGreedyScalable: empty input")
-    val (seedId, seedXq) = (seed(0).getLong(0), seed(0).getSeq[Long](1))
-    def distTo(c: Seq[Long]) =
-      aggregate(zip_with(col("xq"), typedLit(c), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, d) => acc + d)
-    // lazy local checkpoints: the round's top-1 collect is the action that
-    // materializes-and-caches the folded state, so each round is one job
-    // instead of two (fold job + pick job); the fold's second reference
-    // reads the cached blocks
-    var state = Matrix.ckpt(q.select(col("vec_id"), col("xq"),
-      distTo(seedXq).as("md"), (col("vec_id") === lit(seedId)).as("sel")),
-      false, reliableCheckpoint)
-    var selected = Vector[(Long, Long)]((seedId, 0L))
-    for (i <- 2 to k) {
-      val next = kCenterPick(state).limit(1).collect()
-      require(next.nonEmpty, s"kCenterGreedyScalable: k=$k exceeds input size")
-      val (pickId, pickXq, pickMd) =
-        (next(0).getLong(0), next(0).getSeq[Long](1), next(0).getLong(2))
-      selected :+= ((pickId, pickMd))
-      if (i < k)
-        // checkpoint blocks from prior rounds are reclaimed by the
-        // ContextCleaner once unreferenced; only the newest state is live
-        state = Matrix.ckpt(kCenterFold(state, pickId, pickXq), false, reliableCheckpoint)
-    }
-    selected.zipWithIndex
-      .map { case ((id, d), i) => (i + 1L, id, d) }
-      .toDF("sel_rank", "vec_id", "mindist_sq")
-  }
-
-  /** The farthest-unselected pick of one [[kCenterGreedyScalable]] round,
-    * pre-`limit(1)` — factored so PlanAuditSpec can pin that the caller's
-    * top-1 plans as TakeOrderedAndProject over one narrow state scan (no
-    * Sort, no Window, no Exchange), independent of how many rounds ran.
-    */
-  private[graft] def kCenterPick(state: DataFrame): DataFrame =
-    state.filter(!col("sel"))
-      .orderBy(col("md").desc, col("vec_id"))
-
-  /** One mindist fold of [[kCenterGreedyScalable]]: against the NEWEST
-    * pick only — the incremental identity that keeps the plan O(d) while
-    * the literal-unrolled [[kCenterRound]] grows O(r·d). Factored for the
-    * same plan-pin reason as [[kCenterPick]].
-    */
-  private[graft] def kCenterFold(state: DataFrame, pickId: Long,
-                                 pickXq: Seq[Long]): DataFrame =
-    state.select(col("vec_id"), col("xq"),
-      least(col("md"),
-        aggregate(zip_with(col("xq"), typedLit(pickXq), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, d) => acc + d)).as("md"),
-      (col("sel") || col("vec_id") === lit(pickId)).as("sel"))
-
-  /** One farthest-first round of [[kCenterGreedyPortable]], pre-`limit(1)`
-    * — factored out so PlanAuditSpec can pin the round's shape: the
-    * selected set rides as a literal, the scan is narrow (no Exchange
-    * anywhere in the round), and the `.orderBy.limit(1)` the caller adds
-    * plans as TakeOrderedAndProject, never a global Sort.
-    */
-  private[graft] def kCenterRound(q: DataFrame,
-                                  selected: Seq[(Long, Seq[Long])]): DataFrame = {
-    val mindist = array_min(array(selected.map { case (_, cq) =>
-      aggregate(zip_with(col("xq"), typedLit(cq), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, d) => acc + d)
-    }: _*))
-    q.filter(!col("vec_id").isin(selected.map(_._1): _*))
-      .select(col("vec_id"), col("xq"), mindist.as("md"))
-      .orderBy(col("md").desc, col("vec_id"))
+    greedySelect(df, k, scale, idCol, vecCol, KCenter)
   }
 
   /** Maximal-marginal-relevance selection (Carbonell & Goldstein 1998) in
@@ -557,55 +409,148 @@ object Similarity {
     * the integers; pre-normalize embeddings upstream when cosine
     * semantics matter.
     *
-    * Per-round scale shape: one narrow literal-scored scan +
-    * TakeOrderedAndProject top-1 — the SMALL-k literal regime of
-    * [[kCenterGreedyPortable]], which is the right one here because MMR is
-    * by construction a shortlist re-ranker (k ≤ ~100 items headed for a
-    * context window); the guard enforces the plan-size ceiling, and
-    * `maxLiteralK` raises it explicitly when a caller accepts the
-    * plan-compile cost (parity with [[kCenterGreedyPortable]]'s override).
+    * Runs on [[greedySelect]] like [[kCenterGreedyPortable]]: each point
+    * carries its `maxsim` and folds in only the newest pick, one Spark job
+    * per round at any k.
     */
   def mmrSelectPortable(df: DataFrame, query: Seq[Double], k: Int, lambdaPct: Int = 70,
                         scale: Long = 1000000L, idCol: String = "vec_id",
-                        vecCol: String = "embedding",
-                        maxLiteralK: Int = LiteralPlanMaxK): DataFrame = {
+                        vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && scale >= 1 && lambdaPct >= 0 && lambdaPct <= 100,
       s"bad k=$k scale=$scale lambdaPct=$lambdaPct")
-    require(k <= maxLiteralK,
-      s"mmrSelectPortable is a shortlist re-ranker (literal-unrolled rounds, " +
-        s"k <= $maxLiteralK); raise maxLiteralK to accept the plan-compile " +
-        s"cost, or use kCenterGreedyScalable for bulk diverse selection")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val qvec: Seq[Long] = query.map(x => math.floor(x * scale).toLong)
-    // persist the quantized shortlist across the k rounds — same rationale
-    // and lifecycle as kCenterGreedyPortable's corpus persist
-    val q = df.select(col(idCol).cast("long").as("vec_id"),
-      transform(col(vecCol).cast("array<double>"),
-        x => floor(x * lit(scale.toDouble)).cast("long")).as("xq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def idot(v: Seq[Long]) =
-      aggregate(zip_with(col("xq"), typedLit(v), (a, b) => a * b),
-        lit(0L), (acc, d) => acc + d)
-    val rel = idot(qvec)
-    try {
-      var selected = Vector.empty[(Long, Seq[Long], Long)] // (id, xq, score)
-      for (_ <- 1 to k) {
-        val score =
-          if (selected.isEmpty) lit(lambdaPct.toLong) * rel
-          else lit(lambdaPct.toLong) * rel -
-            lit((100 - lambdaPct).toLong) *
-              array_max(array(selected.map { case (_, sq, _) => idot(sq) }: _*))
-        val next = q.filter(!col("vec_id").isin(selected.map(_._1): _*))
-          .select(col("vec_id"), col("xq"), score.as("sc"))
-          .orderBy(col("sc").desc, col("vec_id")).limit(1).collect()
-        require(next.nonEmpty, s"mmrSelectPortable: k=$k exceeds input size")
-        selected :+= ((next(0).getLong(0), next(0).getSeq[Long](1), next(0).getLong(2)))
+    val qvec = query.map(x => math.floor(x * scale).toLong).toArray
+    greedySelect(df, k, scale, idCol, vecCol, Mmr(qvec, lambdaPct))
+  }
+
+  /** What [[greedySelect]] maximizes. Each point carries one accumulator
+    * over the selected set, starting at `acc0`; `fold` merges in one pick.
+    */
+  private sealed trait Objective extends Serializable {
+    def name: String
+    def scoreCol: String
+    def acc0: Long
+    /** the point's constant term, computed once (MMR's relevance) */
+    def rel(id: Long, xq: Array[Long]): Long = 0L
+    def fold(acc: Long, xq: Array[Long], pick: Array[Long]): Long
+    /** `first`: nothing is selected yet, so `acc` is still `acc0` */
+    def score(rel: Long, acc: Long, first: Boolean): Long
+  }
+
+  /** acc = min squared distance to the selected set */
+  private case object KCenter extends Objective {
+    val name = "kCenterGreedyPortable"
+    val scoreCol = "mindist_sq"
+    val acc0 = Long.MaxValue
+    def fold(acc: Long, xq: Array[Long], pick: Array[Long]): Long = {
+      var s = 0L
+      for (i <- xq.indices) {
+        val d = Math.subtractExact(xq(i), pick(i))
+        s = Math.addExact(s, Math.multiplyExact(d, d))
       }
-      selected.zipWithIndex
-        .map { case ((id, _, s), i) => (i + 1L, id, s) }
-        .toDF("sel_rank", "vec_id", "mmr_score")
-    } finally q.unpersist()
+      math.min(acc, s)
+    }
+    // every seed candidate scores 0, so the seed is the lowest id, at radius 0
+    def score(rel: Long, acc: Long, first: Boolean): Long = if (first) 0L else acc
+  }
+
+  /** acc = max dot product with the selected set */
+  private final case class Mmr(query: Array[Long], lambdaPct: Int) extends Objective {
+    val name = "mmrSelectPortable"
+    val scoreCol = "mmr_score"
+    val acc0 = Long.MinValue
+    override def rel(id: Long, xq: Array[Long]): Long = {
+      require(xq.length == query.length, s"$name: vec_id $id has ${xq.length} " +
+        s"coordinates, the query has ${query.length}")
+      dotExact(xq, query)
+    }
+    def fold(acc: Long, xq: Array[Long], pick: Array[Long]): Long =
+      math.max(acc, dotExact(xq, pick))
+    def score(rel: Long, acc: Long, first: Boolean): Long = {
+      val r = Math.multiplyExact(lambdaPct.toLong, rel)
+      if (first) r else Math.subtractExact(r, Math.multiplyExact(100L - lambdaPct, acc))
+    }
+  }
+
+  private def dotExact(a: Array[Long], b: Array[Long]): Long = {
+    var s = 0L
+    for (i <- a.indices) s = Math.addExact(s, Math.multiplyExact(a(i), b(i)))
+    s
+  }
+
+  /** One point of [[greedySelect]]'s state. */
+  private final case class Cand(id: Long, xq: Array[Long], rel: Long, acc: Long, sel: Boolean)
+
+  /** (score, vec_id, xq) — the higher score wins, ties to the lower id */
+  private def better(a: (Long, Long, Array[Long]),
+                     b: (Long, Long, Array[Long])): (Long, Long, Array[Long]) =
+    if (b._1 > a._1 || (b._1 == a._1 && b._2 < a._2)) b else a
+
+  /** The greedy-selection kernel of [[kCenterGreedyPortable]] and
+    * [[mmrSelectPortable]]: `k` rounds, each picking the unselected point
+    * of highest `obj.score` (ties to the lowest id), returned as
+    * (sel_rank, vec_id, `obj.scoreCol`).
+    *
+    * The points quantize once with the floor(x·scale) expression and then
+    * leave SQL for that expression's RDD, one [[Cand]] per point. A round
+    * folds in only the newest pick and runs one `mapPartitions` + `collect`
+    * of each partition's best; the driver keeps the max. That is one Spark
+    * job and no SQL query per round, and a round's work and closures are
+    * O(d) however many picks precede it. Each round's state is persisted
+    * and lineage-truncated by `localCheckpoint` and shares the previous
+    * state's coordinate arrays; the previous state is released once the
+    * new one has materialized, and the last one before returning.
+    *
+    * The arithmetic is `Math.*Exact`, so an overflow throws as ANSI Spark
+    * SQL does. A NULL or wrong-length vector throws an
+    * IllegalArgumentException naming its vec_id.
+    */
+  private def greedySelect(df: DataFrame, k: Int, scale: Long, idCol: String,
+                           vecCol: String, obj: Objective): DataFrame = {
+    val points = df.select(col(idCol).cast("long"),
+      transform(col(vecCol).cast("array<double>"),
+        x => floor(x * lit(scale.toDouble)).cast("long"))).rdd
+    var state: RDD[Cand] = points.map { r =>
+      require(!r.isNullAt(0), s"${obj.name}: NULL $idCol")
+      val id = r.getLong(0)
+      require(!r.isNullAt(1), s"${obj.name}: vec_id $id has a NULL vector")
+      val xs = r.getSeq[java.lang.Long](1)
+      require(!xs.contains(null), s"${obj.name}: vec_id $id has a NULL coordinate")
+      val xq = xs.iterator.map(_.longValue).toArray
+      Cand(id, xq, obj.rel(id, xq), obj.acc0, sel = false)
+    }.localCheckpoint()
+    var prev: RDD[Cand] = null
+    var picks = Vector.empty[(Long, Long, Long)]
+    try {
+      while (picks.length < k) {
+        val first = picks.isEmpty
+        val bests = try state.mapPartitions { it =>
+          it.filter(!_.sel).map(c => (obj.score(c.rel, c.acc, first), c.id, c.xq))
+            .reduceOption(better).iterator
+        }.collect() catch {
+          // a task's failed require, as itself rather than as the job abort
+          case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+            throw e.getCause
+        }
+        if (prev != null) { prev.unpersist(); prev = null }
+        require(bests.nonEmpty, s"${obj.name}: k=$k exceeds input size ${picks.length}")
+        val (score, pickId, pick) = bests.reduce(better)
+        picks :+= ((picks.length + 1L, pickId, score))
+        if (picks.length < k) {
+          prev = state
+          state = prev.map { c =>
+            require(c.xq.length == pick.length, s"${obj.name}: vec_id ${c.id} has " +
+              s"${c.xq.length} coordinates, vec_id $pickId has ${pick.length}")
+            c.copy(acc = obj.fold(c.acc, c.xq, pick), sel = c.sel || c.id == pickId)
+          }.localCheckpoint()
+        }
+      }
+      val spark = df.sparkSession
+      import spark.implicits._
+      picks.toDF("sel_rank", "vec_id", obj.scoreCol)
+    } finally {
+      state.unpersist()
+      if (prev != null) prev.unpersist()
+    }
   }
 
   /** IVF ANN search end-to-end: assign the corpus to its nearest centroid

@@ -346,34 +346,86 @@ class BpeKmeansSpec extends SparkSpec {
     }
   }
 
-  test("kCenterGreedyScalable: bit-identical to the literal form at k=32, incl. duplicate-point ties") {
+  test("selection kernels match a brute force at k=32, duplicate points included") {
     // LCG corpus, d=4, 60 points, PLUS exact duplicates of two early picks —
     // duplicates drive mindist to 0 for unselected rows, the tie regime
-    // where a wrong selected-exclusion (flag vs isin) would diverge
+    // where a wrong selected-exclusion would diverge
     def lcg(seed: Long): Iterator[Long] =
       Iterator.iterate(seed)(s => s * 6364136223846793005L + 1442695040888963407L).drop(1)
     val rnd = lcg(11L)
     val base = (0 until 60).map { i =>
       (i.toLong, Seq.fill(4)((math.floorMod(rnd.next(), 2001) - 1000) / 1000.0f))
     }
-    val pts = (base ++ Seq((60L, base(0)._2), (61L, base(5)._2)))
-      .toDF("vec_id", "embedding")
-    val lit32 = Similarity.kCenterGreedyPortable(pts, k = 32)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val sc32 = Similarity.kCenterGreedyScalable(pts, k = 32)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(sc32 == lit32, s"scalable diverged from literal:\n$sc32\nvs\n$lit32")
-    // the public entry point delegates past the literal-plan ceiling:
-    // forcing maxLiteralK below k must route through the scalable path
-    // and still reproduce the literal answer exactly
-    val routed = Similarity.kCenterGreedyPortable(pts, k = 32, maxLiteralK = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(routed == lit32, s"delegated path diverged:\n$routed")
-    // budget > corpus still fails loudly on the scalable path
-    val tiny = Seq((1L, Seq(0.0f))).toDF("vec_id", "embedding")
-    intercept[IllegalArgumentException] {
-      Similarity.kCenterGreedyScalable(tiny, k = 2, scale = 10L)
+    val corpus = base ++ Seq((60L, base(0)._2), (61L, base(5)._2))
+    val pts = corpus.toDF("vec_id", "embedding")
+    // the reference recomputes every score from the whole selected set in
+    // every round: the max of (score, -id) over the unselected points
+    val xq = corpus.map { case (id, v) =>
+      id -> v.map(x => math.floor(x.toDouble * 1000000.0).toLong)
+    }.toMap
+    def sqd(a: Seq[Long], b: Seq[Long]) = a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    def dot(a: Seq[Long], b: Seq[Long]) = a.zip(b).map { case (x, y) => x * y }.sum
+    def bruteForce(k: Int)(score: (Long, Seq[Long]) => Long): Seq[(Long, Long, Long)] =
+      (1 to k).foldLeft(Vector.empty[(Long, Long)]) { (sel, _) =>
+        val picked = sel.map(_._1).toSet
+        val (s, negId) = xq.keys.filterNot(picked).map(id => (score(id, sel.map(_._1)), -id)).max
+        sel :+ ((-negId, s))
+      }.zipWithIndex.map { case ((id, s), i) => (i + 1L, id, s) }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val kc = rows(Similarity.kCenterGreedyPortable(pts, k = 32))
+    val kcRef = bruteForce(32) { (id, sel) =>
+      if (sel.isEmpty) 0L else sel.map(s => sqd(xq(id), xq(s))).min
     }
+    assert(kc == kcRef, s"kernel diverged from the brute force:\n$kc\nvs\n$kcRef")
+    val query = Seq(0.25, -0.5, 0.75, 0.125)
+    val qq = query.map(x => math.floor(x * 1000000.0).toLong)
+    val mmr = rows(Similarity.mmrSelectPortable(pts, query, k = 32, lambdaPct = 70))
+    val mmrRef = bruteForce(32) { (id, sel) =>
+      70L * dot(xq(id), qq) - (if (sel.isEmpty) 0L else 30L * sel.map(s => dot(xq(id), xq(s))).max)
+    }
+    assert(mmr == mmrRef, s"kernel diverged from the brute force:\n$mmr\nvs\n$mmrRef")
+  }
+
+  test("selection kernels reject NULL and wrong-length vectors by vec_id or query") {
+    val sc = spark.sparkContext
+    val held = sc.getPersistentRDDs.keySet
+    def rejected(run: => Any): String = intercept[IllegalArgumentException](run).getMessage
+    // before the check, zip_with padded the ragged id 2 with NULL and it
+    // dropped out of both rankings
+    val ragged = Seq((1L, Seq(0.0f, 0.0f)), (2L, Seq(1.0f, 1.0f, 1.0f)), (3L, Seq(0.5f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val nulls = Seq((1L, Some(Seq(0.0f, 0.0f))), (2L, None), (3L, Some(Seq(0.5f, 0.5f))))
+      .toDF("vec_id", "embedding")
+    for (df <- Seq(ragged, nulls)) {
+      val kc = rejected(Similarity.kCenterGreedyPortable(df, k = 2, scale = 10L))
+      assert(kc.contains("vec_id 2"), kc)
+      val mmr = rejected(Similarity.mmrSelectPortable(df, Seq(1.0, 0.0), k = 2, scale = 10L))
+      assert(mmr.contains("vec_id 2"), mmr)
+    }
+    val short = rejected(Similarity.mmrSelectPortable(
+      ragged.filter($"vec_id" =!= 2L), Seq(1.0), k = 2, scale = 10L))
+    assert(short.contains("the query has 1"), short)
+    // a rejected run releases its state too
+    assert((sc.getPersistentRDDs.keySet -- held).isEmpty)
+  }
+
+  test("selection kernels and their script ops release every RDD they persist") {
+    import graft.script.ScriptEngine
+    val sc = spark.sparkContext
+    val held = sc.getPersistentRDDs.keySet
+    val corpus = (0 until 20).map(i => (i.toLong, Seq((i % 7).toFloat, (i % 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val query = Seq(Tuple1(Seq(1.0f, 0.0f))).toDF("embedding")
+    Similarity.kCenterGreedyPortable(corpus, k = 5).collect()
+    Similarity.mmrSelectPortable(corpus, Seq(1.0, 0.0), k = 5).collect()
+    val out = ScriptEngine.run(spark,
+      """kc = OPERATOR 'graft.script.ops.KCenterSelect' corpus ('k': '5');
+        |mmr = OPERATOR 'graft.script.ops.MmrSelect' corpus, q ('k': '5');""".stripMargin,
+      env0 = Map("corpus" -> corpus, "q" -> query))
+    assert(out("kc").count() == 5 && out("mmr").count() == 5)
+    val left = sc.getPersistentRDDs.keySet -- held
+    assert(left.isEmpty, s"RDDs still persisted: ${left.toSeq.sorted}")
   }
 
   test("mmrSelectPortable: relevance first, then the diversity penalty reorders") {

@@ -921,54 +921,43 @@ class PlanAuditSpec extends SparkSpec {
     assert(d.toLowerCase.contains("partial"), s"no partial agg in:\n$d")
   }
 
-  test("k-center round: literal-scored narrow scan, top-1 never a global sort (q208)") {
-    import org.apache.spark.sql.functions._
-    val q = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * lit(1000000.0)).cast("long")).as("xq"))
-      .repartition(8)
-    val sel = Seq((0L, Seq.fill(64)(0L)), (7L, Seq.fill(64)(100L)))
-    val round = graft.similarity.Similarity.kCenterRound(q, sel).limit(1)
-    val d = details(round)
-    // the selected set rides the plan as a literal: the whole round is one
-    // narrow scan with NO exchange before the bounded top-1...
-    assert(d.contains("TakeOrderedAndProject"), s"no TakeOrderedAndProject in:\n$d")
-    // ...and no global Sort materializes the corpus order (the repartition
-    // above is the only exchange, from the fixture itself)
-    assert(!d.contains("Sort ["), s"global sort in k-center round:\n$d")
-    assert(!d.contains("Window"), s"window in k-center round:\n$d")
+  /** (jobs, SQL executions) that `body` starts, counted by a listener on a
+    * drained bus so the counts hold that call alone.
+    */
+  private def counted(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, execs.get)
   }
 
-  test("large-k k-center round: constant-size plan over the materialized state, top-1 bounded") {
-    import org.apache.spark.sql.functions._
-    val q = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * lit(1000000.0)).cast("long")).as("xq"))
-    // the state as kCenterGreedyScalable materializes it: one checkpoint,
-    // O(1) lineage regardless of round count
-    val state = q.withColumn("md", lit(Long.MaxValue))
-      .withColumn("sel", col("vec_id") === lit(0L)).localCheckpoint(true)
-    val pick = graft.similarity.Similarity.kCenterPick(state).limit(1)
-    val dPick = details(pick)
-    // the pick is one scan of the checkpointed state + bounded top-1 —
-    // never a global sort, a window, or any exchange
-    assert(dPick.contains("TakeOrderedAndProject"), s"no TakeOrderedAndProject in:\n$dPick")
-    assert(!dPick.contains("Sort ["), s"global sort in scalable pick:\n$dPick")
-    assert(!dPick.contains("Window"), s"window in scalable pick:\n$dPick")
-    assert(!dPick.contains("Exchange"), s"exchange in scalable pick:\n$dPick")
-    // the fold embeds ONLY the newest pick — plan size is O(d), not O(r·d):
-    // folding a second time yields the same node count as the first fold
-    val pick1 = Seq.fill(64)(1L)
-    val fold1 = graft.similarity.Similarity.kCenterFold(state, 1L, pick1)
-    val fold2 = graft.similarity.Similarity.kCenterFold(
-      fold1.localCheckpoint(true), 2L, Seq.fill(64)(2L))
-    def nodeCount(df: org.apache.spark.sql.DataFrame): Int =
-      details(df).linesIterator.count(_.contains("Project"))
-    assert(nodeCount(fold2) == nodeCount(fold1),
-      "fold plan grew with the number of rounds")
-    assert(!details(fold2).contains("Exchange"), "exchange in scalable fold")
+  test("selection loops: one job per round, no SQL execution in the loop (q208/q209)") {
+    // budgets are today's counts with zero tolerance: k = 8 rounds, one
+    // job each (the round's state materializes inside its pick job), and
+    // one SQL execution before the loop, where the quantized points drop
+    // to their RDD. The table resolves first: reading a parquet schema
+    // runs jobs of its own.
+    Tables.load(spark, dir, "embeddings")
+    val kc = counted(SparkEntry.queries("q208_kcenter_greedy")(spark, dir))
+    assert(kc == ((8, 1)), s"q208 (jobs, SQL executions) = $kc, budget (8, 1)")
+    // q209 first looks its query vector up with one more query and job
+    val mmr = counted(SparkEntry.queries("q209_mmr_select")(spark, dir))
+    assert(mmr == ((9, 2)), s"q209 (jobs, SQL executions) = $mmr, budget (9, 2)")
   }
 
   test("graph pair: triangle wedges and k-core peels are equi-joins, never products (q155/q159)") {

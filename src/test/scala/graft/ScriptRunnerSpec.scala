@@ -289,6 +289,14 @@ class ScriptRunnerSpec extends SparkSpec {
   test("run in a live session leaves its shuffle-partition confs as they were") {
     val confs = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    val old = confs.map(spark.conf.getOption)
+    try runKeepsConfs(confs)
+    finally confs.zip(old).foreach { case (key, v) =>
+      v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  private def runKeepsConfs(confs: Seq[String]): Unit = {
     // the shared session's own setting: SparkSpec builds it with 4 cores
     confs.foreach(spark.conf.set(_, "4"))
     val path = writeScript(
