@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Matrix
+
 /** Dev tool: write `explain("formatted")` for named queries to files —
   * the optimization rounds' before/after plan evidence
   * (plans/rNN/<query>_{before,after}.txt). Usage:
@@ -14,8 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * The iterative queries' final plans are only the last checkpoint's
   * LogicalRDD scan (the loop erases per-round plans), so for those the
-  * meaningful evidence is the ROUND fragment, rebuilt here with the same
-  * helpers the loop uses over the same graph as the headline query.
+  * meaningful evidence is the ROUND fragment, built here with the same
+  * setup and round helpers the loop uses over the same graph as the
+  * headline query.
   * Fragment pseudo-names: q199_round (one pageRankPortable contribution +
   * state-update round), q201_round (one labelPropagation round),
   * q159_round (one kCore peel round).
@@ -25,56 +28,22 @@ object PlanDump {
   private def fragments(spark: SparkSession, sfDir: String)
       : Map[String, () => DataFrame] = {
     def t(n: String): DataFrame = Tables.load(spark, sfDir, n)
-    // the q199/q201 graph (custSuppGraph without the in-dataflow guard —
-    // plan shape is identical, the guard is a projection-level `when`)
-    def graph(): DataFrame =
-      t("orders").select(col("o_orderkey"), col("o_custkey"))
-        .join(t("lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000000L)).as("dst"))
-    // one round each, built over checkpointed inputs exactly as the loops
-    // build them (LogicalRDD inputs — same stats/partitioning the real
-    // round plans against)
+    // one first round each, over the loops' own setup and round helpers
     Map(
       "q199_round" -> (() => {
-        val e = graph().toDF("src", "dst").distinct().localCheckpoint()
-        val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        val nodes = e.select(col("src").as("node"))
-          .union(e.select(col("dst"))).distinct().localCheckpoint()
-        val n = nodes.count()
-        val side = graft.operators.Matrix.stateSide(n)
-        val state = nodes
-          .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-          .select(col("node"), lit(62500L).as("r"), col("deg"))
-          .localCheckpoint()
-        graft.operators.Matrix.prRound(e, state, side,
-          base = 9375L, dampingPct = 85)
+        val g = Matrix.graph(SparkEntry.custSuppGraph(spark, sfDir), reliable = false)
+        val (state, base) = Matrix.prStart(g, dampingPct = 85, reliable = false)
+        Matrix.prRound(g.e, state, g.side, base, dampingPct = 85)
       }),
       "q201_round" -> (() => {
-        val e = graph().toDF("src", "dst").distinct().localCheckpoint()
-        val nodes = e.select(col("src").as("node"))
-          .union(e.select(col("dst"))).distinct().localCheckpoint()
-        val n = nodes.count()
-        val side = graft.operators.Matrix.stateSide(n)
-        val labels = nodes.select(col("node"), col("node").as("label"))
-          .localCheckpoint()
-        graft.operators.Matrix.lpaRound(e, labels, side)
+        val g = Matrix.graph(SparkEntry.custSuppGraph(spark, sfDir), reliable = false)
+        Matrix.lpaRound(g.e, g.nodes.select(col("node"), col("node").as("label")), g.side)
       }),
       "q159_round" -> (() => {
         val edges = t("documents")
           .select(expr("doc_id div 8").as("a"),
             expr("doc_id div 8 + 1 + doc_id % 8").as("b"))
-        val e = edges.toDF("u", "v").filter(col("u") =!= col("v"))
-          .select(least(col("u"), col("v")).as("u"),
-            greatest(col("u"), col("v")).as("v"))
-          .distinct().localCheckpoint()
-        val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-          .groupBy("n").agg(count(lit(1)).as("d"))
-        val keep = deg.filter(col("d") >= 10).select("n")
-        e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-          .select("u", "v")
+        Matrix.peel(Matrix.ckpt(Matrix.undirected(edges), false, false), k = 10)
       }))
   }
 

@@ -44,7 +44,7 @@ object SparkEntry {
     * stay disjoint; a collision would silently conflate graph nodes, so
     * the max custkey is checked, not assumed.
     */
-  private def custSuppGraph(s: SparkSession, d: String): DataFrame = {
+  private[graft] def custSuppGraph(s: SparkSession, d: String): DataFrame = {
     // disjointness is ASSERTED in-dataflow (raise_error, zero extra jobs —
     // a driver-side max() would cost one action per graph query): any
     // custkey at or above the supplier offset fails the run loudly instead

@@ -1316,9 +1316,8 @@ object Dedup {
     * [[semDedup]] pairing. Returns surviving batch (idCol, centroid_id).
     *
     * Scale shape — the corpus never re-pairs with itself: the index is
-    * pruned to the batch's touched cells by a broadcast join of the
-    * batch's (tiny) distinct cell-id set, then joined batch×cell-mates
-    * only. Corpus-side work is one pruned scan per batch; in-batch work
+    * probed against the batch's cells ([[semDedupScreen]]) and joined
+    * batch×cell-mates only. Corpus-side work is one scan per batch; in-batch work
     * is bounded exactly as in [[semDedup]] (identical-collapse +
     * cell-size-capped pairing).
     */
@@ -1361,19 +1360,22 @@ object Dedup {
     * screen). Outcome-identical: a batch vector drops iff ≥ 1 indexed
     * cell-mate matches, and the id-level distinct below already
     * collapses multiplicity. The anti-join's build side is the matched
-    * batch ids (≤ batch rows), broadcast statically for the same reason.
+    * batch ids, a subset of the batch, so it takes the batch's broadcast
+    * decision ([[graft.operators.Joins.broadcastDecision]], made once on
+    * the assigned batch): an oversized batch shuffles both joins instead.
     */
   def semDedupScreen(batch: DataFrame, index: DataFrame, centroids: DataFrame,
                      threshold: Double,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val bAssigned = graft.similarity.Similarity.ivfAssign(batch, centroids, idCol, vecCol)
+    val (bAssigned, side) = graft.operators.Joins.broadcastDecision(
+      graft.similarity.Similarity.ivfAssign(batch, centroids, idCol, vecCol))
     val corpusDup = index
       .select(col("centroid_id"), col(vecCol).as("cv"))
-      .join(broadcast(bAssigned.select(col("centroid_id"), col(idCol).as("__bid"),
+      .join(side(bAssigned.select(col("centroid_id"), col(idCol).as("__bid"),
         col(vecCol).as("bv"))), Seq("centroid_id"))
       .filter(graft.similarity.Similarity.cosine(col("bv"), col("cv")) >= threshold)
       .select(col("__bid").as(idCol)).distinct()
-    bAssigned.join(broadcast(corpusDup), Seq(idCol), "left_anti")
+    bAssigned.join(side(corpusDup), Seq(idCol), "left_anti")
   }
 
   /** Stream-safe form of [[semDedupScreen]]: the cell assignment is the

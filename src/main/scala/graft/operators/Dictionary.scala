@@ -11,56 +11,16 @@ import org.apache.spark.sql.functions._
   * analyzer/physical/ShuffleRewriter.java:128-245).
   *
   * A dictionary is a small DataFrame (colvalue STRING, code INT) per encoded
-  * column — broadcast-joined against the data while it provably-by-estimate
-  * fits ([[BroadcastDictMaxBytes]]), so encode/decode never shuffles the
-  * fact table in the common case, and falls back to a plain shuffle join
-  * for pathologically large dictionaries instead of OOMing. Codes are
-  * assigned by sorted order for determinism (the reference assigned by
-  * arrival order within its single-reducer dictionary job, which is not
-  * reproducible in parallel).
+  * column — broadcast-joined against the data while it provably fits
+  * ([[Joins.boundedBroadcast]]), so encode/decode never shuffles the fact
+  * table in the common case, and falls back to a plain shuffle join for
+  * pathologically large dictionaries instead of OOMing. The reference
+  * assumed an in-memory dictionary unconditionally
+  * (DictionaryEncodeOperator.java:48). Codes are assigned by sorted order
+  * for determinism (the reference assigned by arrival order within its
+  * single-reducer dictionary job, which is not reproducible in parallel).
   */
 object Dictionary {
-
-  /** Broadcast ceiling for the dictionary side of ENCODE/DECODE. The
-    * reference assumed an in-memory dictionary unconditionally
-    * (DictionaryEncodeOperator.java:48); at the 100 TB design point a
-    * high-cardinality dictionary (URLs, user ids) under a forced
-    * broadcast hint is a guaranteed driver/executor OOM, so — like
-    * [[Matrix.BroadcastNodeThreshold]] — encode/decode broadcast only
-    * while the dictionary provably fits, and fall back to a plain
-    * shuffle join above. Two tiers keep the common case free:
-    * the plan-stats estimate (`optimizedPlan.stats.sizeInBytes` —
-    * plan-time, no job; EXACT for a LOADED dictionary, the production
-    * shape per [[save]]/[[load]]) accepts under [[BroadcastDictMaxBytes]];
-    * past that, one bounded count job decides — necessary because
-    * without CBO a dictionary COMPUTED in-query inherits its distinct's
-    * CHILD size (Catalyst's Aggregate/Window estimate never shrinks for
-    * cardinality), so a 5-value dictionary built from a 100 GB table
-    * estimates 100 GB and would otherwise silently shuffle the whole
-    * fact table.
-    */
-  val BroadcastDictMaxBytes: Long = 1L << 30
-
-  /** Row ceiling for tier two: ~48 B per (colvalue, code) entry puts 10^7
-    * rows at ~0.5 GB of broadcast hash relation.
-    */
-  val BroadcastDictMaxRows: Long = 10000000L
-
-  /** The dictionary side of the encode/decode join: the plan-stats
-    * estimate, then a bounded count.
-    */
-  private def dictSide(dict: DataFrame): DataFrame =
-    if (dict.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(BroadcastDictMaxBytes)) broadcast(dict)
-    else {
-      // tier two needs a job anyway — snapshot first so an expensive
-      // in-query dictionary (distinct + window over the fact) computes
-      // once for BOTH the bounded probe and the join, not twice
-      val snap = dict.localCheckpoint(false)
-      if (snap.limit((BroadcastDictMaxRows + 1).toInt).count() <= BroadcastDictMaxRows)
-        broadcast(snap)
-      else snap
-    }
 
   /** CREATE DICTIONARY — distinct values of `column`, codes 1..N assigned in
     * value-sorted order (codes start at 1 per CodeDictionary.java:41; code 0
@@ -151,7 +111,7 @@ object Dictionary {
     val tmp = names.indices.map(i => s"__graft_in_$i")
     val dfT = df.toDF(tmp: _*)
     val target = col(tmp(idx))
-    val d = dictSide(dict.select(col("colvalue").as("__graft_dict_value"),
+    val d = Joins.boundedBroadcast(dict.select(col("colvalue").as("__graft_dict_value"),
       col("code").as("__graft_dict_code")))
     val joined = dfT.join(d,
       target.cast("string") === col("__graft_dict_value"), "left_outer")
@@ -186,7 +146,7 @@ object Dictionary {
     val tmp = names.indices.map(i => s"__graft_in_$i")
     val dfT = df.toDF(tmp: _*)
     val target = col(tmp(idx))
-    val d = dictSide(dict.select(col("colvalue").as("__graft_dict_value"),
+    val d = Joins.boundedBroadcast(dict.select(col("colvalue").as("__graft_dict_value"),
       col("code").as("__graft_dict_code")))
     val joined = dfT.join(d, target === col("__graft_dict_code"), "left_outer")
     val value = unknownsAs match {

@@ -19,24 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Matrix {
 
-  /** Node count above which the iterative ops ([[pageRankPortable]],
-    * [[labelPropagation]]) STOP broadcasting the per-node state relation
-    * and fall back to a shuffle join. A (long, long) state row is ~16
-    * bytes, so 5·10^7 nodes ≈ 800 MB of broadcast per iteration — near
-    * the practical ceiling for comfortable executor replication; beyond
-    * it a guaranteed-OOM broadcast is strictly worse than reshuffling the
-    * edges. The ops measure `n` anyway (they need it for the teleport
-    * base), so the switch is free.
-    */
-  val BroadcastNodeThreshold: Long = 50000000L
-
-  /** Broadcast the per-node state relation only while it provably fits:
-    * node count vs `maxNodes` decides.
-    */
-  private[graft] def stateSide(n: Long, maxNodes: Long = BroadcastNodeThreshold)
-      : DataFrame => DataFrame =
-    if (n <= maxNodes) df => broadcast(df) else identity
-
   /** Checkpoint for the iterative family: `localCheckpoint` (default) is
     * fast but stores blocks on executors ONLY — an executor loss mid-run
     * kills the job because the truncated lineage cannot recompute. With
@@ -88,14 +70,13 @@ object Matrix {
   }
 
   /** Sparse matrix–vector product: A(i,k,v) × x(k,w) → y(i) = Σ_k v·w.
-    * The vector side broadcasts when small (the common iterative-algorithm
-    * case: PageRank-style iterations are repeated spMV calls).
+    * The vector side broadcasts while it fits ([[Joins.boundedBroadcast]];
+    * `xRows` is its row count when the caller has one — PageRank-style
+    * iterations are repeated spMV calls over a counted node set).
     */
-  def spMV(a: DataFrame, x: DataFrame, broadcastVector: Boolean = true): DataFrame = {
+  def spMV(a: DataFrame, x: DataFrame, xRows: Option[Long] = None): DataFrame = {
     val l = a.toDF("i", "k", "v")
-    val r0 = x.toDF("k", "w")
-    val r = if (broadcastVector) broadcast(r0) else r0
-    l.join(r, Seq("k"))
+    l.join(Joins.boundedBroadcast(x.toDF("k", "w"), xRows), Seq("k"))
       .groupBy("i")
       .agg(sum(col("v") * col("w")).as("val"))
   }
@@ -125,12 +106,9 @@ object Matrix {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct().persist()
     val n = nodes.count()
-    // same broadcast posture as pageRankPortable: the O(V) rank vector
-    // rides to the edges only while it provably fits an executor
-    val bcastRanks = n <= BroadcastNodeThreshold
     var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
     for (_ <- 0 until iters) {
-      val contrib = spMV(m, ranks.toDF("k", "w"), broadcastVector = bcastRanks)
+      val contrib = spMV(m, ranks, Some(n))
         .select(col("i").as("node"), col("val").as("c"))
       ranks = ckpt(nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
@@ -161,51 +139,59 @@ object Matrix {
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(dampingPct >= 0 && dampingPct <= 100, s"bad dampingPct: $dampingPct")
-    val scale = 1000000000L
-    // checkpoint the deduped edges BEFORE fan-out: they feed the degree
-    // aggregate and both sides of the node union — without this the
-    // upstream edge derivation recomputes four times during setup. The
-    // edge set is the O(E) object and is materialized exactly ONCE,
-    // carrying only (src, dst): degree is O(V) and lives on its own —
-    // round 11 measured the old deg-riding-every-edge-row form (a second
-    // full-edge checkpoint) going super-linear at the 100M-edge decade
-    // (16.2x for 10x rows) purely from the duplicated edge materialization
-    // eager = false throughout the loop (see ckpt): `nodes.count()` below
-    // materializes e→nodes in one job; each round materializes inside its
-    // first consuming stage instead of per-round jobs
-    val e = ckpt(edges.toDF("src", "dst").distinct(), false, reliableCheckpoint)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = ckpt(e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct(), false, reliableCheckpoint)
-    val n = nodes.count()
-    require(n > 0, "empty graph")
-    require(n <= scale,
-      s"pageRankPortable: $n nodes exceeds the 10^9 nano-mass scale — " +
-        "initial ranks would truncate to zero; shard the graph or use pageRank")
-    // nodes ≪ edges in any real graph, so riding the rank relation to the
-    // edges beats reshuffling them — UNTIL the rank relation itself
-    // outgrows what an executor can replicate (an O(V) broadcast at the
-    // op's declared 10^9-node ceiling is ~16 GB): auto-switch on the
-    // already-measured node count
-    val side = stateSide(n)
-    val base = (scale * (100 - dampingPct) / 100) / n
-    // deg rides the checkpointed state (node, r, deg) — joined ONCE here,
-    // never re-joined per round: checkpointed relations are LogicalRDDs
-    // with neither stats nor a known partitioning, so the old per-round
-    // ranks⋈deg join planned as a SortMergeJoin with two exchanges and
-    // two sorts of O(V) rows EVERY round (r17 before-plan,
-    // plans/r17/q199_round_before.txt ops 7-13). deg is O(V) — 8 bytes
-    // per state row — not the O(E) every-edge-row deg that round 11
-    // measured going super-linear. Nodes without out-edges carry NULL.
-    var state = ckpt(nodes
-      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), lit(scale / n).as("r"), col("deg")),
-      false, reliableCheckpoint)
+    val g = graph(edges, reliableCheckpoint)
+    val (state0, base) = prStart(g, dampingPct, reliableCheckpoint)
+    var state = state0
     for (_ <- 0 until iters) {
-      state = ckpt(prRound(e, state, side, base, dampingPct),
+      state = ckpt(prRound(g.e, state, g.side, base, dampingPct),
         eager = false, reliable = reliableCheckpoint)
     }
     state.select("node", "r")
+  }
+
+  /** What [[pageRankPortable]] and [[labelPropagation]] start from — and
+    * what PlanDump's round fragments plan over: the distinct (src, dst)
+    * edges and the node set, both checkpointed lazily, the node count
+    * `n`, and the side the per-round O(V) state joins the edges under.
+    */
+  private[graft] final case class Graph(e: DataFrame, nodes: DataFrame, n: Long,
+                                        side: DataFrame => DataFrame)
+
+  private[graft] def graph(edges: DataFrame, reliable: Boolean): Graph = {
+    // the deduped O(E) edges checkpoint once, BEFORE fan-out (the degree
+    // aggregate, both sides of the node union), carrying only (src, dst):
+    // round 11 measured a deg-on-every-edge form going super-linear at
+    // 100M edges. Lazy (see ckpt): `nodes.count()` materializes e→nodes
+    // in one job, and each round inside its first consuming stage
+    val e = ckpt(edges.toDF("src", "dst").distinct(), false, reliable)
+    val nodes = ckpt(e.select(col("src").as("node"))
+      .union(e.select(col("dst"))).distinct(), false, reliable)
+    val n = nodes.count()
+    // nodes ≪ edges, so the state rides to the edges while it fits an
+    // executor; the counted n decides that with no further job
+    Graph(e, nodes, n, Joins.boundedBroadcast(_, Some(n)))
+  }
+
+  /** [[pageRankPortable]]'s initial state (node, r, deg) and the teleport
+    * base every round adds.
+    */
+  private[graft] def prStart(g: Graph, dampingPct: Int, reliable: Boolean)
+      : (DataFrame, Long) = {
+    val scale = 1000000000L
+    require(g.n > 0, "empty graph")
+    require(g.n <= scale,
+      s"pageRankPortable: ${g.n} nodes exceeds the 10^9 nano-mass scale — " +
+        "initial ranks would truncate to zero; shard the graph or use pageRank")
+    val deg = g.e.groupBy("src").agg(count(lit(1)).as("deg"))
+    // deg rides the checkpointed state, joined ONCE: a per-round ranks⋈deg
+    // join over stat-less LogicalRDDs planned as a SortMergeJoin with two
+    // O(V) exchanges and sorts every round (plans/r17/q199_round_before.txt
+    // ops 7-13). Nodes without out-edges carry NULL.
+    val state = ckpt(g.nodes
+      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
+      .select(col("node"), lit(scale / g.n).as("r"), col("deg")),
+      false, reliable)
+    (state, (scale * (100 - dampingPct) / 100) / g.n)
   }
 
   /** Per-source contribution mass `r div deg` — a pure PROJECTION over the
@@ -264,18 +250,10 @@ object Matrix {
   def labelPropagation(edges: DataFrame, iters: Int,
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val e = ckpt(edges.toDF("src", "dst").distinct(), false, reliableCheckpoint)
-    val nodes = ckpt(e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct(), false, reliableCheckpoint)
-    val n = nodes.count()
-    // same posture as pageRankPortable: the (node, label) relation — and
-    // the equally O(V) per-round winner relation — ride to the edges only
-    // while they provably fit an executor; above the threshold both joins
-    // fall back to shuffles
-    val side = stateSide(n)
-    var labels = nodes.select(col("node"), col("node").as("label"))
+    val g = graph(edges, reliableCheckpoint)
+    var labels = g.nodes.select(col("node"), col("node").as("label"))
     for (_ <- 0 until iters) {
-      labels = ckpt(lpaRound(e, labels, side),
+      labels = ckpt(lpaRound(g.e, labels, g.side),
         eager = false, reliable = reliableCheckpoint)
     }
     labels
@@ -357,23 +335,14 @@ object Matrix {
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 10,
             reliableCheckpoint: Boolean = false): DataFrame = {
     require(k >= 1 && maxIter >= 1, s"bad k=$k maxIter=$maxIter")
-    val e0 = edges.toDF("u", "v").filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    var e = ckpt(e0, false, reliableCheckpoint)
+    var e = ckpt(undirected(edges), false, reliableCheckpoint)
     // carry the previous round's cardinality forward: `e` was already
     // counted as `next` last round, so re-counting it is a redundant job
     var eCount = e.count()
     var i = 0
     var done = false
     while (i < maxIter && !done) {
-      val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select("n")
-      val next = ckpt(e
-        .join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-        .select("u", "v"), false, reliableCheckpoint)
+      val next = ckpt(peel(e, k), false, reliableCheckpoint)
       val nextCount = next.count()
       done = nextCount == eCount
       e = next
@@ -382,6 +351,21 @@ object Matrix {
     }
     e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
+  }
+
+  /** The simple undirected edge set (u < v) [[kCore]] and [[triangleCount]] run on. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
+    edges.toDF("u", "v").filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+      .distinct()
+
+  /** One [[kCore]] round: keep the edges whose ends both have degree ≥ k. */
+  private[graft] def peel(e: DataFrame, k: Int): DataFrame = {
+    val keep = e.select(explode(array(col("u"), col("v"))).as("n"))
+      .groupBy("n").agg(count(lit(1)).as("d")).filter(col("d") >= k).select("n")
+    e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
+      .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
+      .select("u", "v")
   }
 
   /** Exact triangle count via degree-ordered edge orientation (the
@@ -395,9 +379,7 @@ object Matrix {
     * with duplicates; output: one row (n_triangles).
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val e0 = edges.toDF("u", "v").filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
+    val e0 = undirected(edges)
     val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     // orient by (degree, node): strict total order, so each triangle is

@@ -39,6 +39,39 @@ class JoinsSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join, got:\n$plan")
   }
 
+  test("boundedBroadcast hints a relation only while it fits: bytes first, then a row-capped count") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    def hinted(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+      case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+      case _ => false
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      // tier one from the plan estimate: a small relation, no job
+      assert(hinted(Joins.boundedBroadcast(Seq((1, "a"), (2, "b")).toDF("k", "v"))))
+      // tier one from a known row count, both directions: two longs are 24
+      // bytes a row, so the byte cap holds 44,739,242 rows. The relation
+      // fails if it ever runs, so neither decision may start a job.
+      val twoLongs = spark.range(4).select($"id",
+        raise_error(lit("the decision ran a job")).cast("long").as("v"))
+      val fitRows = Joins.BroadcastMaxBytes / 24
+      assert(hinted(Joins.boundedBroadcast(twoLongs, Some(fitRows))))
+      val over = Joins.boundedBroadcast(twoLongs, Some(fitRows + 1))
+      assert(!hinted(over) && (over eq twoLongs))
+      // tier two: the estimate of range(2^28) is past the byte cap, so a
+      // count decides — 10^7 + 1 rows are one past the row cap...
+      val big = spark.range(1L << 28).toDF()
+      assert(big.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(Joins.BroadcastMaxBytes))
+      assert(!hinted(Joins.boundedBroadcast(big.filter($"id" <= Joins.BroadcastMaxRows))))
+      // ...while five rows of the same estimate keep their broadcast: the
+      // q30-at-scale shape, a small dictionary computed from a big input
+      // whose estimate never shrinks for cardinality
+      assert(hinted(Joins.boundedBroadcast(big.filter($"id" < 5))))
+    } finally spark.sparkContext.getPersistentRDDs
+      .foreach { case (id, rdd) => if (!before(id)) rdd.unpersist(blocking = false) }
+  }
+
   test("theta join supports range predicates (absent in reference, free here)") {
     val a = Seq(1, 5, 10).toDF("x")
     val b = Seq(3, 7).toDF("y")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Matrix
@@ -151,16 +152,17 @@ class MatrixSpec extends SparkSpec {
     assert(Matrix.kCore(edges, k = 5, maxIter = 10).count() == 0)
   }
 
-  test("graph ops auto-switch off broadcast above the node threshold; answers unchanged") {
+  test("graph rounds plan with or without the state broadcast; answers unchanged") {
     def undirected(pairs: (Long, Long)*) =
       (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
     val g = undirected((1L, 2L), (1L, 3L), (2L, 3L),
       (10L, 11L), (10L, 12L), (11L, 12L), (3L, 10L))
     // plan pin on the iteration shape itself (the loop's checkpoints erase
-    // per-iteration plans): above the threshold stateSide is identity and
-    // the contribution join carries NO BroadcastExchange; below it, it does.
-    // AQE's size-based auto-broadcast is disabled so the pin tests OUR
-    // decision, not the optimizer's small-table shortcut.
+    // per-iteration plans): the identity side leaves the contribution join
+    // with NO BroadcastExchange, the broadcast side gives it one (which side
+    // a node count picks is Joins.boundedBroadcast's, pinned in JoinsSpec).
+    // AQE's size-based auto-broadcast is disabled so the pin tests the
+    // side, not the optimizer's small-table shortcut.
     val deg = g.groupBy("src").agg(count(lit(1)).as("deg"))
     val state = g.select(col("src").as("node")).distinct()
       .select(col("node"), lit(100L).as("r"))
@@ -169,26 +171,25 @@ class MatrixSpec extends SparkSpec {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val autoShuffle = Matrix.stateSide(n = 6, maxNodes = 2)
-      val pShuffle = Matrix.prRound(g, state, autoShuffle, base = 100L, dampingPct = 85)
+      val shuffleSide: DataFrame => DataFrame = identity
+      val pShuffle = Matrix.prRound(g, state, shuffleSide, base = 100L, dampingPct = 85)
       pShuffle.queryExecution.toRdd.foreach(_ => ())
       val planS = pShuffle.queryExecution.executedPlan.toString
       assert(!planS.contains("BroadcastExchange"),
-        s"auto-switch above threshold still broadcasts:\n$planS")
-      val autoBcast = Matrix.stateSide(n = 6, maxNodes = 100)
-      val pBcast = Matrix.prRound(g, state, autoBcast, base = 100L, dampingPct = 85)
+        s"the identity side still broadcasts:\n$planS")
+      val bcastSide: DataFrame => DataFrame = broadcast(_)
+      val pBcast = Matrix.prRound(g, state, bcastSide, base = 100L, dampingPct = 85)
       pBcast.queryExecution.toRdd.foreach(_ => ())
       val planB = pBcast.queryExecution.executedPlan.toString
       assert(planB.contains("BroadcastExchange"),
-        s"below threshold the rank side should broadcast:\n$planB")
-      // either side gives one round the same rows (6 nodes: maxNodes=2
-      // shuffles, maxNodes=100 broadcasts)
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+        s"the broadcast side should broadcast the rank side:\n$planB")
+      // either side gives one round the same rows
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
       val pr = rows(pShuffle)
       assert(pr.size == 6 && pr == rows(pBcast), s"$pr vs ${rows(pBcast)}")
       val labels = state.select(col("node"), col("node").as("label"))
-      assert(rows(Matrix.lpaRound(g, labels, autoShuffle)) ==
-        rows(Matrix.lpaRound(g, labels, autoBcast)))
+      assert(rows(Matrix.lpaRound(g, labels, shuffleSide)) ==
+        rows(Matrix.lpaRound(g, labels, bcastSide)))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 

@@ -795,6 +795,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       s"touched-cell prune not broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"corpus-wide product join:\n$p")
+    // an oversized batch (estimate in GiB, one row past the row cap, 2-d
+    // vectors) fails both tiers of Joins.boundedBroadcast: the batch joins
+    // as its snapshot, and neither the probe's build side nor the
+    // matched-id side of the anti-join may broadcast it. The decision runs
+    // its row-capped count; the screen itself is only planned.
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.functions.{array, lit}
+    import spark.implicits._
+    val cents2 = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("centroid_id", "cvec")
+    val idx2 = graft.dedup.Dedup.semDedupIndex(
+      Seq((-1L, Array(1f, 0.5f))).toDF("vec_id", "embedding"), cents2)
+    val bigBatch = spark.range(1L << 28)
+      .filter(col("id") <= graft.operators.Joins.BroadcastMaxRows)
+      .select(col("id").as("vec_id"),
+        array(lit(1f), (col("id") % 7).cast("float")).as("embedding"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      val plan = graft.dedup.Dedup.semDedupScreen(bigBatch, idx2, cents2, threshold = 0.9)
+        .queryExecution.sparkPlan
+      val builds = plan.collect {
+        case j: BroadcastHashJoinExec => if (j.buildSide == BuildLeft) j.left else j.right
+        case j: BroadcastNestedLoopJoinExec => if (j.buildSide == BuildLeft) j.left else j.right
+      }
+      assert(plan.exists(_.isInstanceOf[RDDScanExec]), s"no batch snapshot:\n$plan")
+      assert(!builds.exists(_.exists(_.isInstanceOf[RDDScanExec])),
+        s"an oversized batch-derived side broadcasts:\n$plan")
+    } finally spark.sparkContext.getPersistentRDDs
+      .foreach { case (id, rdd) => if (!before(id)) rdd.unpersist(blocking = false) }
   }
 
   test("prefix similarity join: positional+length filters sit in the pair join; no product (q142)") {
@@ -958,6 +988,34 @@ class PlanAuditSpec extends SparkSpec {
     // q209 first looks its query vector up with one more query and job
     val mmr = counted(SparkEntry.queries("q209_mmr_select")(spark, dir))
     assert(mmr == ((9, 2)), s"q209 (jobs, SQL executions) = $mmr, budget (9, 2)")
+  }
+
+  test("broadcast decisions start no job where the size estimate decides (q199/q201/q30/q31/q135)") {
+    // budgets are the counts before the graph, dictionary and screen
+    // decisions moved into Joins.boundedBroadcast, zero tolerance: the
+    // graph loops decide from their counted nodes, and the dictionaries and
+    // the sf0.001 batch from the plan estimate. The tables resolve first
+    // (reading a parquet schema runs jobs of its own), and no other suite's
+    // cached relation may stand in for a scan.
+    spark.catalog.clearCache()
+    Seq("orders", "lineitem", "customer", "embeddings").foreach(Tables.load(spark, dir, _))
+    def build(q: String) = SparkEntry.queries(q)(spark, dir)
+    def buildAndConsume(q: String) =
+      counted(build(q).write.mode("overwrite").format("noop").save())
+    val budgets = Seq("q199_pagerank" -> ((20, 10)), "q201_label_prop" -> ((19, 8)),
+      "q30_dict_encode" -> ((4, 1)), "q31_dict_roundtrip" -> ((5, 1)))
+    budgets.foreach { case (q, budget) =>
+      val got = buildAndConsume(q)
+      assert(got == budget, s"$q (jobs, SQL executions) = $got, budget $budget")
+    }
+    // q135 decides while its plan is built: (5, 4) there. Building and
+    // consuming it runs 12 or 13 jobs from one run to the next in 5 SQL
+    // executions (AQE; the count varied the same way before the move).
+    val screen = counted(build("q135_semdedup_batch_index"))
+    assert(screen == ((5, 4)), s"q135 build (jobs, SQL executions) = $screen, budget (5, 4)")
+    val (jobs, execs) = buildAndConsume("q135_semdedup_batch_index")
+    assert(jobs <= 13 && execs == 5, s"q135 (jobs, SQL executions) = ($jobs, $execs), " +
+      "budget (<= 13, 5)")
   }
 
   test("graph pair: triangle wedges and k-core peels are equi-joins, never products (q155/q159)") {

@@ -160,26 +160,10 @@ class WindowDictSpec extends SparkSpec {
         .exists(h => Seq(h.leftHint, h.rightHint).flatten.exists(_.strategy.isDefined))
     val df = Seq(("a", 1), ("b", 2), ("c", 3), (null, 4)).toDF("v", "k")
     val dict = Dictionary.create(df, "v")
-    // small dictionary (estimate ≪ BroadcastDictMaxBytes): broadcast hint present
+    // a small dictionary takes the broadcast side of Joins.boundedBroadcast
+    // (its two tiers are pinned in JoinsSpec)
     assert(hinted(Dictionary.encode(df, "v", dict, unknownsAs = Some(-1))))
-    // a dictionary that is genuinely huge (stats AND bounded count past
-    // the ceilings) plans a NON-broadcast join — the encode itself is
-    // never executed, the pin is on the plan (the decision does run the
-    // tier-two bounded count)
-    val huge = spark.range(1L << 28)
-      .select(format_string("v%d", $"id").as("colvalue"), $"id".cast("int").as("code"))
-    assert(huge.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(Dictionary.BroadcastDictMaxBytes))
-    assert(!hinted(Dictionary.encode(df, "v", huge, unknownsAs = Some(-1))))
-    // the q30-at-scale shape: a LOW-cardinality dictionary computed from
-    // a big-estimate input (Catalyst's Aggregate stats never shrink for
-    // cardinality) must KEEP its broadcast — tier two's bounded count
-    // rescues what tier one's estimate would wrongly demote
-    val smallFromBig = spark.range(1L << 28).filter($"id" < 5)
-      .select(format_string("v%d", $"id").as("colvalue"), $"id".cast("int").as("code"))
-    assert(smallFromBig.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(Dictionary.BroadcastDictMaxBytes))
-    assert(hinted(Dictionary.encode(df, "v", smallFromBig, unknownsAs = Some(-1))))
+    assert(hinted(Dictionary.decode(df.withColumn("v", lit(1)), "v", dict)))
     // and Spark's shuffle join (hints off, no size-based broadcast)
     // answers identically to the broadcast path
     def pairs = {
