@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.SPARK_DOC_ROOT
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.PortableHash
 import graft.functions.expressions._
@@ -18,9 +20,6 @@ import graft.functions.expressions._
   * (reference: grammar CubertPhysical.g4:24, functions/PigEvalFuncWrapper.java:38).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // Cubert's partitioned-additive CUBE: pre-aggregate to leaf groups below
@@ -39,37 +38,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // conjuncts may still cross the fence toward the scan
     ext.injectPlannerStrategy(_ => graft.plans.PushdownBarrierStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushThroughBarrier)
-    ext.injectFunction((
-      FunctionIdentifier("graft_poly_hash"),
-      info("graft_poly_hash", "graft_poly_hash(str) - portable polynomial char hash mod 2^31-1"),
-      (args: Seq[Expression]) => PolyHash(args.head, PortableHash.P)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_hashes"),
-      info("graft_token_hashes", "graft_token_hashes(str) - whitespace-token polynomial hashes"),
-      (args: Seq[Expression]) => TokenPolyHashes(args.head, PortableHash.P)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_set"),
-      info("graft_shingle_set", "graft_shingle_set(token_hashes, n) - distinct n-gram shingle hashes"),
-      (args: Seq[Expression]) => ShingleHashSet(args.head,
-        args(1).asInstanceOf[Literal].value.asInstanceOf[Int], PortableHash.B, PortableHash.P)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      info("graft_shingles", "graft_shingles(token_hashes, n) - positional n-gram shingle hashes (duplicates kept)"),
-      (args: Seq[Expression]) => ShingleHashesAll(args.head,
-        args(1).asInstanceOf[Literal].value.asInstanceOf[Int], PortableHash.B, PortableHash.P)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash32"),
-      info("graft_simhash32", "graft_simhash32(token_hashes) - 32-bit SimHash"),
-      (args: Seq[Expression]) => SimHash32(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "graft_cosine(a, b) - fused cosine similarity over float arrays"),
-      (args: Seq[Expression]) => CosineSimF(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_deletion_hashes"),
-      info("graft_deletion_hashes",
-        "graft_deletion_hashes(str, k) - hashes of all <=k-code-point-deletion variants (FastSS blocking)"),
-      (args: Seq[Expression]) => DeletionVariantHashes(args.head,
-        args(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
+    register(ext, "graft_poly_hash", 1,
+      "graft_poly_hash(str) - portable polynomial char hash mod 2^31-1") { a =>
+      PolyHash(a.head, PortableHash.P) }
+    register(ext, "graft_token_hashes", 1,
+      "graft_token_hashes(str) - whitespace-token polynomial hashes") { a =>
+      TokenPolyHashes(a.head, PortableHash.P) }
+    register(ext, "graft_shingle_set", 2,
+      "graft_shingle_set(token_hashes, n) - distinct n-gram shingle hashes") { a =>
+      ShingleHashSet(a.head, intArg("graft_shingle_set", a, "n", 1, Int.MaxValue),
+        PortableHash.B, PortableHash.P) }
+    register(ext, "graft_shingles", 2,
+      "graft_shingles(token_hashes, n) - positional n-gram shingle hashes (duplicates kept)") { a =>
+      ShingleHashesAll(a.head, intArg("graft_shingles", a, "n", 1, Int.MaxValue),
+        PortableHash.B, PortableHash.P) }
+    register(ext, "graft_simhash32", 1, "graft_simhash32(token_hashes) - 32-bit SimHash") { a =>
+      SimHash32(a.head) }
+    register(ext, "graft_cosine", 2,
+      "graft_cosine(a, b) - fused cosine similarity over float arrays") { a =>
+      CosineSimF(a.head, a(1)) }
+    // the kernel enumerates deletions of up to two code points
+    register(ext, "graft_deletion_hashes", 2,
+      "graft_deletion_hashes(str, k) - hashes of all <=k-code-point-deletion variants (FastSS blocking)") { a =>
+      DeletionVariantHashes(a.head, intArg("graft_deletion_hashes", a, "k", 0, 2)) }
   }
+
+  /** Registers SQL function `name`; `build` sees exactly `arity` arguments. */
+  private def register(ext: SparkSessionExtensions, name: String, arity: Int, usage: String)(
+      build: Seq[Expression] => Expression): Unit =
+    ext.injectFunction((FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+      (args: Seq[Expression]) => {
+        if (args.length != arity) throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+          Map("functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+            "actualNum" -> args.length.toString, "docroot" -> SPARK_DOC_ROOT))
+        build(args)
+      }))
+
+  /** `args(1)` of SQL function `name`, named `param`: an INT literal in [lo, hi]. */
+  private def intArg(name: String, args: Seq[Expression], param: String, lo: Int, hi: Int): Int =
+    args(1) match {
+      case Literal(v: Int, IntegerType) if v >= lo && v <= hi => v
+      case Literal(v: Int, IntegerType) =>
+        throw new AnalysisException("DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", Map(
+          "sqlExpr" -> s"\"$name(${args.map(_.sql).mkString(", ")})\"",
+          "exprName" -> s"`$param`", "valueRange" -> s"[$lo, $hi]", "currentValue" -> v.toString))
+      case other =>
+        throw new AnalysisException("INVALID_PARAMETER_VALUE.INTEGER", Map(
+          "parameter" -> s"`$param`", "functionName" -> s"`$name`", "invalidValue" -> other.sql))
+    }
 }

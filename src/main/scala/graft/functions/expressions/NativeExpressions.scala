@@ -1,6 +1,8 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -8,11 +10,14 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import NativeUnary.{LongArray, PiiScan}
+
 /** Native Catalyst expressions for the dedup/similarity hot paths. The
   * declarative formulations (split + higher-order array functions) allocate
   * per-row intermediate arrays; these kernels compute the same values in one
-  * tight JVM loop and participate in whole-stage codegen via `doGenCode`
-  * (the generated code is a single static call into NativeKernels).
+  * tight JVM loop. Their expressions share one body ([[NativeKernelCall]]):
+  * the generated code is a single static call into NativeKernels, and the
+  * interpreted path calls the same method directly.
   *
   * Numeric contracts are bit-identical to the declarative forms (same fold
   * order, same portable arithmetic — see graft.functions.PortableHash), so
@@ -1028,17 +1033,67 @@ object NativeKernels {
   }
 }
 
+/** The shared body of the native kernel expressions: the input type check
+  * and the generated call, `NativeKernels.<kernel>(<child values>,
+  * <constArgs>)`. Each kernel class says only which method it calls, on
+  * what input types, with which constant arguments, its `dataType`, and
+  * its interpreted call. That `nullSafeEval` calls the kernel directly,
+  * because the `CodegenFallback` higher-order functions (`aggregate`,
+  * `transform`, `zip_with`) run their lambdas interpreted: ivfAssign's
+  * centroid fold calls the cosine kernel once per centroid per row.
+  * Inputs are matched, never cast: an ARRAY<DOUBLE> given to a float
+  * kernel fails analysis.
+  */
+trait NativeKernelCall extends Expression {
+  /** The NativeKernels method the generated code calls. */
+  protected def kernel: String
+  /** One type per child; an array's element nullability is not checked. */
+  protected def inputTypes: Seq[DataType]
+  /** Java source of the arguments after the children's values: literals,
+    * or names from `ctx.addReferenceObj`. */
+  protected def constArgs(ctx: CodegenContext): Seq[String] = Nil
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.map(_.dataType).corresponds(inputTypes) {
+      case (ArrayType(got, _), ArrayType(want, _)) => got == want
+      case (got, want) => got == want
+    }) TypeCheckSuccess
+    else TypeCheckFailure(s"expects ${inputTypes.map(_.sql).mkString(", ")}")
+
+  /** The kernel's call on the children's generated values. */
+  protected def kernelCall(ctx: CodegenContext): Seq[String] => String = {
+    val consts = constArgs(ctx)
+    args => (args ++ consts).mkString(
+      s"graft.functions.expressions.NativeKernels.$kernel(", ", ", ")")
+  }
+}
+
+/** A [[NativeKernelCall]] on one child of type `inputType`. */
+abstract class NativeUnary(protected val kernel: String, inputType: DataType,
+                           override val dataType: DataType)
+    extends UnaryExpression with NativeKernelCall with Serializable {
+  override protected def inputTypes: Seq[DataType] = Seq(inputType)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call = kernelCall(ctx)
+    defineCodeGen(ctx, ev, c => call(Seq(c)))
+  }
+}
+
+object NativeUnary {
+  /** ARRAY<BIGINT> without NULL elements: token hashes in, shingle hashes out. */
+  val LongArray: DataType = ArrayType(LongType, containsNull = false)
+  /** (n, redacted): a PII scan's match count and its redacted text. */
+  val PiiScan: DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("redacted", StringType, nullable = false)))
+}
+
 /** h = fold (h*31 + codepoint) mod `mod` over the string's codepoints. */
-case class PolyHash(child: Expression, mod: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class PolyHash(child: Expression, mod: Long)
+    extends NativeUnary("polyHash", StringType, LongType) {
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"${mod}L")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.polyHash(input.asInstanceOf[UTF8String], mod)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.polyHash($c, ${mod}L)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
@@ -1049,22 +1104,16 @@ case class PolyHash(child: Expression, mod: Long) extends UnaryExpression {
   * (DuckDB has no deflate), hence spec-verified rather than hash-graded.
   * Empty/whitespace-only strings report 1.0 (nothing to compress).
   */
-case class CompressionRatio(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class CompressionRatio(child: Expression)
+    extends NativeUnary("compressionRatio", StringType, DoubleType) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.compressionRatio(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.compressionRatio($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass stopword-profile language vote — see NativeKernels.langIdPick. */
-case class LangIdPick(child: Expression, langs: Seq[String],
-                      wordSets: Seq[Seq[String]]) extends UnaryExpression {
+case class LangIdPick(child: Expression, langs: Seq[String], wordSets: Seq[Seq[String]])
+    extends NativeUnary("langIdPick", StringType, StringType) {
   require(langs.length == wordSets.length && langs.length <= 32)
   @transient private lazy val maskMap: java.util.HashMap[UTF8String, Integer] = {
     val m = new java.util.HashMap[UTF8String, Integer]()
@@ -1078,18 +1127,11 @@ case class LangIdPick(child: Expression, langs: Seq[String],
   }
   @transient private lazy val langsU: Array[UTF8String] =
     langs.map(UTF8String.fromString).toArray
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+  override protected def constArgs(ctx: CodegenContext) = Seq(
+    ctx.addReferenceObj("langMask", maskMap, classOf[java.util.HashMap[_, _]].getName),
+    ctx.addReferenceObj("langNames", langsU, s"${classOf[UTF8String].getName}[]"))
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.langIdPick(input.asInstanceOf[UTF8String], maskMap, langsU)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("langMask", maskMap, classOf[java.util.HashMap[_, _]].getName)
-    val l = ctx.addReferenceObj("langNames", langsU, s"${classOf[UTF8String].getName}[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.langIdPick($c, $m, $l)")
-  }
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
@@ -1097,8 +1139,8 @@ case class LangIdPick(child: Expression, langs: Seq[String],
   * NativeKernels.ngramLangPick. NULL text → NULL prediction (standard
   * null propagation; empty/zero-score docs get the first language).
   */
-case class NgramLangPick(child: Expression, langs: Seq[String],
-                         gramSets: Seq[Seq[String]]) extends UnaryExpression {
+case class NgramLangPick(child: Expression, langs: Seq[String], gramSets: Seq[Seq[String]])
+    extends NativeUnary("ngramLangPick", StringType, StringType) {
   require(langs.length == gramSets.length && langs.nonEmpty)
   require(gramSets.forall(_.forall(_.nonEmpty)), "empty gram")
   // grams are matched as LITERALS (Aho–Corasick); the regexp_replace
@@ -1117,25 +1159,21 @@ case class NgramLangPick(child: Expression, langs: Seq[String],
   }
   @transient private lazy val langsU: Array[UTF8String] =
     langs.map(UTF8String.fromString).toArray
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+  override protected def constArgs(ctx: CodegenContext) = Seq(
+    ctx.addReferenceObj("gramAutomaton", automaton, classOf[NativeKernels.GramAutomaton].getName),
+    ctx.addReferenceObj("gramLangs", langsU, s"${classOf[UTF8String].getName}[]"))
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.ngramLangPick(input.asInstanceOf[UTF8String], automaton, langsU)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = ctx.addReferenceObj("gramAutomaton", automaton,
-      classOf[NativeKernels.GramAutomaton].getName)
-    val l = ctx.addReferenceObj("gramLangs", langsU, s"${classOf[UTF8String].getName}[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.ngramLangPick($c, $a, $l)")
-  }
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass quality token stats (n_tokens, sum_token_len, stop_hits) with
   * no token-array materialization — see NativeKernels.tokenStats. */
-case class TokenStats(child: Expression, stopwords: Seq[String]) extends UnaryExpression {
+case class TokenStats(child: Expression, stopwords: Seq[String])
+    extends NativeUnary("tokenStats", StringType, StructType(Seq(
+      StructField("n_tokens", LongType, nullable = false),
+      StructField("sum_token_len", LongType, nullable = false),
+      StructField("stop_hits", LongType, nullable = false)))) {
   // entries kept VERBATIM: the declarative form tests
   // array_contains(stopList, lower(token)), so an uppercase list entry
   // never matches there and must not match here
@@ -1146,25 +1184,19 @@ case class TokenStats(child: Expression, stopwords: Seq[String]) extends UnaryEx
   }
   @transient private lazy val maxStopLen: Int =
     if (stopwords.isEmpty) 0 else stopwords.map(_.length).max
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("sum_token_len", LongType, nullable = false),
-    StructField("stop_hits", LongType, nullable = false)))
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+  override protected def constArgs(ctx: CodegenContext) = Seq(
+    ctx.addReferenceObj("stopSet", stopSet, classOf[java.util.HashSet[_]].getName), s"$maxStopLen")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.tokenStats(input.asInstanceOf[UTF8String], stopSet, maxStopLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val s = ctx.addReferenceObj("stopSet", stopSet, classOf[java.util.HashSet[_]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.tokenStats($c, $s, $maxStopLen)")
-  }
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass Gopher-rule feature stats — see NativeKernels.gopherStats. */
-case class GopherStats(child: Expression, stopwords: Seq[String]) extends UnaryExpression {
+case class GopherStats(child: Expression, stopwords: Seq[String])
+    extends NativeUnary("gopherStats", StringType, StructType(Seq(
+      "n_words", "sum_word_len", "alpha_words", "stop_distinct", "hash_cnt", "ell3_cnt",
+      "ellch_cnt", "n_lines", "bullet_lines", "ellipsis_lines"
+    ).map(StructField(_, LongType, nullable = false)))) {
   require(stopwords.size <= 64, "stop_distinct uses a 64-bit presence mask")
   @transient private lazy val stopIdx: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer]()
@@ -1173,218 +1205,122 @@ case class GopherStats(child: Expression, stopwords: Seq[String]) extends UnaryE
   }
   @transient private lazy val maxStopLen: Int =
     if (stopwords.isEmpty) 0 else stopwords.map(_.length).max
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("sum_word_len", LongType, nullable = false),
-    StructField("alpha_words", LongType, nullable = false),
-    StructField("stop_distinct", LongType, nullable = false),
-    StructField("hash_cnt", LongType, nullable = false),
-    StructField("ell3_cnt", LongType, nullable = false),
-    StructField("ellch_cnt", LongType, nullable = false),
-    StructField("n_lines", LongType, nullable = false),
-    StructField("bullet_lines", LongType, nullable = false),
-    StructField("ellipsis_lines", LongType, nullable = false)))
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+  override protected def constArgs(ctx: CodegenContext) = Seq(
+    ctx.addReferenceObj("gopherStopIdx", stopIdx, classOf[java.util.HashMap[_, _]].getName),
+    s"$maxStopLen")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.gopherStats(input.asInstanceOf[UTF8String], stopIdx, maxStopLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("gopherStopIdx", stopIdx, classOf[java.util.HashMap[_, _]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.gopherStats($c, $m, $maxStopLen)")
-  }
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass email count + `<EMAIL>` redaction — see
   * NativeKernels.piiEmailScan. */
-case class PiiEmailScan(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("redacted", StringType, nullable = false)))
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class PiiEmailScan(child: Expression)
+    extends NativeUnary("piiEmailScan", StringType, PiiScan) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.piiEmailScan(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.piiEmailScan($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass phone count + `<PHONE>` redaction — see
   * NativeKernels.piiPhoneScan. */
-case class PiiPhoneScan(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("redacted", StringType, nullable = false)))
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class PiiPhoneScan(child: Expression)
+    extends NativeUnary("piiPhoneScan", StringType, PiiScan) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.piiPhoneScan(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.piiPhoneScan($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass IPv4 count + `<IP>` redaction — see
   * NativeKernels.piiIpv4Scan. */
-case class PiiIpv4Scan(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("redacted", StringType, nullable = false)))
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class PiiIpv4Scan(child: Expression)
+    extends NativeUnary("piiIpv4Scan", StringType, PiiScan) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.piiIpv4Scan(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.piiIpv4Scan($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Per-document (top_token, top_cnt, n_tokens) — see
   * NativeKernels.topTokenStats. */
-case class TopTokenStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("top_token", StringType, nullable = true),
-    StructField("top_cnt", LongType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false)))
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class TopTokenStats(child: Expression)
+    extends NativeUnary("topTokenStats", StringType, StructType(Seq(
+      StructField("top_token", StringType, nullable = true),
+      StructField("top_cnt", LongType, nullable = false),
+      StructField("n_tokens", LongType, nullable = false)))) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.topTokenStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.topTokenStats($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Count of maximal runs of chars from a literal set — see
   * NativeKernels.runCountInSet. */
-case class RunCountInSet(child: Expression, set: String) extends UnaryExpression {
+case class RunCountInSet(child: Expression, set: String)
+    extends NativeUnary("runCountInSet", StringType, LongType) {
   private val setU = UTF8String.fromString(set)
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+  override protected def constArgs(ctx: CodegenContext) =
+    Seq(ctx.addReferenceObj("runSet", setU, classOf[UTF8String].getName))
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.runCountInSet(input.asInstanceOf[UTF8String], setU)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("runSet", setU, classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.runCountInSet($c, $setRef)")
-  }
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass BPE-ish subword segment count — see NativeKernels.subwordCount. */
-case class SubwordCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class SubwordCount(child: Expression)
+    extends NativeUnary("subwordCount", StringType, LongType) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.subwordCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.subwordCount($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass lowercase + non-alnum→space + whitespace collapse + trim —
   * see NativeKernels.normalizeText. */
-case class NormalizeText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class NormalizeText(child: Expression)
+    extends NativeUnary("normalizeText", StringType, StringType) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.normalizeText(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.normalizeText($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** One-pass script/charset codepoint counts — see NativeKernels.scriptCounts. */
-case class ScriptCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class ScriptCounts(child: Expression)
+    extends NativeUnary("scriptCounts", StringType, ArrayType(LongType, containsNull = false)) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.scriptCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.scriptCounts($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Whitespace tokens → array of their polyHashes, one pass. */
-case class TokenPolyHashes(child: Expression, mod: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class TokenPolyHashes(child: Expression, mod: Long)
+    extends NativeUnary("tokenPolyHashes", StringType, ArrayType(LongType, containsNull = false)) {
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"${mod}L")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.tokenPolyHashes(input.asInstanceOf[UTF8String], mod)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.tokenPolyHashes($c, ${mod}L)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
-
 /** Whitespace tokens (\\s+ runs, empties removed) as an array of strings. */
-case class Tokenize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
+case class Tokenize(child: Expression)
+    extends NativeUnary("tokenize", StringType, ArrayType(StringType, containsNull = false)) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.tokenize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.tokenize($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Distinct Horner shingle hashes over a token-hash array. */
 case class ShingleHashSet(child: Expression, shingleN: Int, b: Long, p: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects ARRAY<LONG>")
-  }
+    extends NativeUnary("shingleHashSet", LongArray, LongArray) {
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"$shingleN", s"${b}L", s"${p}L")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.shingleHashSet(input.asInstanceOf[ArrayData], shingleN, b, p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.shingleHashSet($c, $shingleN, ${b}L, ${p}L)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Positional n-gram shingle hashes (ordered, duplicates kept). */
 case class ShingleHashesAll(child: Expression, shingleN: Int, b: Long, p: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects ARRAY<LONG>")
-  }
+    extends NativeUnary("shingleHashesAll", LongArray, LongArray) {
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"$shingleN", s"${b}L", s"${p}L")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.shingleHashesAll(input.asInstanceOf[ArrayData], shingleN, b, p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.shingleHashesAll($c, $shingleN, ${b}L, ${p}L)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
@@ -1392,104 +1328,69 @@ case class ShingleHashesAll(child: Expression, shingleN: Int, b: Long, p: Long)
   * shingle-hash sequence, window `w`) — see NativeKernels.winnowHashes.
   */
 case class WinnowHashes(child: Expression, shingleN: Int, window: Int, b: Long, p: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects ARRAY<LONG>")
-  }
+    extends NativeUnary("winnowHashes", LongArray, LongArray) {
+  override protected def constArgs(ctx: CodegenContext) =
+    Seq(s"$shingleN", s"$window", s"${b}L", s"${p}L")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.winnowHashes(input.asInstanceOf[ArrayData], shingleN, window, b, p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.winnowHashes($c, $shingleN, $window, ${b}L, ${p}L)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** MinHash signature (k mins over affine-permuted shingle hashes). */
 case class MinHashSig(child: Expression, shingleN: Int, as: Seq[Long], bs: Seq[Long],
-                      b: Long, p: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects ARRAY<LONG>")
-  }
+                      b: Long, p: Long)
+    extends NativeUnary("minHashSig", LongArray, LongArray) {
   @transient private lazy val aArr = as.toArray
   @transient private lazy val bArr = bs.toArray
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"$shingleN",
+    ctx.addReferenceObj("minhashA", aArr, "long[]"),
+    ctx.addReferenceObj("minhashB", bArr, "long[]"), s"${b}L", s"${p}L")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.minHashSig(input.asInstanceOf[ArrayData], shingleN, aArr, bArr, b, p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.minHashSig($c, $shingleN, $aRef, $bRef, ${b}L, ${p}L)")
-  }
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** 32-bit SimHash packed from token hashes. */
-case class SimHash32(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects ARRAY<LONG>")
-  }
+case class SimHash32(child: Expression)
+    extends NativeUnary("simHash32", LongArray, LongType) {
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.simHash32(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.simHash32($c)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
-
 /** Deletion-neighborhood blocking hashes for the edit-distance join. */
-case class DeletionVariantHashes(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects STRING")
-  }
+case class DeletionVariantHashes(child: Expression, k: Int)
+    extends NativeUnary("deletionVariantHashes", StringType, LongArray) {
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"$k")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.deletionVariantHashes(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.deletionVariantHashes($c, $k)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Packed random-hyperplane LSH signature over a float vector. */
-case class LshSignatureF(child: Expression, nPlanes: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(FloatType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects ARRAY<FLOAT>")
-  }
+case class LshSignatureF(child: Expression, nPlanes: Int)
+    extends NativeUnary("lshSignatureF", ArrayType(FloatType), LongType) {
+  override protected def constArgs(ctx: CodegenContext) = Seq(s"$nPlanes")
   override protected def nullSafeEval(input: Any): Any =
     NativeKernels.lshSignatureF(input.asInstanceOf[ArrayData], nPlanes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.expressions.NativeKernels.lshSignatureF($c, $nPlanes)")
   override protected def withNewChildInternal(newChild: Expression) = copy(child = newChild)
 }
 
 /** Fused cosine similarity over two float arrays. */
-case class CosineSimF(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineSimF(left: Expression, right: Expression)
+    extends BinaryExpression with NativeKernelCall {
   override def dataType: DataType = DoubleType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure("expects two ARRAY<FLOAT>")
-  }
+  override protected def kernel = "cosineF"
+  override protected def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override protected def nullSafeEval(a: Any, b: Any): Any =
     NativeKernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.NativeKernels.cosineF($a, $b)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val call = kernelCall(ctx)
+    defineCodeGen(ctx, ev, (a, b) => call(Seq(a, b)))
+  }
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression) =
     copy(left = newLeft, right = newRight)
 }
-
 
 /** size(array_intersect(a, b)) for sorted distinct long OR int arrays
   * (both sides the same element type), without materializing the
@@ -1504,12 +1405,9 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
     case _ => false
   }
   override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "expects two ARRAY<BIGINT> or two ARRAY<INT>")
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckSuccess
+    case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) => TypeCheckSuccess
+    case _ => TypeCheckFailure("expects two ARRAY<BIGINT> or two ARRAY<INT>")
   }
   override protected def nullSafeEval(a: Any, b: Any): Any =
     if (intElems)

@@ -4,6 +4,8 @@ import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RddBridge
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Similarity search over an embedding column (`Array[Float]`): brute-force
   * cosine top-k as the exact baseline, and a random-hyperplane LSH bucketed
@@ -33,6 +35,20 @@ object Similarity {
     graft.functions.expressions.NativeExpressions.cosineF(a, b)
 
   def cosineGeneric(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  private def isFloatArray(df: DataFrame, name: String): Boolean =
+    df.schema.fields.exists(f => f.name == name && (f.dataType match {
+      case ArrayType(FloatType, _) => true; case _ => false
+    }))
+
+  /** The cosine of `vecCol` against the centroids' `cvec`. Float-array sides
+    * take the fused native kernel (bit-identical to the separate folds —
+    * same sequential double accumulation); double-typed centroids (e.g.
+    * fresh from kmeansFit) keep the generic composition.
+    */
+  private def centroidCosine(df: DataFrame, vecCol: String,
+                             centroids: DataFrame): (Column, Column) => Column =
+    if (isFloatArray(df, vecCol) && isFloatArray(centroids, "cvec")) cosine else cosineGeneric
 
   /** Exact brute-force top-k cosine neighbors for each query vector.
     * Plan: broadcast the (small) query set against the corpus — a narrow
@@ -171,22 +187,13 @@ object Similarity {
     */
   def ivfAssign(df: DataFrame, centroids: DataFrame,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-    val vecIsFloat = df.schema.fields.find(_.name == vecCol).exists(_.dataType match {
-      case ArrayType(FloatType, _) => true; case _ => false
-    })
-    val cventry = centroids.schema.fields.find(_.name == "cvec")
-    val centFloat = cventry.exists(_.dataType match {
-      case ArrayType(FloatType, _) => true; case _ => false
-    })
     // sorted by centroid_id so on-tie keep-first == lowest id
     val rows = centroids.select(col("centroid_id").cast("long"), col("cvec"))
       .collect().map(r => (r.getLong(0), r.getSeq[Any](1))).sortBy(_._1)
     require(rows.nonEmpty, "ivfAssign: the centroid table is empty")
-    val cos: (Column, Column) => Column =
-      if (vecIsFloat && centFloat) cosine else cosineGeneric
+    val cos = centroidCosine(df, vecCol, centroids)
     val centsLit: Column =
-      if (centFloat)
+      if (isFloatArray(centroids, "cvec"))
         typedLit(rows.toSeq.map { case (id, v) => (id, v.map(_.asInstanceOf[Float])) })
       else
         typedLit(rows.toSeq.map { case (id, v) => (id, v.map {
@@ -238,17 +245,7 @@ object Similarity {
   def ivfAssignShuffled(df: DataFrame, centroids: DataFrame,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val c = broadcast(centroids.select(col("centroid_id"), col("cvec")))
-    // Float-array sides take the fused native kernel (bit-identical to the
-    // separate folds — same sequential double accumulation); double-typed
-    // centroids (e.g. fresh from kmeansFit) keep the generic composition.
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    def isFloatArr(sch: org.apache.spark.sql.types.StructType, name: String) =
-      sch.fields.find(_.name == name).exists(_.dataType match {
-        case ArrayType(FloatType, _) => true; case _ => false
-      })
-    val cos: (Column, Column) => Column =
-      if (isFloatArr(df.schema, vecCol) && isFloatArr(centroids.schema, "cvec")) cosine
-      else cosineGeneric
+    val cos = centroidCosine(df, vecCol, centroids)
     // Nearest centroid via groupBy + min_by (not a window): the n×k scored
     // stream partial-aggregates map-side, so only ~one row per vector
     // crosses the exchange — at k=1024 cells that is 1024× less shuffle
@@ -498,7 +495,8 @@ object Similarity {
     * O(d) however many picks precede it. Each round's state is persisted
     * and lineage-truncated by `localCheckpoint` and shares the previous
     * state's coordinate arrays; the previous state is released once the
-    * new one has materialized, and the last one before returning.
+    * new one has materialized, and the last one before returning, through
+    * [[RddBridge]] so no round logs unpersist's checkpoint WARN.
     *
     * The arithmetic is `Math.*Exact`, so an overflow throws as ANSI Spark
     * SQL does. A NULL or wrong-length vector throws an
@@ -531,7 +529,7 @@ object Similarity {
           case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
             throw e.getCause
         }
-        if (prev != null) { prev.unpersist(); prev = null }
+        if (prev != null) { RddBridge.release(prev); prev = null }
         require(bests.nonEmpty, s"${obj.name}: k=$k exceeds input size ${picks.length}")
         val (score, pickId, pick) = bests.reduce(better)
         picks :+= ((picks.length + 1L, pickId, score))
@@ -548,8 +546,8 @@ object Similarity {
       import spark.implicits._
       picks.toDF("sel_rank", "vec_id", obj.scoreCol)
     } finally {
-      state.unpersist()
-      if (prev != null) prev.unpersist()
+      RddBridge.release(state)
+      if (prev != null) RddBridge.release(prev)
     }
   }
 

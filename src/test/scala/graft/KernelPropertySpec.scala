@@ -636,4 +636,61 @@ class KernelPropertySpec extends SparkSpec {
       assert(kernel(i.toLong) == old(i.toLong), s"doc=[${inputs(i)}]")
     }
   }
+
+  test("every native kernel expression: codegen and interpreted rows are identical, NULLs included") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val (p, b) = (PortableHash.P, PortableHash.B)
+    val r = new Random(7)
+    def vec(): Seq[Float] = Seq.fill(4)(r.nextInt(7) - 3 + r.nextFloat())
+    def set(): Seq[Long] = Seq.fill(r.nextInt(12))(r.nextInt(20).toLong).distinct.sorted
+    val texts = Seq("The cat... and the dog\u2026 #1", "- item\n* two...\r\nle chat et le chien",
+      "Привет мир 你好 مرحبا Der Eichhörnchen", "mail a@b.io or 10.0.0.1, call 555-123-4567") ++
+      samples.take(40) ++ piiSamples(3).take(20)
+    val rows = Row(0L, null, null, null, null, null, null) +: texts.zipWithIndex.map {
+      case (t, i) => Row(i + 1L, t, refTokens(t).map(refHash(_, p)), vec(), vec(), set(), set())
+    }
+    val schema = StructType(Seq(StructField("id", LongType), StructField("t", StringType),
+      StructField("th", ArrayType(LongType)), StructField("v", ArrayType(FloatType)),
+      StructField("w", ArrayType(FloatType)), StructField("sa", ArrayType(LongType)),
+      StructField("sb", ArrayType(LongType))))
+    // an RDD source, not a local relation, so the projection is not folded
+    // at planning time before either path runs
+    val fixture = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val (t, th, v, w) = (col("t"), col("th"), col("v"), col("w"))
+    val n = NativeExpressions
+    val kernels = Seq(n.polyHash(t, p), n.tokenPolyHashes(t, p), n.tokenize(t),
+      n.shingleHashSet(th, 2, b, p), n.shingleHashesAll(th, 3, b, p),
+      n.winnowHashes(th, 2, 3, b, p), n.minHashSig(th, 2, Seq(3L, 5L), Seq(11L, 13L), b, p),
+      n.simHash32(th), n.cosineF(v, w), n.sortedIntersectCount(col("sa"), col("sb")),
+      n.sortedIntersectCount(col("sa").cast("array<int>"), col("sb").cast("array<int>")),
+      n.compressionRatio(t), n.scriptCounts(t), n.normalizeText(t), n.subwordCount(t),
+      n.runCountInSet(t, ".!?"), n.topTokenStats(t), n.gopherStats(t, Seq("the", "and", "le")),
+      n.piiEmailScan(t), n.piiPhoneScan(t), n.piiIpv4Scan(t), n.tokenStats(t, Seq("the", "et")),
+      n.langIdPick(t, Seq("en", "fr"), Seq(Seq("the", "and"), Seq("le", "et"))),
+      n.ngramLangPick(t, Seq("en", "de"), Seq(Seq("th", "he"), Seq("ch", "ei"))),
+      n.lshSignatureF(v, 16), n.deletionVariantHashes(substring(t, 1, 10), 2))
+    def run(): Seq[Row] = fixture.select(col("id") +: kernels: _*).collect().sortBy(_.getLong(0)).toSeq
+    val compiled = run()
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val interpreted = try {
+      confs.foreach { case (k, x) => spark.conf.set(k, x) }
+      run()
+    } finally saved.foreach {
+      case (k, Some(x)) => spark.conf.set(k, x)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(compiled.length == rows.length)
+    compiled.zip(interpreted).foreach { case (c, i) => assert(c == i, s"id ${c.getLong(0)}") }
+    assert((1 to kernels.length).forall(compiled.head.isNullAt), "NULL input gave a value")
+    // inputs are matched, never cast: one wrong type per input family
+    Seq(n.polyHash(th, p) -> "STRING", n.shingleHashSet(th.cast("array<int>"), 2, b, p) -> "ARRAY<BIGINT>",
+      n.cosineF(v.cast("array<double>"), w) -> "ARRAY<FLOAT>").foreach { case (bad, want) =>
+      val e = intercept[AnalysisException](fixture.select(bad))
+      assert(e.getMessage.contains(s"expects $want"), e.getMessage)
+    }
+  }
 }

@@ -976,6 +976,10 @@ class PlanAuditSpec extends SparkSpec {
     (jobs.get, execs.get)
   }
 
+  /** [[counted]] over building query `q` and consuming it into a no-op sink. */
+  private def buildAndConsume(q: String): (Int, Int) =
+    counted(SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save())
+
   test("selection loops: one job per round, no SQL execution in the loop (q208/q209)") {
     // budgets are today's counts with zero tolerance: k = 8 rounds, one
     // job each (the round's state materializes inside its pick job), and
@@ -1000,8 +1004,6 @@ class PlanAuditSpec extends SparkSpec {
     spark.catalog.clearCache()
     Seq("orders", "lineitem", "customer", "embeddings").foreach(Tables.load(spark, dir, _))
     def build(q: String) = SparkEntry.queries(q)(spark, dir)
-    def buildAndConsume(q: String) =
-      counted(build(q).write.mode("overwrite").format("noop").save())
     val budgets = Seq("q199_pagerank" -> ((20, 10)), "q201_label_prop" -> ((19, 8)),
       "q30_dict_encode" -> ((4, 1)), "q31_dict_roundtrip" -> ((5, 1)))
     budgets.foreach { case (q, budget) =>
@@ -1016,6 +1018,19 @@ class PlanAuditSpec extends SparkSpec {
     val (jobs, execs) = buildAndConsume("q135_semdedup_batch_index")
     assert(jobs <= 13 && execs == 5, s"q135 (jobs, SQL executions) = ($jobs, $execs), " +
       "budget (<= 13, 5)")
+  }
+
+  test("kernel-heavy dedup queries keep their job budgets (q40/q41/q142)") {
+    // budgets are the counts before the native kernel expressions moved
+    // onto one shared body, build plus consume, zero tolerance: each was
+    // the same in 8 of 8 repeats
+    spark.catalog.clearCache()
+    Tables.load(spark, dir, "documents")
+    Seq("q40_dedup_ngram" -> ((6, 2)), "q41_dedup_minhash" -> ((3, 1)),
+      "q142_dedup_prefix" -> ((9, 3))).foreach { case (q, budget) =>
+      val got = buildAndConsume(q)
+      assert(got == budget, s"$q (jobs, SQL executions) = $got, budget $budget")
+    }
   }
 
   test("graph pair: triangle wedges and k-core peels are equi-joins, never products (q155/q159)") {

@@ -64,4 +64,19 @@ class UdafExtensionsSpec extends SparkSpec {
       SparkSession.setDefaultSession(spark)
     }
   }
+
+  test("GraftExtensions SQL functions reject bad arguments by function name") {
+    Seq(
+      "graft_shingle_set(th, 2L)" -> "expects an integer literal, but got 2L",
+      "graft_shingle_set(th, id)" -> "expects an integer literal, but got v.id",
+      "graft_shingle_set(th)" -> "requires 2 parameters but the actual number is 1",
+      "graft_shingle_set(th, 0)" -> "must be between [1, 2147483647] (current value = 0)",
+      "graft_deletion_hashes('abcd', 3)" -> "must be between [0, 2] (current value = 3)"
+    ).foreach { case (call, msg) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call FROM VALUES (7L, array(1L, 2L, 3L)) AS v(id, th)").collect())
+      assert(e.getMessage.contains(call.takeWhile(_ != '(')) && e.getMessage.contains(msg),
+        s"$call: ${e.getMessage}")
+    }
+  }
 }
