@@ -17,28 +17,17 @@ import graft.operators.Matrix
   * The iterative queries' final plans are only the last checkpoint's
   * LogicalRDD scan (the loop erases per-round plans), so for those the
   * meaningful evidence is the ROUND fragment, built here with the same
-  * setup and round helpers the loop uses over the same graph as the
-  * headline query.
-  * Fragment pseudo-names: q199_round (one pageRankPortable contribution +
-  * state-update round), q201_round (one labelPropagation round),
-  * q159_round (one kCore peel round).
+  * helpers the loop uses over the same data as the headline query.
+  * Fragment pseudo-name: q159_round (one kCore peel round). q199 and q201
+  * run no SQL plan per round (Matrix.graphRounds), so they have none.
   */
 object PlanDump {
 
   private def fragments(spark: SparkSession, sfDir: String)
       : Map[String, () => DataFrame] = {
     def t(n: String): DataFrame = Tables.load(spark, sfDir, n)
-    // one first round each, over the loops' own setup and round helpers
+    // a first round, over the loop's own setup and round helpers
     Map(
-      "q199_round" -> (() => {
-        val g = Matrix.graph(SparkEntry.custSuppGraph(spark, sfDir), reliable = false)
-        val (state, base) = Matrix.prStart(g, dampingPct = 85, reliable = false)
-        Matrix.prRound(g.e, state, g.side, base, dampingPct = 85)
-      }),
-      "q201_round" -> (() => {
-        val g = Matrix.graph(SparkEntry.custSuppGraph(spark, sfDir), reliable = false)
-        Matrix.lpaRound(g.e, g.nodes.select(col("node"), col("node").as("label")), g.side)
-      }),
       "q159_round" -> (() => {
         val edges = t("documents")
           .select(expr("doc_id div 8").as("a"),

@@ -77,7 +77,8 @@ object Joins {
     * side to join it under, which a subset of it may share. Tier one, at
     * plan time: bytes — `rows` times Spark's per-row estimate, else the
     * plan estimate — against [[BroadcastMaxBytes]]; with `rows` a miss
-    * also settles the row cap, so a counted loop starts no job here.
+    * also settles the row cap, so a caller with a count (`spMV`'s `xRows`)
+    * starts no job here.
     * Tier two: one row-capped count over a lazy local-checkpoint snapshot
     * the join then reads. Without CBO an in-query relation inherits its
     * distinct's CHILD size, so a 5-value dictionary built from a 100 GB

@@ -1,7 +1,15 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.{HashPartitioner, SparkException}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RddBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Sparse-matrix operations as relational dataflow — the reference's "graph
   * computation" story (README §Graph: sparse matrix multiplication written
@@ -15,7 +23,9 @@ import org.apache.spark.sql.functions._
   * both operands on `k` (or runs shuffle-free over blockgen'd/bucketed
   * operands with a shared bucket spec on `k`), and the (i,j) aggregation is
   * partial+final. Power-law graphs (hub columns) → AQE skew split or
-  * `Joins.saltedJoin` on the same keys.
+  * `Joins.saltedJoin` on the same keys. The iterative integer graph
+  * loops keep Cubert's own shape instead: the graph is blocked once and
+  * each round's state blocks meet it where it lives ([[graphRounds]]).
   */
 object Matrix {
 
@@ -122,113 +132,34 @@ object Matrix {
   /** [[pageRank]] in EXACT integer arithmetic — the bit-portable sibling
     * (same posture as the KMV/LM-score families): ranks live in 10^9
     * "nano-mass" units, per-edge contributions are integer divisions
-    * (r div deg), damping is the rational dampingPct/100 applied as
-    * (pct·s) div 100, and the teleport base is computed once driver-side
-    * with the same long divisions an external engine would use. Every
-    * iteration is therefore a pure function of integers — an oracle can
-    * replay N unrolled iterations hash-for-hash, which float PageRank
-    * (summation-order-sensitive doubles) never allows. The floors bleed
-    * < 1e-9·deg mass per node per iteration — ranking-irrelevant.
+    * (r div deg, deg = a node's distinct out-edges), damping is the
+    * rational dampingPct/100 applied as (pct·s) div 100, and the teleport
+    * base is computed once driver-side with the same long divisions an
+    * external engine would use. Every iteration is therefore a pure
+    * function of integers — an oracle can replay N unrolled iterations
+    * hash-for-hash, which float PageRank (summation-order-sensitive
+    * doubles) never allows. The floors bleed < 1e-9·deg mass per node per
+    * iteration — ranking-irrelevant. Nodes with no out-edges contribute
+    * nothing.
     *
-    * Scale shape per iteration: one join of edges against the (node,
-    * rank) relation + one partial-aggregated sum — identical to
-    * [[pageRank]]; localCheckpoint keeps lineage O(1) across iterations.
+    * Runs on [[graphRounds]]: one shuffle builds the graph blocks, then
+    * each iteration is one shuffle and one job. Endpoints are integral
+    * ids; the result is (node, r) as bigint.
     */
   def pageRankPortable(edges: DataFrame, iters: Int,
                        dampingPct: Int = 85,
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(dampingPct >= 0 && dampingPct <= 100, s"bad dampingPct: $dampingPct")
-    val g = graph(edges, reliableCheckpoint)
-    val (state0, base) = prStart(g, dampingPct, reliableCheckpoint)
-    var state = state0
-    for (_ <- 0 until iters) {
-      state = ckpt(prRound(g.e, state, g.side, base, dampingPct),
-        eager = false, reliable = reliableCheckpoint)
+    graphRounds(edges, iters, reliableCheckpoint, "pageRankPortable") { n =>
+      val scale = 1000000000L
+      require(n > 0, "empty graph")
+      require(n <= scale,
+        s"pageRankPortable: $n nodes exceeds the 10^9 nano-mass scale — " +
+          "initial ranks would truncate to zero; shard the graph or use pageRank")
+      PageRank(scale / n, (scale * (100 - dampingPct) / 100) / n, dampingPct)
     }
-    state.select("node", "r")
   }
-
-  /** What [[pageRankPortable]] and [[labelPropagation]] start from — and
-    * what PlanDump's round fragments plan over: the distinct (src, dst)
-    * edges and the node set, both checkpointed lazily, the node count
-    * `n`, and the side the per-round O(V) state joins the edges under.
-    */
-  private[graft] final case class Graph(e: DataFrame, nodes: DataFrame, n: Long,
-                                        side: DataFrame => DataFrame)
-
-  private[graft] def graph(edges: DataFrame, reliable: Boolean): Graph = {
-    // the deduped O(E) edges checkpoint once, BEFORE fan-out (the degree
-    // aggregate, both sides of the node union), carrying only (src, dst):
-    // round 11 measured a deg-on-every-edge form going super-linear at
-    // 100M edges. Lazy (see ckpt): `nodes.count()` materializes e→nodes
-    // in one job, and each round inside its first consuming stage
-    val e = ckpt(edges.toDF("src", "dst").distinct(), false, reliable)
-    val nodes = ckpt(e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct(), false, reliable)
-    val n = nodes.count()
-    // nodes ≪ edges, so the state rides to the edges while it fits an
-    // executor; the counted n decides that with no further job
-    Graph(e, nodes, n, Joins.boundedBroadcast(_, Some(n)))
-  }
-
-  /** [[pageRankPortable]]'s initial state (node, r, deg) and the teleport
-    * base every round adds.
-    */
-  private[graft] def prStart(g: Graph, dampingPct: Int, reliable: Boolean)
-      : (DataFrame, Long) = {
-    val scale = 1000000000L
-    require(g.n > 0, "empty graph")
-    require(g.n <= scale,
-      s"pageRankPortable: ${g.n} nodes exceeds the 10^9 nano-mass scale — " +
-        "initial ranks would truncate to zero; shard the graph or use pageRank")
-    val deg = g.e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // deg rides the checkpointed state, joined ONCE: a per-round ranks⋈deg
-    // join over stat-less LogicalRDDs planned as a SortMergeJoin with two
-    // O(V) exchanges and sorts every round (plans/r17/q199_round_before.txt
-    // ops 7-13). Nodes without out-edges carry NULL.
-    val state = ckpt(g.nodes
-      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), lit(scale / g.n).as("r"), col("deg")),
-      false, reliable)
-    (state, (scale * (100 - dampingPct) / 100) / g.n)
-  }
-
-  /** Per-source contribution mass `r div deg` — a pure PROJECTION over the
-    * iteration state (node, r, deg): identical integer values to the old
-    * ranks⋈deg inner join (deg is NULL exactly where that join dropped the
-    * row — nodes with no out-edges), with the per-round join and its two
-    * O(V) exchanges removed (see [[pageRankPortable]]'s state comment).
-    */
-  private[graft] def perSrcContribution(state: DataFrame): DataFrame =
-    state.filter(col("deg").isNotNull)
-      .select(col("node").as("src"), expr("r div deg").as("c"))
-
-  /** One FULL [[pageRankPortable]] round: bare (src, dst) edges ⋈ the O(V)
-    * per-source mass, then ONE partial+final aggregation by destination
-    * that also folds the old state⋈contribution LEFT join in (r18): the
-    * state rides the contribution exchange as zero-contribution rows —
-    * `sum(c)` over {contributions ∪ 0} equals the old
-    * `coalesce(s, 0)` (exact long arithmetic, order-free), and `max(deg)`
-    * recovers each node's degree from its single state row (contribution
-    * rows carry NULL deg; max ignores NULLs, so a sink node's NULL deg
-    * stays NULL). Deletes the per-round O(V) contribution broadcast
-    * (collect + replicate) — or, in the shuffle regime, a full O(V)
-    * shuffle join — per iteration. Factored out so the plan audit can pin
-    * the iteration's physical shape (join strategy, partial aggregation)
-    * directly — the loop's checkpoints erase it.
-    */
-  private[graft] def prRound(e: DataFrame, state: DataFrame,
-                             side: DataFrame => DataFrame,
-                             base: Long, dampingPct: Int): DataFrame =
-    e.join(side(perSrcContribution(state)), "src")
-      .select(col("dst").as("node"), col("c"), lit(null).cast("long").as("deg"))
-      .unionByName(state.select(col("node"), lit(0L).as("c"), col("deg")))
-      .groupBy("node")
-      .agg(sum("c").as("__s"), max("deg").as("deg"))
-      .select(col("node"),
-        (lit(base) + expr(s"($dampingPct * __s) div 100")).as("r"),
-        col("deg"))
 
   /** Synchronous label propagation (community detection): every node
     * starts as its own community; each round it adopts the most frequent
@@ -241,84 +172,307 @@ object Matrix {
     * pick `iters` as the community resolution dial, not a convergence
     * guarantee (standard for sync LPA).
     *
-    * Scale shape per round: one edges⋈labels join, one (node, label)
-    * partial-aggregated count, one per-node hash-aggregated argmax whose
-    * exchange also carries the keep-own-label fallback as zero-count
-    * self-votes (no per-round winner join — see [[lpaRound]]),
-    * localCheckpoint for O(1) lineage.
+    * Runs on [[graphRounds]] like [[pageRankPortable]]; the result is
+    * (node, label) as bigint.
     */
   def labelPropagation(edges: DataFrame, iters: Int,
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val g = graph(edges, reliableCheckpoint)
-    var labels = g.nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 0 until iters) {
-      labels = ckpt(lpaRound(g.e, labels, g.side),
-        eager = false, reliable = reliableCheckpoint)
-    }
-    labels
+    graphRounds(edges, iters, reliableCheckpoint, "labelPropagation")(_ => Lpa)
   }
 
-  /** One [[labelPropagation]] round: argmax(count) with min-label ties as
-    * a MIN of the order-preserving decimal scalar — two partial-aggregating
-    * stages, no window, and (r18) NO per-round winner⋈labels join: the
-    * keep-own-label fallback rides the election aggregation as a zero-count
-    * SELF-VOTE unioned under the final min. Factored out for the plan
-    * audit (the loop's checkpoints erase iteration plans).
+  /** What one [[graphRounds]] iteration computes: every node sends
+    * messages along its distinct out-edges, keyed by (target, key) and
+    * summed, and each block's next state follows from its previous state
+    * and its merged messages.
     */
-  /** 2^64 / 2^63 as exact decimal literals for [[lpaRound]]'s argmax
-    * linearization, and the count ceiling the decimal(38,0) headroom
-    * allows: |ord| ≤ (cnt+1)·2^64 must stay below 10^38, so cnt ≤
-    * ~5.42·10^18 — guarded LOUDLY per (node,label) group because Spark's
-    * non-ANSI decimal overflow is a silent NULL, which would elect a
-    * wrong winner instead of failing.
-    */
-  private val OrdL = new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(64))
-  private val OrdHalf = new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(63))
-  private val MaxEncodableCount = 5000000000000000000L // 5e18 < (10^38/2^64 − 1)
+  private sealed trait GraphRound extends Serializable {
+    def outCol: String
+    /** whether a message carries a key beside its target */
+    def keyed: Boolean
+    def init(node: Long): Long
+    /** adds the messages of a node in state `x` over its out-edges
+      * `dsts(from until to)`, never empty, to `m`
+      */
+    def send(x: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit
+    def update(s: NodeState, m: PairSums): Array[Long]
+  }
 
-  private[graft] def lpaRound(e: DataFrame, labels: DataFrame,
-                              side: DataFrame => DataFrame): DataFrame = {
-    // argmax(count) with min-label ties as min over the order-preserving
-    // scalar ord = (−cnt)·2^64 + (label + 2^63): lexicographic (−cnt,
-    // label) order equals numeric ord order because label + 2^63 ∈
-    // [0, 2^64) for every signed-long label. The r17 before-plan's
-    // min(struct(−cnt, label)) form planned as a SortAggregate (struct
-    // buffers are not hash-aggregable) — two keyed sorts of the collapsed
-    // (node, label, cnt) relation per round; the decimal(38,0) scalar is
-    // hash-aggregable (partial_min pins still green) and measured 0.53 s
-    // vs 0.69 s per round at sf0.1 (OPTIMIZATION_r17.md). All decimal
-    // arithmetic here is exact integer arithmetic within the guarded
-    // range, so the elected winner — and every q201 oracle hash — is
-    // bit-identical to the struct form.
-    val guardedCnt = when(col("cnt") > MaxEncodableCount,
-      raise_error(concat(lit("lpaRound: per-(node,label) count "), col("cnt"),
-        lit(s" exceeds the decimal(38,0)-encodable ceiling $MaxEncodableCount"))))
-      .otherwise(col("cnt"))
-    val ord = (guardedCnt.cast("decimal(38,0)") * lit(-1) * lit(OrdL)) +
-      (col("label").cast("decimal(38,0)") + lit(OrdHalf))
-    val votes = e.join(side(labels.withColumnRenamed("node", "src")), "src")
-      .groupBy(col("dst").as("node"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("node"), ord.cast("decimal(38,0)").as("__ord"))
-    // keep-own-label fallback as a zero-count SELF-VOTE (r18): ord with
-    // cnt = 0 is label + 2^63 ∈ [0, 2^64) — nonnegative, while every real
-    // vote (cnt ≥ 1) has ord ≤ −2^64 + (2^64 − 1) < 0, so the self-vote
-    // wins the min exactly when the node has no in-neighbors and decodes
-    // to the node's current label bit-for-bit (pmod(label + 2^63, 2^64) −
-    // 2^63 = label for every signed long). This replaces the old per-round
-    // winner⋈labels LEFT join + coalesce: one O(V) broadcast (collect +
-    // replicate) — or, in the shuffle regime, one O(V) shuffle join — per
-    // round deleted; the O(V) self-vote rows ride the election exchange's
-    // partial min instead.
-    val selfVotes = labels.select(col("node"),
-      (col("label").cast("decimal(38,0)") + lit(OrdHalf))
-        .cast("decimal(38,0)").as("__ord"))
-    votes.unionByName(selfVotes)
-      .groupBy("node")
-      .agg(min(col("__ord")).as("__m"))
-      .select(col("node"),
-        (pmod(col("__m"), lit(OrdL)) - lit(OrdHalf)).cast("long").as("label"))
+  /** r div deg to each out-neighbor; r' = base + (pct·s) div 100 */
+  private final case class PageRank(r0: Long, base: Long, pct: Int) extends GraphRound {
+    val outCol = "r"
+    val keyed = false
+    def init(node: Long): Long = r0
+    def send(r: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit = {
+      val c = r / (to - from)
+      // a zero contribution adds nothing to any sum
+      if (c != 0) for (j <- from until to) m.add(dsts(j), 0L, c)
+    }
+    def update(s: NodeState, m: PairSums): Array[Long] = {
+      val sum = new Array[Long](s.nodes.length)
+      m.foreach { (dst, _, c) => val i = s.index(dst); sum(i) = Math.addExact(sum(i), c) }
+      sum.map(x => Math.addExact(base, Math.multiplyExact(pct.toLong, x) / 100))
+    }
+  }
+
+  /** one vote (dst, label) per out-edge; the most votes win, ties to the
+    * smaller label, and a node with no in-votes keeps its label
+    */
+  private case object Lpa extends GraphRound {
+    val outCol = "label"
+    val keyed = true
+    def init(node: Long): Long = node
+    def send(label: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit =
+      for (j <- from until to) m.add(dsts(j), label, 1L)
+    def update(s: NodeState, m: PairSums): Array[Long] = {
+      val label = s.v.clone()
+      val best = new Array[Long](label.length)
+      m.foreach { (dst, l, cnt) =>
+        val i = s.index(dst)
+        if (cnt > best(i) || (cnt == best(i) && l < label(i))) { best(i) = cnt; label(i) = l }
+      }
+      label
+    }
+  }
+
+  /** The graph block of node `id` among `p` blocks. */
+  private[graft] def blockOf(id: Long, p: Int): Int =
+    java.lang.Math.floorMod(java.lang.Long.hashCode(id * 0x9E3779B97F4A7C15L), p)
+
+  /** One block of the graph: the sorted ids of its nodes and their
+    * distinct out-edges in CSR form (node i's targets are
+    * `dsts(offsets(i) until offsets(i + 1))`, sorted).
+    */
+  private final case class GraphBlock(nodes: Array[Long], offsets: Array[Int], dsts: Array[Long])
+
+  /** One block's state, aligned with its node array. */
+  private final case class NodeState(nodes: Array[Long], v: Array[Long]) {
+    def index(node: Long): Int = {
+      val i = java.util.Arrays.binarySearch(nodes, node)
+      require(i >= 0, s"node $node reached a graph block that does not hold it")
+      i
+    }
+  }
+
+  /** A build record: one input partition's edges for a block (src, dst)
+    * and the dst ids that hash to it.
+    */
+  private final case class EdgeChunk(src: Array[Long], dst: Array[Long], ids: Array[Long])
+
+  /** A round record: one map task's summed messages for a block; `key`
+    * is null when the round's messages carry none.
+    */
+  private final case class Msgs(dst: Array[Long], key: Array[Long], v: Array[Long])
+
+  /** The (a, b, sum) visitor of [[PairSums.foreach]], on primitives. */
+  private trait EntryFn { def apply(a: Long, b: Long, v: Long): Unit }
+
+  /** Open-addressing (a, b) → sum map on primitive arrays: a round's
+    * map-side combiner and its reduce-side merge. Sums are exact.
+    */
+  private final class PairSums {
+    private var mask = 63
+    private var ka = new Array[Long](64)
+    private var kb = new Array[Long](64)
+    private var vs = new Array[Long](64)
+    private var used = new Array[Boolean](64)
+    private var size = 0
+
+    def add(a: Long, b: Long, x: Long): Unit = {
+      val h = (a * 0x9E3779B97F4A7C15L + b) * 0xC2B2AE3D27D4EB4FL
+      var i = (h ^ (h >>> 32)).toInt & mask
+      while (used(i) && (ka(i) != a || kb(i) != b)) i = (i + 1) & mask
+      if (used(i)) vs(i) = Math.addExact(vs(i), x)
+      else {
+        used(i) = true; ka(i) = a; kb(i) = b; vs(i) = x; size += 1
+        if (size * 2 > mask) grow()
+      }
+    }
+
+    private def grow(): Unit = {
+      val (oa, ob, ov, ou) = (ka, kb, vs, used)
+      mask = mask * 2 + 1
+      ka = new Array[Long](mask + 1); kb = new Array[Long](mask + 1)
+      vs = new Array[Long](mask + 1); used = new Array[Boolean](mask + 1)
+      size = 0
+      for (i <- ou.indices if ou(i)) add(oa(i), ob(i), ov(i))
+    }
+
+    def foreach(f: EntryFn): Unit =
+      for (i <- 0 to mask if used(i)) f(ka(i), kb(i), vs(i))
+
+    def addAll(m: Msgs): Unit =
+      for (j <- m.dst.indices) add(m.dst(j), if (m.key == null) 0L else m.key(j), m.v(j))
+
+    /** the entries as one record per target block of `a` */
+    def byBlock(p: Int, keyed: Boolean): Iterator[(Int, Msgs)] = {
+      val n = new Array[Int](p)
+      foreach((a, _, _) => n(blockOf(a, p)) += 1)
+      val out = n.map(k => Msgs(new Array[Long](k), if (keyed) new Array[Long](k) else null,
+        new Array[Long](k)))
+      java.util.Arrays.fill(n, 0)
+      foreach { (a, b, v) =>
+        val k = blockOf(a, p)
+        val j = n(k)
+        out(k).dst(j) = a; if (keyed) out(k).key(j) = b; out(k).v(j) = v
+        n(k) = j + 1
+      }
+      Iterator.range(0, p).filter(out(_).dst.nonEmpty).map(k => (k, out(k)))
+    }
+  }
+
+  /** The build's map side: this partition's edges by the block of their
+    * src, and their dst ids by the block of the dst.
+    */
+  private def edgeChunks(rows: Iterator[InternalRow], p: Int, name: String)
+      : Iterator[(Int, EdgeChunk)] = {
+    val src = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
+    val dst = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
+    val ids = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
+    rows.foreach { r =>
+      require(!r.isNullAt(0), s"$name: an edge has a NULL src")
+      require(!r.isNullAt(1), s"$name: an edge has a NULL dst")
+      val (s, d) = (r.getLong(0), r.getLong(1))
+      val k = blockOf(s, p)
+      src(k) += s; dst(k) += d; ids(blockOf(d, p)) += d
+    }
+    Iterator.range(0, p).map(k => (k, EdgeChunk(src(k).result(), dst(k).result(), ids(k).result())))
+      .filter { case (_, c) => c.src.nonEmpty || c.ids.nonEmpty }
+  }
+
+  /** The build's reduce side: one block from its edge chunks. */
+  private def assemble(chunks: Array[EdgeChunk]): GraphBlock = {
+    val m = chunks.iterator.map(c => c.src.length.toLong + c.ids.length).sum
+    require(m < Int.MaxValue,
+      s"a graph block receives $m ids; raise spark.sql.shuffle.partitions")
+    val nodes = sortedDistinct(Array.concat(chunks.toIndexedSeq.flatMap(c => Seq(c.src, c.ids)): _*))
+    // count, place and then sort and dedup each node's out-edges in place
+    val srcIdx = chunks.flatMap(_.src.map(java.util.Arrays.binarySearch(nodes, _)))
+    val offsets = new Array[Int](nodes.length + 1)
+    srcIdx.foreach(i => offsets(i + 1) += 1)
+    for (i <- nodes.indices) offsets(i + 1) += offsets(i)
+    val cursor = offsets.clone()
+    val dsts = new Array[Long](srcIdx.length)
+    var e = 0
+    for (c <- chunks; d <- c.dst) {
+      val i = srcIdx(e)
+      dsts(cursor(i)) = d; cursor(i) += 1; e += 1
+    }
+    var w = 0
+    for (i <- nodes.indices) {
+      val (from, to) = (offsets(i), offsets(i + 1))
+      java.util.Arrays.sort(dsts, from, to)
+      offsets(i) = w
+      for (j <- from until to) {
+        if (w == offsets(i) || dsts(w - 1) != dsts(j)) { dsts(w) = dsts(j); w += 1 }
+      }
+    }
+    offsets(nodes.length) = w
+    GraphBlock(nodes, offsets, java.util.Arrays.copyOf(dsts, w))
+  }
+
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    for (x <- a) if (n == 0 || a(n - 1) != x) { a(n) = x; n += 1 }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** `job`, with a task's failed require or overflow thrown as itself
+    * rather than as the job abort
+    */
+  private def unwrap[T](job: => T): T = try job catch {
+    case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] ||
+        e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause
+  }
+
+  /** The graph-block kernel of [[pageRankPortable]] and
+    * [[labelPropagation]], in the shape of Cubert's blocked matrix–vector
+    * products: the matrix is blocked once, and every round's vector blocks
+    * meet the matrix blocks where those live.
+    *
+    * Build, one shuffle: the endpoints, cast to bigint, leave SQL for their
+    * RDD. Each edge goes to block `blockOf(src, p)` and each dst id to
+    * `blockOf(dst, p)`, with p = `spark.sql.shuffle.partitions`. A
+    * [[GraphBlock]] holds the sorted ids of every node that hashes to it,
+    * sinks included, and their distinct out-edges. `n` is the sum of the
+    * block sizes, read in the job that materializes the blocks; `round(n)`
+    * is the iteration to run.
+    *
+    * A round, one shuffle and one job: each graph block zips with its state
+    * block and combines its messages map-side in a [[PairSums]], then emits
+    * one [[Msgs]] of primitive arrays per target block. The HashPartitioner
+    * on the block number (the identity on 0 until p) shuffles them; the zip
+    * must not keep the graph's partitioner, or Spark would take the
+    * messages as partitioned already and skip the shuffle. The reduce side
+    * merges them into the co-located state. No round runs a SQL query or a
+    * broadcast.
+    *
+    * Each state is checkpointed (`localCheckpoint`, or a persisted reliable
+    * `checkpoint` with `reliable`; see [[ckpt]]) and materialized, then the
+    * previous one is released. Everything else is released before
+    * returning, or on a failure, so the returned frame's state is the one
+    * RDD left persisted. Releases go through [[RddBridge]], so no round
+    * logs unpersist's checkpoint WARN.
+    *
+    * The arithmetic is `Math.*Exact`, so an overflow throws as ANSI Spark
+    * SQL does. A NULL endpoint throws an IllegalArgumentException naming src
+    * or dst; a non-integral endpoint type fails at the call.
+    */
+  private def graphRounds(edges: DataFrame, iters: Int, reliable: Boolean, name: String)
+                         (round: Long => GraphRound): DataFrame = {
+    val e = edges.toDF("src", "dst")
+    e.schema.foreach(f => require(
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
+      s"$name: ${f.name} must be an integral type, not ${f.dataType.sql}"))
+    val spark = e.sparkSession
+    require(!reliable || spark.sparkContext.getCheckpointDir.isDefined,
+      "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val part = new HashPartitioner(p)
+    val kept = mutable.ArrayBuffer.empty[RDD[_]]
+    def keep[T](rdd: RDD[T]): RDD[T] = {
+      if (reliable) { rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd.checkpoint() }
+      else rdd.localCheckpoint()
+      kept += rdd
+      rdd
+    }
+    var result: RDD[NodeState] = null
+    try {
+      val rows = e.select(col("src").cast("long"), col("dst").cast("long")).queryExecution.toRdd
+      val graph = keep(rows.mapPartitions(edgeChunks(_, p, name)).partitionBy(part)
+        .mapPartitions(it => Iterator(assemble(it.map(_._2).toArray)), preservesPartitioning = true))
+      val r = round(unwrap(graph.map(_.nodes.length.toLong).fold(0L)(_ + _)))
+      var state = graph.map(g => NodeState(g.nodes, g.nodes.map(r.init)))
+      for (i <- 1 to iters) {
+        val prev = state
+        state = keep(graph.zipPartitions(prev) { (g, s) => send(g.next(), s.next(), r, p) }
+          .partitionBy(part)
+          .zipPartitions(prev) { (msgs, s) =>
+            val m = new PairSums
+            msgs.foreach { case (_, x) => m.addAll(x) }
+            val cur = s.next()
+            Iterator(NodeState(cur.nodes, r.update(cur, m)))
+          })
+        unwrap(state.count())
+        if (i > 1) { RddBridge.release(prev); kept -= prev }
+      }
+      result = state
+      val out = state.mapPartitions(_.flatMap { s =>
+        Iterator.tabulate(s.nodes.length)(i => InternalRow(s.nodes(i), s.v(i)))
+      })
+      RddBridge.frame(spark, out, StructType(Seq(
+        StructField("node", LongType, nullable = false),
+        StructField(r.outCol, LongType, nullable = false))))
+    } finally kept.toList.filterNot(_ eq result).foreach(RddBridge.release)
+  }
+
+  /** A round's map side: one graph block's messages, combined. */
+  private def send(g: GraphBlock, s: NodeState, r: GraphRound, p: Int): Iterator[(Int, Msgs)] = {
+    val m = new PairSums
+    for (i <- g.nodes.indices if g.offsets(i + 1) > g.offsets(i))
+      r.send(s.v(i), g.dsts, g.offsets(i), g.offsets(i + 1), m)
+    m.byBlock(p, r.keyed)
   }
 
   /** k-core decomposition by iterative peeling: repeatedly drop nodes with

@@ -43,18 +43,18 @@ class MatrixSpec extends SparkSpec {
   }
 
   test("pageRankPortable: exact integer fixpoint on the 2-cycle, agrees with float ranking") {
-    // a ⇄ b in nano-mass: r0 = 5e8 each; every iteration keeps
+    // 1 ⇄ 2 in nano-mass: r0 = 5e8 each; every iteration keeps
     // 75e6 + (85 * 5e8) div 100 = 5e8 exactly — an integer fixpoint
-    val cyc = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
+    val cyc = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
     val r2 = Matrix.pageRankPortable(cyc, iters = 5).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(r2 == Map("a" -> 500000000L, "b" -> 500000000L), r2.toString)
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(r2 == Map(1L -> 500000000L, 2L -> 500000000L), r2.toString)
     // on a non-trivial graph the integer variant must rank like the float one
-    val tri = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a")).toDF("src", "dst")
+    val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val fOrder = Matrix.pageRank(tri, iters = 20).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).sortBy(-_._2).map(_._1).toSeq
+      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(-_._2).map(_._1).toSeq
     val qOrder = Matrix.pageRankPortable(tri, iters = 20).collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(-_._2).map(_._1).toSeq
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._2).map(_._1).toSeq
     assert(fOrder == qOrder, s"float $fOrder vs integer $qOrder")
     // floors only ever LOSE mass: total stays within 1e-6 of 1
     val total = Matrix.pageRankPortable(tri, iters = 20).collect().map(_.getLong(1)).sum
@@ -62,56 +62,84 @@ class MatrixSpec extends SparkSpec {
   }
 
   test("pageRankPortable: sink nodes ride the state with NULL degree (r17 deg-in-state)") {
-    // a → b, b dangling: deg(b) is NULL in the state tuple — the r17
-    // rewrite must treat it exactly like the old ranks⋈deg INNER join
-    // (b contributes nothing, keeps collecting base + damped-in mass).
+    // 1 → 2, 2 dangling: 2 has no out-edges, so it contributes nothing
+    // and keeps collecting base + damped-in mass.
     // Hand-unrolled: n=2, base=75e6, r0=5e8 each.
-    //   iter1: a = base = 75e6;               b = base + (85·(5e8 div 1)) div 100 = 5e8
-    //   iter2: a = base = 75e6;               b = base + (85·(75e6 div 1)) div 100 = 138,750,000
-    val g = Seq(("a", "b")).toDF("src", "dst")
+    //   iter1: 1 = base = 75e6;               2 = base + (85·(5e8 div 1)) div 100 = 5e8
+    //   iter2: 1 = base = 75e6;               2 = base + (85·(75e6 div 1)) div 100 = 138,750,000
+    val g = Seq((1L, 2L)).toDF("src", "dst")
     val r = Matrix.pageRankPortable(g, iters = 2).collect()
-      .map(x => (x.getString(0), x.getLong(1))).toMap
-    assert(r == Map("a" -> 75000000L, "b" -> 138750000L), r.toString)
+      .map(x => (x.getLong(0), x.getLong(1))).toMap
+    assert(r == Map(1L -> 75000000L, 2L -> 138750000L), r.toString)
   }
 
-  test("lpaRound: decimal-linearized argmax == min(struct) reference, extreme labels included") {
-    // the r17 ord = (−cnt)·2^64 + (label + 2^63) encoding must elect the
-    // struct form's winner for EVERY signed-long label, ties to min label
-    val rnd = new scala.util.Random(17)
-    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue)
-    val labelPool = extremes ++ Seq.fill(40)(rnd.nextLong())
-    // edges: dst 0..9, each with 3-8 in-neighbors whose labels draw from
-    // the pool (duplicate labels → count ties broken by min label)
-    val rows = (0L to 9L).flatMap { dst =>
-      Seq.fill(3 + rnd.nextInt(6))((labelPool(rnd.nextInt(labelPool.size)), dst))
+  /** Plain-Scala replays of [[Matrix.pageRankPortable]] and
+    * [[Matrix.labelPropagation]] over an edge list: distinct edges, nodes
+    * = src ∪ dst, one synchronous integer round per iteration.
+    */
+  private def refPageRank(edges: Seq[(Long, Long)], iters: Int, pct: Int = 85): Map[Long, Long] = {
+    val e = edges.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
+    val n = nodes.size.toLong
+    val deg = e.groupBy(_._1).map { case (v, out) => v -> out.size.toLong }
+    val base = (1000000000L * (100 - pct) / 100) / n
+    var r = nodes.map(_ -> 1000000000L / n).toMap
+    for (_ <- 1 to iters) {
+      val s = e.groupBy(_._2).map { case (v, in) => v -> in.map(x => r(x._1) / deg(x._1)).sum }
+      r = nodes.map(v => v -> (base + pct * s.getOrElse(v, 0L) / 100)).toMap
     }
-    // node ids double as labels (labels = identity map on src ∪ dst — the
-    // loop invariant: labelPropagation always carries EVERY node, so a
-    // round's vote targets are a subset of the labeled nodes)
-    val e = rows.toDF("src", "dst")
-    val labels = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-      .select(col("node"), col("node").as("label"))
-    val got = Matrix.lpaRound(e, labels, identity).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // reference = the pre-r18 round: struct-min winner election LEFT-joined
-    // back onto labels with the keep-own-label coalesce (lpaRound now
-    // folds that join into the election as a zero-count self-vote)
-    val winner = e.join(labels.withColumnRenamed("node", "src"), "src")
-      .groupBy(col("dst").as("node"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy("node")
-      .agg(min(struct((-col("cnt")).as("nc"), col("label"))).as("__w"))
-      .select(col("node"), col("__w.label").as("__new"))
-    val want = labels.join(winner, Seq("node"), "left")
-      .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want, s"decimal argmax diverges: $got vs $want")
-    // the label column stays non-null across the extremes (a decimal
-    // overflow would surface as NULL under non-ANSI semantics — the
-    // count-ceiling guard exists precisely so that can never be silent)
-    assert(Matrix.lpaRound(e, labels, identity)
-      .filter(col("label").isNull).isEmpty, "NULL winner — silent overflow")
+    r
+  }
+
+  private def refLabels(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val e = edges.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
+    var l = nodes.map(v => v -> v).toMap
+    for (_ <- 1 to iters) {
+      val won = e.groupBy(_._2).map { case (v, in) =>
+        v -> in.groupBy(x => l(x._1)).toSeq.map { case (lab, vs) => (-vs.size, lab) }.min._2
+      }
+      l = nodes.map(v => v -> won.getOrElse(v, l(v))).toMap
+    }
+    l
+  }
+
+  private def rows(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `body` with `spark.sql.shuffle.partitions` — the graph's block count — at `p` */
+  private def withBlocks[T](p: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("graph kernel equals a plain-Scala replay at p = 1, 3 and 4") {
+    // sinks (7, 8, Long.MaxValue), duplicate edges, self-loops (5, 9),
+    // extreme ids, and in-label ties that the smaller label must win
+    val rnd = new scala.util.Random(9)
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue)
+    val fixed = Seq((1L, 2L), (1L, 2L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 5L), (5L, 6L),
+      (6L, 7L), (6L, 8L), (9L, 9L), (9L, 9L), (Long.MinValue, 6L), (-1L, 6L),
+      (Long.MinValue, Long.MaxValue), (Long.MaxValue - 1, Long.MinValue + 1),
+      (Long.MinValue + 1, Long.MaxValue - 1), (0L, Long.MinValue))
+    val random = Seq.fill(120)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)) ++
+      Seq.fill(20)((extremes(rnd.nextInt(6)), rnd.nextInt(30).toLong))
+    // two nodes in one block: at p = 3 and 4 the other blocks hold none
+    val mate = Iterator.from(17).map(_.toLong).find(y => Seq(3, 4).forall(p =>
+      Matrix.blockOf(y, p) == Matrix.blockOf(16L, p))).get
+    val pair = Seq((16L, mate), (mate, 16L))
+    for (edges <- Seq(fixed, random, pair); p <- Seq(1, 3, 4)) withBlocks(p) {
+      val df = edges.toDF("src", "dst")
+      for (iters <- Seq(1, 3)) {
+        assert(rows(Matrix.pageRankPortable(df, iters)) == refPageRank(edges, iters),
+          s"pageRankPortable at p = $p, $iters iterations")
+      }
+      for (iters <- Seq(1, 4)) {
+        assert(rows(Matrix.labelPropagation(df, iters)) == refLabels(edges, iters),
+          s"labelPropagation at p = $p, $iters iterations")
+      }
+    }
   }
 
   test("transpose swaps coordinates and spMV broadcasts the vector") {
@@ -152,45 +180,43 @@ class MatrixSpec extends SparkSpec {
     assert(Matrix.kCore(edges, k = 5, maxIter = 10).count() == 0)
   }
 
-  test("graph rounds plan with or without the state broadcast; answers unchanged") {
-    def undirected(pairs: (Long, Long)*) =
-      (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
-    val g = undirected((1L, 2L), (1L, 3L), (2L, 3L),
-      (10L, 11L), (10L, 12L), (11L, 12L), (3L, 10L))
-    // plan pin on the iteration shape itself (the loop's checkpoints erase
-    // per-iteration plans): the identity side leaves the contribution join
-    // with NO BroadcastExchange, the broadcast side gives it one (which side
-    // a node count picks is Joins.boundedBroadcast's, pinned in JoinsSpec).
-    // AQE's size-based auto-broadcast is disabled so the pin tests the
-    // side, not the optimizer's small-table shortcut.
-    val deg = g.groupBy("src").agg(count(lit(1)).as("deg"))
-    val state = g.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(100L).as("r"))
-      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), col("r"), col("deg"))
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val shuffleSide: DataFrame => DataFrame = identity
-      val pShuffle = Matrix.prRound(g, state, shuffleSide, base = 100L, dampingPct = 85)
-      pShuffle.queryExecution.toRdd.foreach(_ => ())
-      val planS = pShuffle.queryExecution.executedPlan.toString
-      assert(!planS.contains("BroadcastExchange"),
-        s"the identity side still broadcasts:\n$planS")
-      val bcastSide: DataFrame => DataFrame = broadcast(_)
-      val pBcast = Matrix.prRound(g, state, bcastSide, base = 100L, dampingPct = 85)
-      pBcast.queryExecution.toRdd.foreach(_ => ())
-      val planB = pBcast.queryExecution.executedPlan.toString
-      assert(planB.contains("BroadcastExchange"),
-        s"the broadcast side should broadcast the rank side:\n$planB")
-      // either side gives one round the same rows
-      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-      val pr = rows(pShuffle)
-      assert(pr.size == 6 && pr == rows(pBcast), s"$pr vs ${rows(pBcast)}")
-      val labels = state.select(col("node"), col("node").as("label"))
-      assert(rows(Matrix.lpaRound(g, labels, shuffleSide)) ==
-        rows(Matrix.lpaRound(g, labels, bcastSide)))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+  test("graph kernel carries messages to targets in other blocks") {
+    // every edge crosses blocks at p = 4, so every message must take the
+    // round's shuffle: a round whose messages stayed in the sender's
+    // block would reach none of its targets
+    val a = (0L until 40L).filter(Matrix.blockOf(_, 4) == 0)
+    val b = (0L until 40L).filter(Matrix.blockOf(_, 4) == 1)
+    val edges = a.zip(b).flatMap { case (x, y) => Seq((x, y), (y, x), (x, b.head)) }
+    assert(edges.forall { case (s, d) => Matrix.blockOf(s, 4) != Matrix.blockOf(d, 4) })
+    withBlocks(4) {
+      val df = edges.toDF("src", "dst")
+      assert(rows(Matrix.pageRankPortable(df, 2)) == refPageRank(edges, 2))
+      assert(rows(Matrix.labelPropagation(df, 3)) == refLabels(edges, 3))
+    }
+  }
+
+  test("graph loops reject NULL and non-integral endpoints and keep nothing") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val nullSrc = Seq[(Option[Long], Long)]((Some(1L), 2L), (None, 1L)).toDF("src", "dst")
+    val e1 = intercept[IllegalArgumentException](Matrix.pageRankPortable(nullSrc, 1))
+    assert(e1.getMessage.contains("NULL src"), e1.getMessage)
+    val nullDst = Seq[(Long, Option[Long])]((1L, Some(2L)), (2L, None)).toDF("src", "dst")
+    val e2 = intercept[IllegalArgumentException](Matrix.labelPropagation(nullDst, 1))
+    assert(e2.getMessage.contains("NULL dst"), e2.getMessage)
+    assert(sc.getPersistentRDDs.keySet.forall(before), "a rejected input left RDDs persisted")
+    // ints are ids; strings and doubles are not
+    assert(rows(Matrix.labelPropagation(Seq((1, 2)).toDF("src", "dst"), 1)) ==
+      Map(1L -> 1L, 2L -> 1L))
+    val e3 = intercept[IllegalArgumentException](
+      Matrix.pageRankPortable(Seq(("a", "b")).toDF("src", "dst"), 1))
+    assert(e3.getMessage.contains("src must be an integral type"), e3.getMessage)
+    intercept[IllegalArgumentException](
+      Matrix.labelPropagation(Seq((1L, 2.0)).toDF("src", "dst"), 1))
+    // a consumed result holds its one state RDD, nothing more
+    val held = sc.getPersistentRDDs.keySet
+    Matrix.pageRankPortable(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), 3).collect()
+    assert(sc.getPersistentRDDs.keySet.count(!held(_)) <= 1, sc.getPersistentRDDs.toString)
   }
 
   test("reliableCheckpoint: iterative ops survive on a checkpoint dir, answers unchanged") {

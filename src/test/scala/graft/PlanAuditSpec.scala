@@ -994,18 +994,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(mmr == ((9, 2)), s"q209 (jobs, SQL executions) = $mmr, budget (9, 2)")
   }
 
-  test("broadcast decisions start no job where the size estimate decides (q199/q201/q30/q31/q135)") {
-    // budgets are the counts before the graph, dictionary and screen
-    // decisions moved into Joins.boundedBroadcast, zero tolerance: the
-    // graph loops decide from their counted nodes, and the dictionaries and
-    // the sf0.001 batch from the plan estimate. The tables resolve first
-    // (reading a parquet schema runs jobs of its own), and no other suite's
-    // cached relation may stand in for a scan.
+  test("graph loops: one job per round, no SQL execution in the loop, one RDD left (q199/q201)") {
+    // budgets are today's counts, build plus consume, zero tolerance: the
+    // edge query's two AQE stages, one job that builds the graph blocks,
+    // one job per round (5 for q199, 4 for q201) and the consume's one job,
+    // whose write is the one SQL execution. Afterwards only the returned
+    // frame's state RDD is still persisted. The tables resolve first
+    // (reading a parquet schema runs jobs of its own).
+    spark.catalog.clearCache()
+    Seq("orders", "lineitem").foreach(Tables.load(spark, dir, _))
+    val sc = spark.sparkContext
+    Seq("q199_pagerank" -> ((9, 1)), "q201_label_prop" -> ((8, 1))).foreach {
+      case (q, budget) =>
+        val before = sc.getPersistentRDDs.keySet
+        val got = buildAndConsume(q)
+        assert(got == budget, s"$q (jobs, SQL executions) = $got, budget $budget")
+        val left = sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
+        assert(left.size <= 1, s"$q left ${left.values.mkString(", ")} persisted")
+    }
+  }
+
+  test("broadcast decisions start no job where the size estimate decides (q30/q31/q135)") {
+    // budgets are the counts before the dictionary and screen decisions
+    // moved into Joins.boundedBroadcast, zero tolerance: the dictionaries
+    // and the sf0.001 batch decide from the plan estimate. The tables
+    // resolve first (reading a parquet schema runs jobs of its own), and no
+    // other suite's cached relation may stand in for a scan.
     spark.catalog.clearCache()
     Seq("orders", "lineitem", "customer", "embeddings").foreach(Tables.load(spark, dir, _))
     def build(q: String) = SparkEntry.queries(q)(spark, dir)
-    val budgets = Seq("q199_pagerank" -> ((20, 10)), "q201_label_prop" -> ((19, 8)),
-      "q30_dict_encode" -> ((4, 1)), "q31_dict_roundtrip" -> ((5, 1)))
+    val budgets = Seq("q30_dict_encode" -> ((4, 1)), "q31_dict_roundtrip" -> ((5, 1)))
     budgets.foreach { case (q, budget) =>
       val got = buildAndConsume(q)
       assert(got == budget, s"$q (jobs, SQL executions) = $got, budget $budget")

@@ -273,38 +273,48 @@ class SkewStressSpec extends SparkSpec {
     assert(out.getAs[Double]("chi2") > 0.0 && !out.getAs[Double]("cramers_v").isNaN)
   }
 
+  /** `body`'s answer and the shuffle records its last shuffle-writing
+    * stage wrote: for a one-round graph loop, that round's messages.
+    */
+  private def lastShuffleRecords[T](body: => T): (T, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    @volatile var last = 0L
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val n = e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
+        if (n > 0) last = n
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerDrain(sc)
+      (out, last)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** at most one message record per (map block, target block) */
+  private def blocks: Long = spark.conf.get("spark.sql.shuffle.partitions").toLong
+
   test(s"pageRankPortable: a $Hot-in-degree hub node partial-aggregates map-side, exactly") {
     // a power-law graph at 100 TB guarantees a hub; here every one of the
-    // 10^5 source nodes points at node 0. The per-iteration groupBy(dst)
-    // must collapse the hub's contributions in a map-side partial sum —
-    // a per-edge window or unpartialed agg would funnel 10^5 rows into
-    // one reducer row-by-row.
+    // 10^5 source nodes points at node 0. Each block must sum the hub's
+    // contributions before the round's shuffle — one record per target
+    // block, never the raw 10^5 messages.
     val edges = spark.range(1, Hot + 1)
       .select(col("id").as("src"), lit(0L).as("dst"))
     // integer replay: n = 100001 nodes, r0 = 1e9 div n = 9999, teleport
     // base = (15e7) div n = 1499; after one iteration the hub holds
     // base + (85 · 10^5·9999) div 100 and every source holds base
-    val out = graft.operators.Matrix.pageRankPortable(edges, iters = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (out, records) = lastShuffleRecords(graft.operators.Matrix
+      .pageRankPortable(edges, iters = 1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val expectedHub = 1499L + (85L * (Hot.toLong * 9999L)) / 100L
     assert(out(0L) == expectedHub, s"hub rank ${out(0L)} != $expectedHub")
     assert(out(1L) == 1499L && out(Hot.toLong) == 1499L, out(1L).toString)
     assert(out.size == Hot + 1)
-    // plan pin: the contribution aggregate is partial+final (the exchange
-    // sees one row per (reducer, node), never the raw 10^5 hub rows)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val state = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(9999L).as("r"))
-      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), col("r"), col("deg"))
-    val contrib = graft.operators.Matrix.prRound(edges, state, identity,
-      base = 1499L, dampingPct = 85)
-    contrib.queryExecution.toRdd.foreach(_ => ())
-    val plan = contrib.queryExecution.executedPlan.toString
-    assert(plan.contains("partial_sum"),
-      s"hub contribution aggregate is not partial before the exchange:\n$plan")
-    assert(!plan.toLowerCase.contains("windowspecdefinition"),
-      s"window crept into the contribution round:\n$plan")
+    assert(records <= blocks * blocks, s"the round shuffled $records message records")
   }
 
   test(s"labelPropagation: a $Hot-in-degree hub resolves its label in partial aggregates") {
@@ -313,19 +323,38 @@ class SkewStressSpec extends SparkSpec {
     // one sync round: the hub adopts the minimum source label (all
     // neighbor labels tie at count 1 → min-label wins); sources have no
     // in-edges and keep their own labels
-    val out = graft.operators.Matrix.labelPropagation(edges, iters = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (out, records) = lastShuffleRecords(graft.operators.Matrix
+      .labelPropagation(edges, iters = 1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(out(0L) == 1L, s"hub label ${out(0L)} != 1")
     assert((1 to 5).forall(i => out(i.toLong) == i.toLong), out.take(5).toString)
-    // plan pin on the round: both stages (per-(node,label) count and the
-    // per-node argmax) partial-aggregate before their exchanges
-    val labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    val round = graft.operators.Matrix.lpaRound(edges, labels, identity)
-    round.queryExecution.toRdd.foreach(_ => ())
-    val plan = round.queryExecution.executedPlan.toString
-    assert(plan.contains("partial_count") && plan.contains("partial_min"),
-      s"LPA round stages are not partial-aggregated:\n$plan")
+    // the hub's 10^5 (hub, label) votes are distinct, so each block
+    // still ships them in one record per target block
+    assert(records <= blocks * blocks, s"the round shuffled $records message records")
+  }
+
+  test(s"graph loops: a $Hot-out-degree hub sends from one block, exactly") {
+    // a star both ways: node 0's 10^5 out-edges live in one graph block
+    // and fan out to every other block each round
+    val leaves = spark.range(1, Hot + 1)
+    val edges = leaves.select(lit(0L).as("src"), col("id").as("dst"))
+      .unionByName(leaves.select(col("id").as("src"), lit(0L).as("dst")))
+    // n = 100001, r0 = 9999, base = 1499. Round 1: the hub's share
+    // 9999 div 10^5 is 0, each leaf sends its 9999 to the hub. Round 2:
+    // the hub sends h1 div 10^5 to each leaf, each leaf sends base.
+    val h1 = 1499L + (85L * (Hot * 9999L)) / 100L
+    val (pr, records) = lastShuffleRecords(graft.operators.Matrix
+      .pageRankPortable(edges, iters = 2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(pr.size == Hot + 1)
+    val hub = 1499L + (85L * (Hot * 1499L)) / 100L
+    val leaf = 1499L + (85L * (h1 / Hot)) / 100L
+    assert(pr(0L) == hub, s"hub rank ${pr(0L)} != $hub")
+    assert((1L to Hot).forall(pr(_) == leaf), s"a leaf rank differs from $leaf")
+    assert(records <= blocks * blocks, s"the round shuffled $records message records")
+    // LPA: round 1 the hub takes the smallest leaf label and every leaf
+    // the hub's; round 2 they swap
+    val lpa = graft.operators.Matrix.labelPropagation(edges, iters = 2).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lpa(0L) == 0L && (1L to Hot).forall(lpa(_) == 1L), lpa.take(5).toString)
   }
 
   test(s"concurrency: $Hot intervals sharing one boundary collapse before the cumsum") {
