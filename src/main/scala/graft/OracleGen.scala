@@ -2008,9 +2008,9 @@ object OracleGen {
        |$pairs""".stripMargin
   }
 
-  /** Mirrors Matrix.kCore at a fixed peel depth: `rounds` nested
-    * degree-filter CTE pairs (peeling a converged subgraph is a no-op, so
-    * a converged operator result equals the fixed-round replay).
+  /** Mirrors Matrix.kCore, which also runs a fixed number of peels:
+    * `rounds` nested degree-filter CTE triples, then the degrees of the
+    * edges left.
     */
   def kCore(k: Int, rounds: Int): String = {
     // AS MATERIALIZED: DuckDB inlines CTEs by default, and each round

@@ -958,7 +958,7 @@ object Dedup {
     var edges = Matrix.ckpt(e0.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct(), false, reliableCheckpoint)
-    // carry the cardinality forward (the kCore idiom): `edges` was already
+    // carry the cardinality forward: `edges` was already
     // counted as `next` last round — re-counting it was a redundant job
     var eCount = edges.count()
     var i = 0

@@ -24,8 +24,9 @@ import org.apache.spark.storage.StorageLevel
   * operands with a shared bucket spec on `k`), and the (i,j) aggregation is
   * partial+final. Power-law graphs (hub columns) → AQE skew split or
   * `Joins.saltedJoin` on the same keys. The iterative integer graph
-  * loops keep Cubert's own shape instead: the graph is blocked once and
-  * each round's state blocks meet it where it lives ([[graphRounds]]).
+  * loops (integer PageRank, label propagation, k-core) keep Cubert's own
+  * shape instead: the graph is blocked once and each round's state blocks
+  * meet it where it lives ([[graphRounds]]).
   */
 object Matrix {
 
@@ -235,6 +236,23 @@ object Matrix {
     }
   }
 
+  /** One k-core peel: a node in state x >= 0 is alive and sends 1 to each
+    * neighbor. Of its summed count d, an alive node keeps d when d >= k and
+    * stores -(d + 2) when peeled now; a node peeled earlier stays at -1.
+    */
+  private final case class KCore(k: Int) extends GraphRound {
+    val outCol = "x"
+    val keyed = false
+    def init(node: Long): Long = 0L
+    def send(x: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit =
+      if (x >= 0) for (j <- from until to) m.add(dsts(j), 0L, 1L)
+    def update(s: NodeState, m: PairSums): Array[Long] = {
+      val d = new Array[Long](s.nodes.length)
+      m.foreach { (dst, _, c) => d(s.index(dst)) += c }
+      Array.tabulate(d.length)(i => if (s.v(i) < 0) -1L else if (d(i) >= k) d(i) else -(d(i) + 2))
+    }
+  }
+
   /** The graph block of node `id` among `p` blocks. */
   private[graft] def blockOf(id: Long, p: Int): Int =
     java.lang.Math.floorMod(java.lang.Long.hashCode(id * 0x9E3779B97F4A7C15L), p)
@@ -381,13 +399,13 @@ object Matrix {
   /** `job`, with a task's failed require or overflow thrown as itself
     * rather than as the job abort
     */
-  private def unwrap[T](job: => T): T = try job catch {
+  private[graft] def unwrap[T](job: => T): T = try job catch {
     case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] ||
         e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause
   }
 
-  /** The graph-block kernel of [[pageRankPortable]] and
-    * [[labelPropagation]], in the shape of Cubert's blocked matrix–vector
+  /** The graph-block kernel of [[pageRankPortable]], [[labelPropagation]]
+    * and [[kCore]], in the shape of Cubert's blocked matrix–vector
     * products: the matrix is blocked once, and every round's vector blocks
     * meet the matrix blocks where those live.
     *
@@ -475,52 +493,35 @@ object Matrix {
     m.byBlock(p, r.keyed)
   }
 
-  /** k-core decomposition by iterative peeling: repeatedly drop nodes with
-    * (current) degree < k until none remain or `maxIter` rounds ran —
-    * survivors are the k-core (if converged; pass maxIter ≥ the peel depth,
-    * which is ≤ the graph's degeneracy ordering length and in practice a
-    * handful of rounds). Emits (node, degree) of the surviving subgraph.
+  /** k-core decomposition by iterative peeling: each round drops the
+    * nodes of (current) degree < k, for `maxIter` rounds. The survivors
+    * are the k-core once the peel has converged (pass maxIter ≥ the peel
+    * depth; peeling a converged edge set changes nothing). Emits (node,
+    * degree) of the subgraph left after `maxIter` peels, for the nodes
+    * with a surviving edge; short of convergence that includes nodes of
+    * degree < k that the next peel would drop.
     *
-    * Each round is one degree aggregation + one semi-join, edges
-    * localCheckpoint-ed per round so the loop's lineage stays O(1) (same
-    * discipline as connected components). Shuffle volume shrinks
-    * monotonically — every round's edge set is a subset of the last.
+    * Runs on [[graphRounds]] ([[KCore]]) over the edges in both directions,
+    * self-loops dropped: `maxIter` peel rounds and one degree round, one
+    * job each, with no early exit. Endpoints are integral ids; the result
+    * is (node, degree) as bigint.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 10,
             reliableCheckpoint: Boolean = false): DataFrame = {
-    require(k >= 1 && maxIter >= 1, s"bad k=$k maxIter=$maxIter")
-    var e = ckpt(undirected(edges), false, reliableCheckpoint)
-    // carry the previous round's cardinality forward: `e` was already
-    // counted as `next` last round, so re-counting it is a redundant job
-    var eCount = e.count()
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val next = ckpt(peel(e, k), false, reliableCheckpoint)
-      val nextCount = next.count()
-      done = nextCount == eCount
-      e = next
-      eCount = nextCount
-      i += 1
-    }
-    e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
+    require(k >= 1 && maxIter >= 1 && maxIter < Int.MaxValue, s"bad k=$k maxIter=$maxIter")
+    // an edge with a NULL end is kept, so it reaches the kernel's check
+    val e = edges.toDF("u", "v").filter(coalesce(col("u") =!= col("v"), lit(true)))
+    val x = col("x")
+    graphRounds(e.union(e.select("v", "u")), maxIter + 1, reliableCheckpoint, "kCore")(_ => KCore(k))
+      .filter(x >= 0 || x <= -3)
+      .select(col("node"), when(x >= 0, x).otherwise(-(x + 2)).as("degree"))
   }
 
-  /** The simple undirected edge set (u < v) [[kCore]] and [[triangleCount]] run on. */
-  private[graft] def undirected(edges: DataFrame): DataFrame =
+  /** The simple undirected edge set (u < v) [[triangleCount]] runs on. */
+  private def undirected(edges: DataFrame): DataFrame =
     edges.toDF("u", "v").filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct()
-
-  /** One [[kCore]] round: keep the edges whose ends both have degree ≥ k. */
-  private[graft] def peel(e: DataFrame, k: Int): DataFrame = {
-    val keep = e.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d")).filter(col("d") >= k).select("n")
-    e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-      .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-      .select("u", "v")
-  }
 
   /** Exact triangle count via degree-ordered edge orientation (the
     * standard MapReduce-era algorithm): orient every undirected edge from

@@ -1,11 +1,12 @@
 package graft.similarity
 
-import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RddBridge
 import org.apache.spark.sql.types.{ArrayType, FloatType}
+
+import graft.operators.Matrix
 
 /** Similarity search over an embedding column (`Array[Float]`): brute-force
   * cosine top-k as the exact baseline, and a random-hyperplane LSH bucketed
@@ -521,14 +522,10 @@ object Similarity {
     try {
       while (picks.length < k) {
         val first = picks.isEmpty
-        val bests = try state.mapPartitions { it =>
+        val bests = Matrix.unwrap(state.mapPartitions { it =>
           it.filter(!_.sel).map(c => (obj.score(c.rel, c.acc, first), c.id, c.xq))
             .reduceOption(better).iterator
-        }.collect() catch {
-          // a task's failed require, as itself rather than as the job abort
-          case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
-            throw e.getCause
-        }
+        }.collect())
         if (prev != null) { RddBridge.release(prev); prev = null }
         require(bests.nonEmpty, s"${obj.name}: k=$k exceeds input size ${picks.length}")
         val (score, pickId, pick) = bests.reduce(better)

@@ -410,6 +410,17 @@ class BpeKmeansSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- held).isEmpty)
   }
 
+  test("selection kernels throw an overflow as an ArithmeticException") {
+    // 3e12 quantizes to 3e18, whose squared distance and dot product
+    // overflow a long
+    val sc = spark.sparkContext
+    val held = sc.getPersistentRDDs.keySet
+    val df = Seq((1L, Seq(3e12)), (2L, Seq(-3e12)), (3L, Seq(0.0))).toDF("vec_id", "embedding")
+    intercept[ArithmeticException](Similarity.kCenterGreedyPortable(df, 3))
+    intercept[ArithmeticException](Similarity.mmrSelectPortable(df, Seq(3e12), 2))
+    assert((sc.getPersistentRDDs.keySet -- held).isEmpty)
+  }
+
   test("selection kernels and their script ops release every RDD they persist") {
     import graft.script.ScriptEngine
     val sc = spark.sparkContext

@@ -104,6 +104,21 @@ class MatrixSpec extends SparkSpec {
     l
   }
 
+  /** A plain-Scala replay of [[Matrix.kCore]]: the simple undirected edge
+    * set, `maxIter` peels of every edge with an end of degree < k, and the
+    * degrees of the edges left.
+    */
+  private def refKCore(edges: Seq[(Long, Long)], k: Int, maxIter: Int): Map[Long, Long] = {
+    def degrees(e: Set[(Long, Long)]): Map[Long, Long] =
+      e.toSeq.flatMap { case (u, v) => Seq(u, v) }.groupBy(identity).map { case (v, s) => v -> s.size.toLong }
+    var e = edges.collect { case (u, v) if u != v => (u min v, u max v) }.toSet
+    for (_ <- 1 to maxIter) {
+      val d = degrees(e)
+      e = e.filter { case (u, v) => d(u) >= k && d(v) >= k }
+    }
+    degrees(e)
+  }
+
   private def rows(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -180,6 +195,31 @@ class MatrixSpec extends SparkSpec {
     assert(Matrix.kCore(edges, k = 5, maxIter = 10).count() == 0)
   }
 
+  test("kCore equals a plain-Scala peel replay at p = 1, 3 and 4") {
+    // random multigraphs with duplicates, self-loops and extreme ids; K5
+    // with a path 4-5-6-7-8-9 whose peel depth exceeds maxIter, so the
+    // answer holds path nodes of degree < k
+    val rnd = new scala.util.Random(10)
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue)
+    val random = Seq.fill(4)(Seq.fill(90)((rnd.nextInt(25).toLong - 5, rnd.nextInt(25).toLong - 5)))
+    val extreme = Seq.fill(60)((extremes(rnd.nextInt(6)), rnd.nextInt(8).toLong)) ++
+      (for (a <- extremes; b <- extremes) yield (a, b))
+    val k5 = for (i <- 0L to 4L; j <- 0L to 4L if i < j) yield (i, j)
+    val path = k5 ++ (4L to 8L).map(i => (i + 1, i))
+    val short = refKCore(path, k = 2, maxIter = 2)
+    assert(short.get(7L).contains(1L) && !short.contains(8L), short.toString)
+    for (p <- Seq(1, 3, 4)) withBlocks(p) {
+      val cases = random.flatMap(e => Seq((e, 3, 2), (e, 5, 6))) ++
+        Seq((extreme, 2, 1), (extreme, 3, 4), (path, 2, 2), (path, 3, 1), (path, 3, 3))
+      for ((edges, k, maxIter) <- cases) {
+        assert(rows(Matrix.kCore(edges.toDF("u", "v"), k, maxIter)) == refKCore(edges, k, maxIter),
+          s"kCore k = $k, maxIter = $maxIter at p = $p")
+      }
+      // k above every core
+      assert(Matrix.kCore(random.head.toDF("u", "v"), k = 40, maxIter = 3).collect().isEmpty)
+    }
+  }
+
   test("graph kernel carries messages to targets in other blocks") {
     // every edge crosses blocks at p = 4, so every message must take the
     // round's shuffle: a round whose messages stayed in the sender's
@@ -204,6 +244,11 @@ class MatrixSpec extends SparkSpec {
     val nullDst = Seq[(Long, Option[Long])]((1L, Some(2L)), (2L, None)).toDF("src", "dst")
     val e2 = intercept[IllegalArgumentException](Matrix.labelPropagation(nullDst, 1))
     assert(e2.getMessage.contains("NULL dst"), e2.getMessage)
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (None, None)).toDF("u", "v")
+    for (df <- Seq(nullSrc, nullDst, nulls)) {
+      val e = intercept[IllegalArgumentException](Matrix.kCore(df, k = 1))
+      assert(e.getMessage.matches(".*kCore: an edge has a NULL (src|dst)"), e.getMessage)
+    }
     assert(sc.getPersistentRDDs.keySet.forall(before), "a rejected input left RDDs persisted")
     // ints are ids; strings and doubles are not
     assert(rows(Matrix.labelPropagation(Seq((1, 2)).toDF("src", "dst"), 1)) ==
@@ -213,6 +258,8 @@ class MatrixSpec extends SparkSpec {
     assert(e3.getMessage.contains("src must be an integral type"), e3.getMessage)
     intercept[IllegalArgumentException](
       Matrix.labelPropagation(Seq((1L, 2.0)).toDF("src", "dst"), 1))
+    val e4 = intercept[IllegalArgumentException](Matrix.kCore(Seq(("a", "b")).toDF("u", "v"), k = 1))
+    assert(e4.getMessage.contains("must be an integral type"), e4.getMessage)
     // a consumed result holds its one state RDD, nothing more
     val held = sc.getPersistentRDDs.keySet
     Matrix.pageRankPortable(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), 3).collect()

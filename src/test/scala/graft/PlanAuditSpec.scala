@@ -995,16 +995,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("graph loops: one job per round, no SQL execution in the loop, one RDD left (q199/q201)") {
-    // budgets are today's counts, build plus consume, zero tolerance: the
-    // edge query's two AQE stages, one job that builds the graph blocks,
-    // one job per round (5 for q199, 4 for q201) and the consume's one job,
-    // whose write is the one SQL execution. Afterwards only the returned
-    // frame's state RDD is still persisted. The tables resolve first
-    // (reading a parquet schema runs jobs of its own).
+    // budgets are today's counts, build plus consume, zero tolerance: one
+    // job that builds the graph blocks, one job per round (9 for q159: 8
+    // peels and the degree round; 5 for q199, 4 for q201) and the
+    // consume's one job, whose write is the one SQL execution; q199 and
+    // q201 add their edge query's two AQE stages. q159's count was the
+    // same in 8 of 8 repeats. Afterwards only the returned frame's state
+    // RDD is still persisted. The tables resolve first (reading a parquet
+    // schema runs jobs of its own).
     spark.catalog.clearCache()
-    Seq("orders", "lineitem").foreach(Tables.load(spark, dir, _))
+    Seq("orders", "lineitem", "documents").foreach(Tables.load(spark, dir, _))
     val sc = spark.sparkContext
-    Seq("q199_pagerank" -> ((9, 1)), "q201_label_prop" -> ((8, 1))).foreach {
+    Seq("q159_kcore" -> ((11, 1)), "q199_pagerank" -> ((9, 1)),
+      "q201_label_prop" -> ((8, 1))).foreach {
       case (q, budget) =>
         val before = sc.getPersistentRDDs.keySet
         val got = buildAndConsume(q)
@@ -1052,10 +1055,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("graph pair: triangle wedges and k-core peels are equi-joins, never products (q155/q159)") {
-    // the round-12 scale-honest fixtures must keep the plans the sweep
-    // measured: orientation + wedge close as equi-joins over O(E), the
-    // peel as degree agg + semi-joins — a product anywhere is a 100 TB
-    // killer the correctness gate cannot see
+    // the round-12 scale-honest fixtures must keep scale-shaped plans:
+    // orientation + wedge close as equi-joins over O(E), and the k-core
+    // peel's one plan a projection over the graph kernel's state, with no
+    // join or window at all — a product anywhere is a 100 TB killer the
+    // correctness gate cannot see
     val dTri = details(SparkEntry.queries("q155_triangles")(spark, dir))
     assert(!dTri.contains("CartesianProduct"), s"product in triangle plan:\n$dTri")
     assert(dTri.contains("LeftSemi"), s"wedge close is not a semi join:\n$dTri")
