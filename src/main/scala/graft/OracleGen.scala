@@ -318,8 +318,8 @@ object OracleGen {
   // ---- q60 duplicate clusters ---------------------------------------------
 
   /** Connected components over the verified near-dup pairs: recursive
-    * transitive closure, min reachable id per node — mirrors
-    * Dedup.dupClusters' min-label-propagation fixpoint.
+    * transitive closure, min reachable id per node — the min-id labeling
+    * Dedup.dupClusters' connected-components rounds settle on.
     */
   def dupClusters(shingleN: Int, k: Int, bands: Int, threshold: Double): String = {
     val pairs = minHashDedup(shingleN, k, bands, threshold)

@@ -1817,7 +1817,7 @@ object SparkEntry {
           col("margin"))
     }),
     // connected components over STRING ids (UUID-style doc keys): chains
-    // of 5 zero-padded ids per block — diameter 4 exercises the star
+    // of 5 zero-padded ids per block — diameter 4 takes the components
     // rounds past one iteration, lexicographic min = numeric min under
     // the padding, and the oracle replays the same transitive closure
     "q211_string_clusters" -> ((s, d) => {

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Matrix
+import graft.operators.{Dictionary, Matrix}
 
 /** Deduplication operators for training-data pipelines, in increasing
   * sophistication: exact (hash groupBy), n-gram Jaccard (exact pairwise over
@@ -833,8 +833,7 @@ object Dedup {
     * ContextCleaner once this call's result is consumed and dropped —
     * there is no handle to release eagerly. Long-lived sessions invoking
     * this per batch should consume each result before the next batch so
-    * superseded checkpoints become unreachable (the same lifecycle note
-    * as [[dupClustersMinLabel]]'s persisted labeling).
+    * superseded checkpoints become unreachable.
     */
   def minHashDedupAgainstIndex(batch: DataFrame, index: DataFrame, corpus: DataFrame,
                                shingleN: Int = 3, k: Int = 16, bands: Int = 4,
@@ -857,176 +856,56 @@ object Dedup {
 
   // ---- duplicate clustering --------------------------------------------------
 
-  /** Normalize a pair relation's id columns for connected components.
-    * Integral ids widen to long (the historical behavior); string ids
-    * pass through untouched — min-id labeling is valid under ANY total
-    * order, and lexicographic min is as deterministic as numeric min.
-    * Every other type fails LOUDLY: the old unconditional cast("long")
-    * turned e.g. string UUIDs into nulls, and the clustering then
-    * silently no-opped (every label null-coalesced to the node itself).
-    *
-    * Deliberate contract change for DIGIT-string ids (round 12): they
-    * used to long-cast silently (electing the NUMERIC min, long-typed
-    * labels); they now stay strings and elect the LEXICOGRAPHIC min
-    * ("10" < "9"), with string-typed labels. Pad ids to fixed width —
-    * or pass them as longs — if numeric election order matters.
-    */
-  private def ccEdgeIds(pairs: DataFrame, aCol: String, bCol: String,
-                        outA: String, outB: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    def integral(t: DataType): Boolean = t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    (pairs.schema(aCol).dataType, pairs.schema(bCol).dataType) match {
-      case (a, b) if integral(a) && integral(b) =>
-        pairs.select(col(aCol).cast("long").as(outA), col(bCol).cast("long").as(outB))
-      case (StringType, StringType) =>
-        pairs.select(col(aCol).as(outA), col(bCol).as(outB))
-      case (at, bt) => throw new IllegalArgumentException(
-        s"dupClusters id columns must both be integral or both string: " +
-          s"$aCol is ${at.simpleString}, $bCol is ${bt.simpleString} — a lossy " +
-          "cast would null the ids and silently no-op the clustering")
-    }
-  }
-
   /** Connected components over a near-dup pair relation: every document in a
     * transitively-connected duplicate group gets the group's minimum id as
     * its cluster label — the step that turns pairwise matches into "keep one
-    * doc per cluster" for a training-data pipeline.
+    * doc per cluster" for a training-data pipeline. Runs on the graph-block
+    * kernel ([[Matrix.connectedComponents]]): O(log n) rounds of one job
+    * each even on a chain-shaped dup graph (A≈B≈C≈…), where min-label
+    * propagation needs diameter rounds. The DuckDB recursive-CTE oracle
+    * replays the same labeling.
     *
-    * Default algorithm: alternating large-star/small-star rounds (the
-    * two-phase CC of Kiveris et al., "Connected Components in MapReduce
-    * and Beyond"), which contracts the graph toward per-component stars in
-    * O(log²) rounds — on a chain-shaped dup graph (common adversarial
-    * case: A≈B≈C≈…) min-label propagation needs diameter rounds while the
-    * star rounds collapse it exponentially. Both produce the identical
-    * deterministic min-id labeling ([[dupClustersMinLabel]] keeps the
-    * propagation fixpoint as the in-repo correctness cross-check, and the
-    * DuckDB recursive-CTE oracle checks either).
+    * Integral ids widen to bigint. String ids stay strings and elect the
+    * LEXICOGRAPHIC min ("10" < "9"; pad digit strings, or pass longs, for
+    * numeric order): [[Dictionary.create]] numbers them in value order for
+    * the kernel, and they are decoded on the way out. Any other pair of
+    * types throws, since a lossy cast would null the ids and silently
+    * no-op the clustering; so does a NULL id, naming its column.
+    *
+    * The labeling (doc_id, cluster) comes back persisted, holding no other
+    * storage; the caller unpersists it when done.
     */
   def dupClusters(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                   maxIter: Int = 50,
                   reliableCheckpoint: Boolean = false): DataFrame =
     dupClustersWithRounds(pairs, aCol, bCol, maxIter, reliableCheckpoint)._1
 
-  /** Large-star: connect every strictly-larger neighbor of u to the
-    * minimum of u's closed neighborhood. Input/output edges are directed
-    * larger→smaller (u > v); the symmetric view is formed internally.
-    */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy("u").agg(min("v").as("__mn"))
-      .select(col("u"), least(col("u"), col("__mn")).as("m"))
-    sym.join(mins, "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** Small-star: connect every smaller neighbor of u (and u itself) to the
-    * minimum of u's smaller neighborhood. Edges directed u > v.
-    */
-  private def smallStar(edges: DataFrame): DataFrame = {
-    val mins = edges.groupBy("u").agg(min("v").as("m"))
-    val nbr = edges.join(mins, "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-    nbr.union(mins.select(col("u"), col("m").as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** [[dupClusters]] plus the number of large+small-star rounds taken —
-    * exposed so convergence speed is testable (a 32-node path converges in
-    * a handful of rounds, not 31).
+  /** [[dupClusters]] plus the number of rounds taken — exposed so
+    * convergence speed is testable (a 32-node path settles in a handful of
+    * rounds, not 31).
     */
   def dupClustersWithRounds(pairs: DataFrame, aCol: String = "id_a",
                             bCol: String = "id_b",
                             maxIter: Int = 50,
                             reliableCheckpoint: Boolean = false): (DataFrame, Int) = {
-    val e0 = ccEdgeIds(pairs, aCol, bCol, "u", "v")
-    val allNodes = e0.select(col("u").as("id"))
-      .union(e0.select(col("v").as("id"))).distinct().persist()
-    // localCheckpoint (not persist) per round: each star round nests the
-    // previous plan ~12×, so without truncation the logical plan grows
-    // exponentially in rounds — checkpointing cuts lineage to O(1) while
-    // keeping the loop deterministic. Local checkpoints are lazy: the
-    // per-round count() materializes-and-caches the round, so a round is
-    // one job instead of an eager-checkpoint job plus a count job
-    var edges = Matrix.ckpt(e0.filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct(), false, reliableCheckpoint)
-    // carry the cardinality forward: `edges` was already
-    // counted as `next` last round — re-counting it was a redundant job
-    var eCount = edges.count()
-    var i = 0
-    var done = eCount == 0
-    while (!done && i < maxIter) {
-      val next = Matrix.ckpt(smallStar(largeStar(edges)), false, reliableCheckpoint)
-      val nextCount = next.count()
-      done = nextCount == eCount && next.except(edges).count() == 0
-      // no unpersist: `edges` is checkpoint-backed (LogicalRDD), which
-      // Dataset.unpersist cannot release (the cacheManager has no entry) —
-      // per-round block reclamation is the ContextCleaner's job once the
-      // superseded round's RDD becomes unreachable here
-      edges = next
-      eCount = nextCount
-      i += 1
+    import org.apache.spark.sql.types._
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    val ends = pairs.select(col(aCol), col(bCol))
+    (pairs.schema(aCol).dataType, pairs.schema(bCol).dataType) match {
+      case (a, b) if integral.contains(a) && integral.contains(b) =>
+        Matrix.connectedComponents(ends, maxIter, reliableCheckpoint)(identity)
+      case (StringType, StringType) =>
+        val dict = Dictionary.create(ends.select(col(aCol).as("id")).union(ends.select(col(bCol))), "id")
+        // encode writes code 0 for a NULL id: back to NULL, so the kernel rejects it
+        val coded = Dictionary.encodeMulti(ends, Seq(aCol, bCol), dict)
+          .select(Seq(aCol, bCol).map(c => when(col(c) =!= 0, col(c)).as(c)): _*)
+        Matrix.connectedComponents(coded, maxIter, reliableCheckpoint)(
+          Dictionary.decodeMulti(_, Seq("doc_id", "cluster"), dict))
+      case (at, bt) => throw new IllegalArgumentException(
+        s"dupClusters id columns must both be integral or both string: " +
+          s"$aCol is ${at.simpleString}, $bCol is ${bt.simpleString} — a lossy " +
+          "cast would null the ids and silently no-op the clustering")
     }
-    require(done || i < maxIter,
-      s"dupClusters star rounds did not converge within $maxIter rounds")
-    // at the fixpoint the edge set is a disjoint union of stars: every
-    // non-root points straight at its component minimum
-    val labels = allNodes
-      .join(edges.select(col("u").as("id"), col("v").as("cluster")), Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("cluster"), col("id")).as("cluster"))
-      .persist()
-    labels.count() // materialize before dropping inputs
-    allNodes.unpersist()
-    // (edges is checkpoint-backed — see the loop note; nothing to unpersist)
-    (labels, i)
-  }
-
-  /** Min-label propagation CC — the diameter-round fixpoint kept as the
-    * correctness cross-check for [[dupClusters]]: each round every node
-    * takes the min of its own and its neighbors' labels. Deterministic,
-    * so oracle-checkable via a recursive transitive closure.
-    */
-  def dupClustersMinLabel(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-                          maxIter: Int = 50): DataFrame = {
-    val e = ccEdgeIds(pairs, aCol, bCol, "src", "dst")
-    val edges = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id")).persist()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("cluster").as("nc")), "dst")
-        .groupBy("src").agg(min("nc").as("nbr_min"))
-      val next = labels
-        .join(nbrMin.select(col("src").as("id"), col("nbr_min")), Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("cluster"))
-        .persist()
-      changed = next.join(labels.select(col("id"), col("cluster").as("old")), "id")
-        .filter(col("cluster") =!= col("old")).count()
-      labels.unpersist()
-      labels = next
-      i += 1
-    }
-    edges.unpersist()
-    require(changed == 0,
-      s"dupClustersMinLabel did not converge within $maxIter rounds ($changed labels still " +
-        "changing) — raise maxIter for graphs with diameter > maxIter")
-    // the returned labeling stays persisted: its lineage is one join per
-    // round, so recomputing would replay the whole loop. Callers that are
-    // done with it should unpersist().
-    labels.select(col("id").as("doc_id"), col("cluster"))
   }
 
   /** Canonical-survivor selection: from the full corpus and a cluster

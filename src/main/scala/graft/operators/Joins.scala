@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{array, broadcast, col, explode, floor}
 
 /** Join operators from SURVEY.md §2.3. Cubert exposes each physical strategy
@@ -66,37 +65,27 @@ object Joins {
     * the one size decision behind every broadcast the engine, not the
     * script author, chooses. The reference assumed in-memory build sides
     * (DictionaryEncodeOperator.java:48); at 100 TB a forced hint on a
-    * high-cardinality side is an OOM. `rows` is the caller's row count.
+    * high-cardinality side is an OOM.
     */
-  def boundedBroadcast(df: DataFrame, rows: Option[Long] = None): DataFrame = {
-    val (d, side) = broadcastDecision(df, rows)
+  def boundedBroadcast(df: DataFrame): DataFrame = {
+    val (d, side) = broadcastDecision(df)
     side(d)
   }
 
   /** The decision as the relation to join (`df` or its snapshot) and the
     * side to join it under, which a subset of it may share. Tier one, at
-    * plan time: bytes — `rows` times Spark's per-row estimate, else the
-    * plan estimate — against [[BroadcastMaxBytes]]; with `rows` a miss
-    * also settles the row cap, so a caller with a count (`spMV`'s `xRows`)
-    * starts no job here.
+    * plan time: the plan's byte estimate against [[BroadcastMaxBytes]].
     * Tier two: one row-capped count over a lazy local-checkpoint snapshot
     * the join then reads. Without CBO an in-query relation inherits its
     * distinct's CHILD size, so a 5-value dictionary built from a 100 GB
     * table estimates 100 GB; the count rescues its broadcast.
     */
-  private[graft] def broadcastDecision(df: DataFrame, rows: Option[Long] = None)
-      : (DataFrame, DataFrame => DataFrame) = {
-    val bytes = rows match {
-      case Some(n) => EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output) * n
-      case None => df.queryExecution.optimizedPlan.stats.sizeInBytes
-    }
+  private[graft] def broadcastDecision(df: DataFrame): (DataFrame, DataFrame => DataFrame) = {
     def side(fits: Boolean): DataFrame => DataFrame = if (fits) broadcast(_) else identity
-    if (bytes <= BroadcastMaxBytes) (df, side(true))
-    else rows match {
-      case Some(n) => (df, side(n <= BroadcastMaxRows))
-      case None =>
-        val snap = df.localCheckpoint(false)
-        (snap, side(snap.limit((BroadcastMaxRows + 1).toInt).count() <= BroadcastMaxRows))
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BroadcastMaxBytes) (df, side(true))
+    else {
+      val snap = df.localCheckpoint(false)
+      (snap, side(snap.limit((BroadcastMaxRows + 1).toInt).count() <= BroadcastMaxRows))
     }
   }
 

@@ -23,45 +23,12 @@ import org.apache.spark.storage.StorageLevel
   * both operands on `k` (or runs shuffle-free over blockgen'd/bucketed
   * operands with a shared bucket spec on `k`), and the (i,j) aggregation is
   * partial+final. Power-law graphs (hub columns) → AQE skew split or
-  * `Joins.saltedJoin` on the same keys. The iterative integer graph
-  * loops (integer PageRank, label propagation, k-core) keep Cubert's own
-  * shape instead: the graph is blocked once and each round's state blocks
-  * meet it where it lives ([[graphRounds]]).
+  * `Joins.saltedJoin` on the same keys. The iterative graph loops (integer
+  * PageRank, label propagation, k-core, connected components) keep
+  * Cubert's own shape instead: the graph is blocked once and each round's
+  * state blocks meet it where it lives ([[graphRounds]]).
   */
 object Matrix {
-
-  /** Checkpoint for the iterative family: `localCheckpoint` (default) is
-    * fast but stores blocks on executors ONLY — an executor loss mid-run
-    * kills the job because the truncated lineage cannot recompute. With
-    * `reliable = true` the plan checkpoints to the job's configured
-    * checkpoint dir (HDFS/object store) and survives executor loss at the
-    * cost of a write per round — the right posture for long iterative
-    * runs at 100 TB, where losing one executor over N rounds approaches
-    * certainty. Requires `spark.sparkContext.setCheckpointDir(...)`.
-    *
-    * Local checkpoints may be taken LAZILY (`eager = false`, the r17
-    * optimization posture of the iterative loops): the plan is truncated
-    * (LogicalRDD) and the blocks persist exactly as before, but the
-    * round's result stage is computed inside the FIRST consuming stage of
-    * the next round instead of a dedicated per-round materialization job
-    * — RDDs are identity-deduped in the scheduler and the localCheckpoint
-    * persist makes any second consumer read the cached blocks, so no work
-    * is duplicated. This removes one job barrier plus one full
-    * write-then-reread pass over the O(V) state per round. Callers that
-    * need a value (e.g. a termination count) materialize by calling an
-    * action on the returned frame; callers that unpersist helper
-    * relations before the result is consumed must stay eager. Reliable
-    * checkpoints stay EAGER regardless: `RDD.checkpoint` recomputes the
-    * lineage a second time at materialization unless the RDD was computed
-    * by the checkpointing job itself, so a lazy reliable checkpoint would
-    * double every round's work.
-    */
-  private[graft] def ckpt(df: DataFrame, eager: Boolean, reliable: Boolean): DataFrame =
-    if (reliable) {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
-      df.checkpoint(true)
-    } else df.localCheckpoint(eager)
 
   /** C = A × B over COO triples: A(i,k,v), B(k,j,w) → C(i,j) = Σ_k v·w.
     * Column names are positional contracts: a = (i, k, v), b = (k, j, w).
@@ -80,72 +47,22 @@ object Matrix {
     t.select(col("k").as("i"), col("i").as("k"), col("v"))
   }
 
-  /** Sparse matrix–vector product: A(i,k,v) × x(k,w) → y(i) = Σ_k v·w.
-    * The vector side broadcasts while it fits ([[Joins.boundedBroadcast]];
-    * `xRows` is its row count when the caller has one — PageRank-style
-    * iterations are repeated spMV calls over a counted node set).
-    */
-  def spMV(a: DataFrame, x: DataFrame, xRows: Option[Long] = None): DataFrame = {
-    val l = a.toDF("i", "k", "v")
-    l.join(Joins.boundedBroadcast(x.toDF("k", "w"), xRows), Seq("k"))
-      .groupBy("i")
-      .agg(sum(col("v") * col("w")).as("val"))
-  }
-
-  /** PageRank over an edge list (src, dst) — the standard iterative
-    * workload the reference's README frames as blocked join+agg scripts.
-    * Each iteration is one spMV against the column-normalized adjacency
-    * matrix plus the damping term; ranks localCheckpoint per iteration so
-    * lineage (and therefore plan size) stays O(1) across iterations
-    * instead of O(iters). Nodes with no out-links leak mass (simple
-    * damping redistribution keeps totals bounded); dangling-mass
-    * redistribution drops in as one extra scalar aggregate per iteration
-    * if exact conservation matters.
-    *
-    * Scale: each iteration shuffles edges once (join on src) — identical
-    * to the canonical Pregel/GraphX formulation; ranks stay a (node,
-    * value) relation that broadcasts while node count ≪ edges.
-    */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               reliableCheckpoint: Boolean = false): DataFrame = {
-    val e = edges.toDF("src", "dst")
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // A(dst, src) = 1/deg(src): column-normalized transition matrix
-    val m = e.join(outDeg, "src")
-      .select(col("dst").as("i"), col("src").as("k"), (lit(1.0) / col("deg")).as("v"))
-      .persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct().persist()
-    val n = nodes.count()
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 0 until iters) {
-      val contrib = spMV(m, ranks, Some(n))
-        .select(col("i").as("node"), col("val").as("c"))
-      ranks = ckpt(nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("c"), lit(0.0))).as("rank")),
-        eager = true, reliable = reliableCheckpoint)
-    }
-    m.unpersist(); nodes.unpersist()
-    ranks
-  }
-
-  /** [[pageRank]] in EXACT integer arithmetic — the bit-portable sibling
-    * (same posture as the KMV/LM-score families): ranks live in 10^9
-    * "nano-mass" units, per-edge contributions are integer divisions
-    * (r div deg, deg = a node's distinct out-edges), damping is the
-    * rational dampingPct/100 applied as (pct·s) div 100, and the teleport
-    * base is computed once driver-side with the same long divisions an
-    * external engine would use. Every iteration is therefore a pure
-    * function of integers — an oracle can replay N unrolled iterations
+  /** PageRank in EXACT integer arithmetic, bit-portable (the KMV/LM-score
+    * posture): ranks live in 10^9 "nano-mass" units, per-edge contributions
+    * are integer divisions (r div deg, deg = a node's distinct out-edges),
+    * damping is the rational dampingPct/100 applied as (pct·s) div 100, and
+    * the teleport base is computed once, before the rounds, with the same
+    * long divisions an external engine would use. Every iteration is therefore a
+    * pure function of integers — an oracle can replay N unrolled iterations
     * hash-for-hash, which float PageRank (summation-order-sensitive
     * doubles) never allows. The floors bleed < 1e-9·deg mass per node per
     * iteration — ranking-irrelevant. Nodes with no out-edges contribute
     * nothing.
     *
     * Runs on [[graphRounds]]: one shuffle builds the graph blocks, then
-    * each iteration is one shuffle and one job. Endpoints are integral
-    * ids; the result is (node, r) as bigint.
+    * each iteration is one shuffle and one job, up to `iters` or the first
+    * iteration that changes no rank. Endpoints are integral ids; the
+    * result is (node, r) as bigint.
     */
   def pageRankPortable(edges: DataFrame, iters: Int,
                        dampingPct: Int = 85,
@@ -157,9 +74,9 @@ object Matrix {
       require(n > 0, "empty graph")
       require(n <= scale,
         s"pageRankPortable: $n nodes exceeds the 10^9 nano-mass scale — " +
-          "initial ranks would truncate to zero; shard the graph or use pageRank")
+          "initial ranks would truncate to zero; shard the graph")
       PageRank(scale / n, (scale * (100 - dampingPct) / 100) / n, dampingPct)
-    }
+    }.frame
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -179,23 +96,49 @@ object Matrix {
   def labelPropagation(edges: DataFrame, iters: Int,
                        reliableCheckpoint: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    graphRounds(edges, iters, reliableCheckpoint, "labelPropagation")(_ => Lpa)
+    graphRounds(edges, iters, reliableCheckpoint, "labelPropagation")(_ => Lpa).frame
+  }
+
+  /** Connected components ([[Cc]]) of an edge relation of integral ids,
+    * read in both directions, for at most `maxIter` rounds. `label` maps
+    * the (doc_id, cluster) bigint rows to the caller's labeling, which is
+    * returned persisted and materialized, with the rounds taken; the
+    * kernel's state is released first. A labeling still changing after
+    * `maxIter` rounds throws.
+    */
+  private[graft] def connectedComponents(edges: DataFrame, maxIter: Int, reliable: Boolean)
+                                        (label: DataFrame => DataFrame): (DataFrame, Int) = {
+    val run = graphRounds(edges, maxIter, reliable, "dupClusters", undirected = true)(_ => Cc)
+    try {
+      require(run.fixpoint, s"dupClusters did not converge within $maxIter rounds")
+      val labels = label(run.frame.toDF("doc_id", "cluster")).persist()
+      labels.count()
+      (labels, run.rounds)
+    } finally RddBridge.release(run.state)
   }
 
   /** What one [[graphRounds]] iteration computes: every node sends
     * messages along its distinct out-edges, keyed by (target, key) and
-    * summed, and each block's next state follows from its previous state
-    * and its merged messages.
+    * merged (summed, or the least kept), and each block's next state
+    * follows from its previous state and its merged messages.
     */
   private sealed trait GraphRound extends Serializable {
     def outCol: String
     /** whether a message carries a key beside its target */
     def keyed: Boolean
+    /** whether messages to one (target, key) keep the least rather than the sum */
+    def min: Boolean = false
+    /** whether a second exchange follows the first: [[relay]] reads the
+      * first exchange's messages, and [[update]] those that relay sends
+      */
+    def relays: Boolean = false
     def init(node: Long): Long
-    /** adds the messages of a node in state `x` over its out-edges
+    /** adds the messages of `node` in state `x` over its out-edges
       * `dsts(from until to)`, never empty, to `m`
       */
-    def send(x: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit
+    def send(node: Long, x: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit
+    /** the second exchange's messages of a block, by target block among `p` */
+    def relay(s: NodeState, m: PairSums, p: Int): Iterator[(Int, Msgs)] = Iterator.empty
     def update(s: NodeState, m: PairSums): Array[Long]
   }
 
@@ -204,7 +147,7 @@ object Matrix {
     val outCol = "r"
     val keyed = false
     def init(node: Long): Long = r0
-    def send(r: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit = {
+    def send(node: Long, r: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit = {
       val c = r / (to - from)
       // a zero contribution adds nothing to any sum
       if (c != 0) for (j <- from until to) m.add(dsts(j), 0L, c)
@@ -223,7 +166,7 @@ object Matrix {
     val outCol = "label"
     val keyed = true
     def init(node: Long): Long = node
-    def send(label: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit =
+    def send(node: Long, label: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit =
       for (j <- from until to) m.add(dsts(j), label, 1L)
     def update(s: NodeState, m: PairSums): Array[Long] = {
       val label = s.v.clone()
@@ -244,12 +187,50 @@ object Matrix {
     val outCol = "x"
     val keyed = false
     def init(node: Long): Long = 0L
-    def send(x: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit =
+    def send(node: Long, x: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit =
       if (x >= 0) for (j <- from until to) m.add(dsts(j), 0L, 1L)
     def update(s: NodeState, m: PairSums): Array[Long] = {
       val d = new Array[Long](s.nodes.length)
       m.foreach { (dst, _, c) => d(s.index(dst)) += c }
       Array.tabulate(d.length)(i => if (s.v(i) < 0) -1L else if (d(i) >= k) d(i) else -(d(i) + 2))
+    }
+  }
+
+  /** One hook-and-shortcut round of connected components (Shiloach–Vishkin
+    * style). A node's state is its parent f(u), at first u itself.
+    *  - Exchange 1: u sends f(u) to each neighbor, keyed by the neighbor
+    *    itself, and a request keyed by u to its parent f(u) ≠ u. Then
+    *    p(u) = min(f(u), the neighbors' labels).
+    *  - Exchange 2: u sends its hook p(u) to its old parent f(u) and p(u)
+    *    to itself, and each parent w answers its requesters with p(w).
+    *    Then f'(u) = min(p(u), the hooks, p(f(u))).
+    * A label only falls and is always an id of the node's component, so
+    * the first unchanged state labels each component with its least id.
+    * Hooks and answers shortcut chains: a randomly numbered path of 2,000
+    * nodes settles in 17 rounds, not the ~2,000 of min-label propagation.
+    */
+  private case object Cc extends GraphRound {
+    val outCol = "cluster"
+    val keyed = true
+    override val min = true
+    override val relays = true
+    def init(node: Long): Long = node
+    def send(node: Long, f: Long, dsts: Array[Long], from: Int, to: Int, m: PairSums): Unit = {
+      for (j <- from until to) m.add(dsts(j), dsts(j), f)
+      if (f != node) m.add(f, node, 0L)
+    }
+    override def relay(s: NodeState, m: PairSums, p: Int): Iterator[(Int, Msgs)] = {
+      val low = s.v.clone()
+      m.foreach { (dst, key, f) => if (key == dst) { val i = s.index(dst); low(i) = Math.min(low(i), f) } }
+      val out = new PairSums(min = true)
+      for (i <- s.nodes.indices) { out.add(s.nodes(i), 0L, low(i)); out.add(s.v(i), 0L, low(i)) }
+      m.foreach { (w, u, _) => if (u != w) out.add(u, 0L, low(s.index(w))) }
+      out.byBlock(p, keyed = false)
+    }
+    def update(s: NodeState, m: PairSums): Array[Long] = {
+      val f = s.v.clone()
+      m.foreach { (u, _, x) => val i = s.index(u); f(i) = Math.min(f(i), x) }
+      f
     }
   }
 
@@ -263,8 +244,10 @@ object Matrix {
     */
   private final case class GraphBlock(nodes: Array[Long], offsets: Array[Int], dsts: Array[Long])
 
-  /** One block's state, aligned with its node array. */
-  private final case class NodeState(nodes: Array[Long], v: Array[Long]) {
+  /** One block's state, aligned with its node array, and how many of its
+    * nodes the round that made it changed.
+    */
+  private final case class NodeState(nodes: Array[Long], v: Array[Long], changed: Int) {
     def index(node: Long): Int = {
       val i = java.util.Arrays.binarySearch(nodes, node)
       require(i >= 0, s"node $node reached a graph block that does not hold it")
@@ -285,10 +268,11 @@ object Matrix {
   /** The (a, b, sum) visitor of [[PairSums.foreach]], on primitives. */
   private trait EntryFn { def apply(a: Long, b: Long, v: Long): Unit }
 
-  /** Open-addressing (a, b) → sum map on primitive arrays: a round's
-    * map-side combiner and its reduce-side merge. Sums are exact.
+  /** Open-addressing (a, b) → sum map on primitive arrays, or (a, b) →
+    * least value with `min`: a round's map-side combiner and its
+    * reduce-side merge. Sums are exact.
     */
-  private final class PairSums {
+  private final class PairSums(min: Boolean) {
     private var mask = 63
     private var ka = new Array[Long](64)
     private var kb = new Array[Long](64)
@@ -300,7 +284,7 @@ object Matrix {
       val h = (a * 0x9E3779B97F4A7C15L + b) * 0xC2B2AE3D27D4EB4FL
       var i = (h ^ (h >>> 32)).toInt & mask
       while (used(i) && (ka(i) != a || kb(i) != b)) i = (i + 1) & mask
-      if (used(i)) vs(i) = Math.addExact(vs(i), x)
+      if (used(i)) vs(i) = if (min) Math.min(vs(i), x) else Math.addExact(vs(i), x)
       else {
         used(i) = true; ka(i) = a; kb(i) = b; vs(i) = x; size += 1
         if (size * 2 > mask) grow()
@@ -340,19 +324,21 @@ object Matrix {
   }
 
   /** The build's map side: this partition's edges by the block of their
-    * src, and their dst ids by the block of the dst.
+    * src, and their dst ids by the block of the dst; `undirected` adds
+    * each edge reversed instead. A NULL end throws naming its column.
     */
-  private def edgeChunks(rows: Iterator[InternalRow], p: Int, name: String)
-      : Iterator[(Int, EdgeChunk)] = {
+  private def edgeChunks(rows: Iterator[InternalRow], p: Int, name: String,
+                         ends: Array[String], undirected: Boolean): Iterator[(Int, EdgeChunk)] = {
     val src = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
     val dst = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
     val ids = Array.fill(p)(new mutable.ArrayBuilder.ofLong)
+    def edge(s: Long, d: Long): Unit = { val k = blockOf(s, p); src(k) += s; dst(k) += d }
     rows.foreach { r =>
-      require(!r.isNullAt(0), s"$name: an edge has a NULL src")
-      require(!r.isNullAt(1), s"$name: an edge has a NULL dst")
+      require(!r.isNullAt(0), s"$name: an edge has a NULL ${ends(0)}")
+      require(!r.isNullAt(1), s"$name: an edge has a NULL ${ends(1)}")
       val (s, d) = (r.getLong(0), r.getLong(1))
-      val k = blockOf(s, p)
-      src(k) += s; dst(k) += d; ids(blockOf(d, p)) += d
+      edge(s, d)
+      if (undirected) edge(d, s) else ids(blockOf(d, p)) += d
     }
     Iterator.range(0, p).map(k => (k, EdgeChunk(src(k).result(), dst(k).result(), ids(k).result())))
       .filter { case (_, c) => c.src.nonEmpty || c.ids.nonEmpty }
@@ -404,45 +390,56 @@ object Matrix {
         e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause
   }
 
-  /** The graph-block kernel of [[pageRankPortable]], [[labelPropagation]]
-    * and [[kCore]], in the shape of Cubert's blocked matrix–vector
-    * products: the matrix is blocked once, and every round's vector blocks
-    * meet the matrix blocks where those live.
+  /** A [[graphRounds]] run: its result as (node, outCol) rows, the state
+    * RDD they read (left persisted), the rounds run, and whether the last
+    * one changed no node.
+    */
+  private final case class GraphRun(frame: DataFrame, state: RDD[_], rounds: Int, fixpoint: Boolean)
+
+  /** The graph-block kernel of [[pageRankPortable]], [[labelPropagation]],
+    * [[kCore]] and [[connectedComponents]], in the shape of Cubert's
+    * blocked matrix–vector products: the matrix is blocked once, and every
+    * round's vector blocks meet the matrix blocks where those live.
     *
     * Build, one shuffle: the endpoints, cast to bigint, leave SQL for their
     * RDD. Each edge goes to block `blockOf(src, p)` and each dst id to
-    * `blockOf(dst, p)`, with p = `spark.sql.shuffle.partitions`. A
-    * [[GraphBlock]] holds the sorted ids of every node that hashes to it,
-    * sinks included, and their distinct out-edges. `n` is the sum of the
-    * block sizes, read in the job that materializes the blocks; `round(n)`
-    * is the iteration to run.
+    * `blockOf(dst, p)`, with p = `spark.sql.shuffle.partitions`;
+    * `undirected` reads every edge in both directions. A [[GraphBlock]]
+    * holds the sorted ids of every node that hashes to it, sinks included,
+    * and their distinct out-edges. `n` is the sum of the block sizes, read
+    * in the job that materializes the blocks; `round(n)` is the iteration
+    * to run.
     *
-    * A round, one shuffle and one job: each graph block zips with its state
-    * block and combines its messages map-side in a [[PairSums]], then emits
-    * one [[Msgs]] of primitive arrays per target block. The HashPartitioner
+    * A round, one job: each graph block zips with its state block and
+    * combines its messages map-side in a [[PairSums]], then emits one
+    * [[Msgs]] of primitive arrays per target block. The HashPartitioner
     * on the block number (the identity on 0 until p) shuffles them; the zip
     * must not keep the graph's partitioner, or Spark would take the
     * messages as partitioned already and skip the shuffle. The reduce side
-    * merges them into the co-located state. No round runs a SQL query or a
-    * broadcast.
+    * merges them into the co-located state; a round that relays shuffles
+    * once more first. No round runs a SQL query or a broadcast. The job
+    * sums the nodes the round changed, and the loop stops after `iters`
+    * rounds or at the first round that changed none: every round is a
+    * pure function of the state, so later rounds would change nothing.
     *
-    * Each state is checkpointed (`localCheckpoint`, or a persisted reliable
-    * `checkpoint` with `reliable`; see [[ckpt]]) and materialized, then the
-    * previous one is released. Everything else is released before
-    * returning, or on a failure, so the returned frame's state is the one
-    * RDD left persisted. Releases go through [[RddBridge]], so no round
-    * logs unpersist's checkpoint WARN.
+    * Each state is checkpointed (`localCheckpoint`, or with `reliable` a
+    * persisted `checkpoint` to the checkpoint dir, which survives executor
+    * loss) and materialized, then the previous one is released. Everything else is released before
+    * returning, or on a failure, so the run's state is the one RDD left
+    * persisted. Releases go through [[RddBridge]], so no round logs
+    * unpersist's checkpoint WARN.
     *
     * The arithmetic is `Math.*Exact`, so an overflow throws as ANSI Spark
-    * SQL does. A NULL endpoint throws an IllegalArgumentException naming src
-    * or dst; a non-integral endpoint type fails at the call.
+    * SQL does. A NULL endpoint throws an IllegalArgumentException naming
+    * its column; a non-integral endpoint type fails at the call.
     */
-  private def graphRounds(edges: DataFrame, iters: Int, reliable: Boolean, name: String)
-                         (round: Long => GraphRound): DataFrame = {
+  private def graphRounds(edges: DataFrame, iters: Int, reliable: Boolean, name: String,
+                          undirected: Boolean = false)(round: Long => GraphRound): GraphRun = {
+    val ends = edges.columns
     val e = edges.toDF("src", "dst")
-    e.schema.foreach(f => require(
+    e.schema.zip(ends).foreach { case (f, end) => require(
       Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
-      s"$name: ${f.name} must be an integral type, not ${f.dataType.sql}"))
+      s"$name: $end must be an integral type, not ${f.dataType.sql}") }
     val spark = e.sparkSession
     require(!reliable || spark.sparkContext.getCheckpointDir.isDefined,
       "reliableCheckpoint requires SparkContext.setCheckpointDir to be set")
@@ -458,39 +455,50 @@ object Matrix {
     var result: RDD[NodeState] = null
     try {
       val rows = e.select(col("src").cast("long"), col("dst").cast("long")).queryExecution.toRdd
-      val graph = keep(rows.mapPartitions(edgeChunks(_, p, name)).partitionBy(part)
+      val graph = keep(rows.mapPartitions(edgeChunks(_, p, name, ends, undirected)).partitionBy(part)
         .mapPartitions(it => Iterator(assemble(it.map(_._2).toArray)), preservesPartitioning = true))
       val r = round(unwrap(graph.map(_.nodes.length.toLong).fold(0L)(_ + _)))
-      var state = graph.map(g => NodeState(g.nodes, g.nodes.map(r.init)))
-      for (i <- 1 to iters) {
+      var state = graph.map(g => NodeState(g.nodes, g.nodes.map(r.init), 0))
+      var rounds = 0
+      var changed = -1L
+      while (rounds < iters && changed != 0) {
         val prev = state
-        state = keep(graph.zipPartitions(prev) { (g, s) => send(g.next(), s.next(), r, p) }
+        var msgs = graph.zipPartitions(prev) { (g, s) => send(g.next(), s.next(), r, p) }
           .partitionBy(part)
-          .zipPartitions(prev) { (msgs, s) =>
-            val m = new PairSums
-            msgs.foreach { case (_, x) => m.addAll(x) }
-            val cur = s.next()
-            Iterator(NodeState(cur.nodes, r.update(cur, m)))
-          })
-        unwrap(state.count())
-        if (i > 1) { RddBridge.release(prev); kept -= prev }
+        if (r.relays) msgs = msgs.zipPartitions(prev) { (m, s) => r.relay(s.next(), merged(m, r), p) }
+          .partitionBy(part)
+        state = keep(msgs.zipPartitions(prev) { (m, s) =>
+          val cur = s.next()
+          val v = r.update(cur, merged(m, r))
+          Iterator(NodeState(cur.nodes, v, v.indices.count(i => v(i) != cur.v(i))))
+        })
+        changed = unwrap(state.map(_.changed.toLong).fold(0L)(_ + _))
+        rounds += 1
+        if (rounds > 1) { RddBridge.release(prev); kept -= prev }
       }
       result = state
       val out = state.mapPartitions(_.flatMap { s =>
         Iterator.tabulate(s.nodes.length)(i => InternalRow(s.nodes(i), s.v(i)))
       })
-      RddBridge.frame(spark, out, StructType(Seq(
+      GraphRun(RddBridge.frame(spark, out, StructType(Seq(
         StructField("node", LongType, nullable = false),
-        StructField(r.outCol, LongType, nullable = false))))
+        StructField(r.outCol, LongType, nullable = false)))), state, rounds, changed == 0)
     } finally kept.toList.filterNot(_ eq result).foreach(RddBridge.release)
   }
 
   /** A round's map side: one graph block's messages, combined. */
   private def send(g: GraphBlock, s: NodeState, r: GraphRound, p: Int): Iterator[(Int, Msgs)] = {
-    val m = new PairSums
+    val m = new PairSums(r.min)
     for (i <- g.nodes.indices if g.offsets(i + 1) > g.offsets(i))
-      r.send(s.v(i), g.dsts, g.offsets(i), g.offsets(i + 1), m)
+      r.send(g.nodes(i), s.v(i), g.dsts, g.offsets(i), g.offsets(i + 1), m)
     m.byBlock(p, r.keyed)
+  }
+
+  /** A reduce side's messages, merged. */
+  private def merged(msgs: Iterator[(Int, Msgs)], r: GraphRound): PairSums = {
+    val m = new PairSums(r.min)
+    msgs.foreach { case (_, x) => m.addAll(x) }
+    m
   }
 
   /** k-core decomposition by iterative peeling: each round drops the
@@ -503,16 +511,16 @@ object Matrix {
     *
     * Runs on [[graphRounds]] ([[KCore]]) over the edges in both directions,
     * self-loops dropped: `maxIter` peel rounds and one degree round, one
-    * job each, with no early exit. Endpoints are integral ids; the result
-    * is (node, degree) as bigint.
+    * job each, ending early at the first round that changes nothing.
+    * Endpoints are integral ids; the result is (node, degree) as bigint.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 10,
             reliableCheckpoint: Boolean = false): DataFrame = {
     require(k >= 1 && maxIter >= 1 && maxIter < Int.MaxValue, s"bad k=$k maxIter=$maxIter")
     // an edge with a NULL end is kept, so it reaches the kernel's check
-    val e = edges.toDF("u", "v").filter(coalesce(col("u") =!= col("v"), lit(true)))
+    val e = edges.toDF("src", "dst").filter(coalesce(col("src") =!= col("dst"), lit(true)))
     val x = col("x")
-    graphRounds(e.union(e.select("v", "u")), maxIter + 1, reliableCheckpoint, "kCore")(_ => KCore(k))
+    graphRounds(e, maxIter + 1, reliableCheckpoint, "kCore", undirected = true)(_ => KCore(k)).frame
       .filter(x >= 0 || x <= -3)
       .select(col("node"), when(x >= 0, x).otherwise(-(x + 2)).as("degree"))
   }

@@ -380,7 +380,7 @@ class TopTokenStats extends UserOperator {
 }
 
 /** Quality-preferring dedup survivors for scripts: cluster near-dups
-  * (MinHash-LSH → exact verify → large/small-star components) and keep
+  * (MinHash-LSH → exact verify → connected components) and keep
   * the best row per cluster by the score column (ties → smallest id).
   * Params: score (required, a column name), shingleN (3), k (16),
   * bands (4), threshold (0.8), text ("text"), id ("doc_id").
@@ -909,8 +909,9 @@ class EditJoin extends UserOperator {
       params.getOrElse("id", "doc_id"))
 }
 
-/** Duplicate clustering for scripts: large/small-star connected
-  * components over match pairs; emits (doc_id, cluster = component min).
+/** Duplicate clustering for scripts: connected components over match
+  * pairs ([[graft.dedup.Dedup.dupClusters]]); emits (doc_id, cluster =
+  * component min).
   * Params: a ("id_a"), b ("id_b").
   */
 class DupClusters extends UserOperator {

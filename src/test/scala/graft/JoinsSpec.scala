@@ -50,15 +50,6 @@ class JoinsSpec extends SparkSpec {
     try {
       // tier one from the plan estimate: a small relation, no job
       assert(hinted(Joins.boundedBroadcast(Seq((1, "a"), (2, "b")).toDF("k", "v"))))
-      // tier one from a known row count, both directions: two longs are 24
-      // bytes a row, so the byte cap holds 44,739,242 rows. The relation
-      // fails if it ever runs, so neither decision may start a job.
-      val twoLongs = spark.range(4).select($"id",
-        raise_error(lit("the decision ran a job")).cast("long").as("v"))
-      val fitRows = Joins.BroadcastMaxBytes / 24
-      assert(hinted(Joins.boundedBroadcast(twoLongs, Some(fitRows))))
-      val over = Joins.boundedBroadcast(twoLongs, Some(fitRows + 1))
-      assert(!hinted(over) && (over eq twoLongs))
       // tier two: the estimate of range(2^28) is past the byte cap, so a
       // count decides — 10^7 + 1 rows are one past the row cap...
       val big = spark.range(1L << 28).toDF()

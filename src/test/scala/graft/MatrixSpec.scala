@@ -28,20 +28,6 @@ class MatrixSpec extends SparkSpec {
     assert(c.toSeq == Seq((0L, 0L, 6.0))) // the k=1 entry of B never pairs
   }
 
-  test("pageRank: exact on a 2-cycle, mass-conserving and ordered on a triangle") {
-    // a ⇄ b: perfectly symmetric → rank stays exactly 1/2 every iteration
-    val cyc = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
-    val r2 = Matrix.pageRank(cyc, iters = 5).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toMap
-    assert(r2("a") == 0.5 && r2("b") == 0.5)
-    // a→b, a→c, b→c, c→a: c collects from two sources → highest rank
-    val tri = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a")).toDF("src", "dst")
-    val r3 = Matrix.pageRank(tri, iters = 40).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toMap
-    assert(math.abs(r3.values.sum - 1.0) < 1e-9, s"mass not conserved: $r3")
-    assert(r3("c") > r3("a") && r3("a") > r3("b"), s"unexpected order: $r3")
-  }
-
   test("pageRankPortable: exact integer fixpoint on the 2-cycle, agrees with float ranking") {
     // 1 ⇄ 2 in nano-mass: r0 = 5e8 each; every iteration keeps
     // 75e6 + (85 * 5e8) div 100 = 5e8 exactly — an integer fixpoint
@@ -49,10 +35,16 @@ class MatrixSpec extends SparkSpec {
     val r2 = Matrix.pageRankPortable(cyc, iters = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(r2 == Map(1L -> 500000000L, 2L -> 500000000L), r2.toString)
-    // on a non-trivial graph the integer variant must rank like the float one
-    val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val fOrder = Matrix.pageRank(tri, iters = 20).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(-_._2).map(_._1).toSeq
+    // on a non-trivial graph the integer variant must rank like a float
+    // power iteration: r'(v) = 0.15/n + 0.85·Σ_{u→v} r(u)/deg(u)
+    val triEdges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L))
+    val tri = triEdges.toDF("src", "dst")
+    val deg = triEdges.groupBy(_._1).map { case (u, out) => u -> out.size }
+    var fr = Map(1L -> 1.0 / 3, 2L -> 1.0 / 3, 3L -> 1.0 / 3)
+    for (_ <- 1 to 20) fr = fr.map { case (v, _) =>
+      v -> (0.15 / 3 + 0.85 * triEdges.collect { case (u, `v`) => fr(u) / deg(u) }.sum)
+    }
+    val fOrder = fr.toSeq.sortBy(-_._2).map(_._1)
     val qOrder = Matrix.pageRankPortable(tri, iters = 20).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._2).map(_._1).toSeq
     assert(fOrder == qOrder, s"float $fOrder vs integer $qOrder")
@@ -119,6 +111,20 @@ class MatrixSpec extends SparkSpec {
     degrees(e)
   }
 
+  /** Union-find with the least id as each component's label. */
+  private def refComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(v => v -> find(v)).toMap
+  }
+
   private def rows(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -157,17 +163,10 @@ class MatrixSpec extends SparkSpec {
     }
   }
 
-  test("transpose swaps coordinates and spMV broadcasts the vector") {
+  test("transpose swaps coordinates") {
     val at = Matrix.transpose(a.toDF("i", "k", "v"))
       .orderBy("i", "k").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(at.toSeq == Seq((0L, 0L, 1.0), (0L, 1L, 3.0), (1L, 0L, 2.0), (1L, 1L, 4.0)))
-    // y = A x with x = (1, 10) → (21, 43)
-    val x = Seq((0L, 1.0), (1L, 10.0)).toDF("k", "w")
-    val y = Matrix.spMV(a.toDF("i", "k", "v"), x)
-    val p = y.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), s"vector side should broadcast:\n$p")
-    assert(y.orderBy("i").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
-      Seq((0L, 21.0), (1L, 43.0)))
   }
 
   test("triangleCount: exact on known graphs, robust to duplicates and ties") {
@@ -218,6 +217,31 @@ class MatrixSpec extends SparkSpec {
       // k above every core
       assert(Matrix.kCore(random.head.toDF("u", "v"), k = 40, maxIter = 3).collect().isEmpty)
     }
+  }
+
+  test("connected components equal a plain-Scala union-find at p = 1, 3 and 4") {
+    // random multigraphs with duplicates, self-loops and extreme ids
+    val rnd = new scala.util.Random(11)
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue)
+    val random = Seq.fill(4)(Seq.fill(40)((rnd.nextInt(50).toLong - 10, rnd.nextInt(50).toLong - 10)))
+    val extreme = Seq.fill(30)((extremes(rnd.nextInt(6)), rnd.nextInt(12).toLong)) ++
+      Seq((5L, 5L), (5L, 5L), (Long.MaxValue, Long.MaxValue - 1), (40L, 41L), (41L, 40L))
+    for (p <- Seq(1, 3, 4); edges <- random :+ extreme) withBlocks(p) {
+      val labels = graft.dedup.Dedup.dupClusters(edges.toDF("id_a", "id_b"))
+      try assert(rows(labels) == refComponents(edges), s"components at p = $p of $edges")
+      finally labels.unpersist()
+    }
+  }
+
+  test("connected components of a 2,000-node path settle in at most 2·⌈log2 n⌉ rounds") {
+    // ids in a seeded random order, so no round finds the path sorted
+    val ids = new scala.util.Random(12).shuffle((0L until 2000L).toVector)
+    val path = ids.zip(ids.tail)
+    val (labels, rounds) = graft.dedup.Dedup.dupClustersWithRounds(path.toDF("id_a", "id_b"))
+    try {
+      assert(rows(labels) == ids.map(_ -> 0L).toMap)
+      assert(rounds <= 22, s"$rounds rounds")
+    } finally labels.unpersist()
   }
 
   test("graph kernel carries messages to targets in other blocks") {

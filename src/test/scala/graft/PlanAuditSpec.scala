@@ -1017,6 +1017,28 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("duplicate clusters: one job per round, no SQL execution in the loop, nothing left (q60/q65/q121/q125/q211)") {
+    // budgets are today's counts, build plus consume, zero tolerance, each
+    // the same in 8 of 8 repeats: the pair query's jobs, the graph block
+    // build, one job per components round, and the two SQL executions that
+    // materialize the labeling and write the consume (the star rounds ran
+    // 40 to 45 jobs and 9 to 13 SQL executions). Once the labeling is
+    // unpersisted, nothing the query made is still persisted.
+    spark.catalog.clearCache()
+    Tables.load(spark, dir, "documents")
+    val sc = spark.sparkContext
+    Seq("q60_dedup_clusters" -> ((10, 2)), "q65_dedup_survivors" -> ((11, 2)),
+      "q121_soft_dedup" -> ((13, 2)), "q125_dedup_keep_best" -> ((14, 2)),
+      "q211_string_clusters" -> ((15, 2))).foreach { case (q, budget) =>
+      val before = sc.getPersistentRDDs.keySet
+      val got = buildAndConsume(q)
+      assert(got == budget, s"$q (jobs, SQL executions) = $got, budget $budget")
+      spark.catalog.clearCache()
+      val left = sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
+      assert(left.isEmpty, s"$q left ${left.values.mkString(", ")} persisted")
+    }
+  }
+
   test("broadcast decisions start no job where the size estimate decides (q30/q31/q135)") {
     // budgets are the counts before the dictionary and screen decisions
     // moved into Joins.boundedBroadcast, zero tolerance: the dictionaries

@@ -324,9 +324,6 @@ class TextDedupSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == Map("docA" -> "docA", "docB" -> "docA", "docC" -> "docA",
       "docY" -> "docY", "docZ" -> "docY"))
-    val prop = Dedup.dupClustersMinLabel(pairs).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(prop == got)
     // unsupported id types fail loudly instead of null-casting
     val bin = Seq((Array[Byte](1), Array[Byte](2))).toDF("id_a", "id_b")
     val err = intercept[IllegalArgumentException](Dedup.dupClusters(bin))
@@ -405,10 +402,6 @@ class TextDedupSpec extends SparkSpec {
       val got = Dedup.dupClusters(edges.toDF("id_a", "id_b")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"trial $trial: edges=$edges")
-      // the min-label fixpoint stays as the in-repo cross-check
-      val prop = Dedup.dupClustersMinLabel(edges.toDF("id_a", "id_b")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(prop == want, s"trial $trial (min-label): edges=$edges")
     }
   }
 
@@ -421,6 +414,26 @@ class TextDedupSpec extends SparkSpec {
     assert(got == (0L to 31L).map(_ -> 0L).toMap, got.toString)
     assert(rounds <= 8, s"expected O(log n) star rounds on a path, got $rounds")
     labels.unpersist()
+  }
+
+  test("dupClusters holds only its labeling; a NULL id throws and keeps nothing") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for ((pairs, nodes) <- Seq((Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b"), 5),
+        (Seq(("b", "a"), ("c", "b")).toDF("id_a", "id_b"), 3))) {
+      val labels = Dedup.dupClusters(pairs)
+      assert(labels.count() == nodes)
+      labels.unpersist(blocking = true)
+      assert(sc.getPersistentRDDs.keySet.forall(before), sc.getPersistentRDDs.toString)
+    }
+    val longs = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(3L), None))
+      .toDF("a", "b")
+    val strings = Seq[(String, String)](("x", "y"), (null, "y")).toDF("a", "b")
+    for ((df, end) <- Seq((longs, "b"), (strings, "a"))) {
+      val e = intercept[IllegalArgumentException](Dedup.dupClusters(df, "a", "b"))
+      assert(e.getMessage.contains(s"dupClusters: an edge has a NULL $end"), e.getMessage)
+    }
+    assert(sc.getPersistentRDDs.keySet.forall(before), "a rejected input left RDDs persisted")
   }
 
   test("clusterSurvivors keeps one doc per cluster plus unclustered docs") {
