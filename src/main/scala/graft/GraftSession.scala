@@ -69,7 +69,20 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", sys.props.getOrElse("graft.warehouse", "/tmp/graft-warehouse"))
+      .config("spark.sql.warehouse.dir", sys.props.getOrElse("graft.warehouse", jvmWarehouse))
+
+  /** The default warehouse (where BLOCKGEN writes its bucketed tables): a
+    * directory of this JVM's own under `java.io.tmpdir`, deleted when the
+    * JVM exits. A directory shared by every JVM on the host let two
+    * concurrent scripts overwrite each other's tables of the same name; the
+    * in-memory catalog forgets its tables at exit anyway. `-Dgraft.warehouse`
+    * names a directory instead.
+    */
+  private lazy val jvmWarehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse-").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getPath
+  }
 }
 
 /** Loaders for the driver-generated test tables (see /root/repo/TESTDATA.md).
@@ -89,6 +102,14 @@ object Tables {
   // plan — execution still scans the data every time. Keyed weakly by the
   // session object so stopped/collected sessions release their entries and
   // a recycled identity can never serve a stale DataFrame.
+  //
+  // Each table still resolves through Spark's inference job, not the
+  // driver-side footer read of a script LOAD (Sources.load): once per
+  // session that job saves nothing, and on perfbench `olap` it is the
+  // session's first Spark job. Moving these reads to the footer cut
+  // `setup_s` from 0.61 to 0.21 s only by moving that first job's JVM
+  // warm-up into the cold pass, whose `cold_pass_s` rose 11% and 23% in two
+  // pairs.
   private val resolved =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.mutable.Map[(String, String), DataFrame]]

@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions.col
   * contract (block/Index.java:38). The cost-function variants collapse:
   * BY_PARTITION_KEY / BY_SIZE ≈ choice of bucket count; BY_INDEX = reuse the
   * other table's bucket spec.
+  *
+  * The write is the reference's SHUFFLE + reduce-side CREATE_BLOCK: one hash
+  * exchange on the partition keys into one partition per bucket, then one
+  * sort and one file per bucket — not one file per input task and bucket.
   */
 object Blockgen {
 
@@ -22,6 +26,14 @@ object Blockgen {
     * `buckets` plays the role of the blockgen cost function: pick it so one
     * bucket ≈ one healthy task at target scale (e.g. 100 TB / 128 MB ≈ 800k
     * row-groups → thousands of buckets; at test scale, a handful).
+    *
+    * The input is hash-partitioned on `partitionKeys` into `buckets`
+    * partitions first. That partition id is the bucket id the writer
+    * computes (`pmod(murmur3(keys), buckets)`), so each bucket is one
+    * reduce task that sorts its rows once and writes one file. Without the
+    * exchange every input task would sort and write a file for each bucket
+    * it holds rows of (tasks × buckets files, and a one-task input sorts
+    * the whole relation on one core).
     */
   def blockgen(df: DataFrame, table: String, partitionKeys: Seq[String],
                sortKeys: Seq[String], buckets: Int): Unit = {
@@ -40,7 +52,7 @@ object Blockgen {
       spark.sessionState.catalog.defaultTablePath(ident))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    val writer = df.write
+    val writer = df.repartition(buckets, partitionKeys.map(col): _*).write
       .mode("overwrite")
       .bucketBy(buckets, partitionKeys.head, partitionKeys.tail: _*)
     val sorted =

@@ -23,6 +23,56 @@ class BlockgenSpec extends SparkSpec {
     assert(joined.count() == li.count())
   }
 
+  test("blockgen writes one sorted file per bucket through one hash exchange and one sort") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // three input tasks, each holding rows of every bucket: a writer fed
+    // by them directly leaves up to 3 x 4 files
+    val li = sf("lineitem").repartition(3)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      Blockgen.blockgen(li, "t_per_bucket", Seq("l_orderkey"), Seq("l_orderkey", "l_linenumber"), 4)
+      org.apache.spark.graft.ListenerDrain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val write = plans.asScala.map(qe => SparkSpec.planNodes(qe.executedPlan))
+      .filter(_.exists(_.nodeName.contains("WriteFiles"))).toSeq
+    assert(write.size == 1, s"${write.size} write plans")
+    val exchanges = write.head.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, write.head.mkString("\n"))
+    assert(exchanges.head.outputPartitioning.numPartitions == 4)
+    assert(exchanges.head.outputPartitioning.toString.startsWith("hashpartitioning(l_orderkey"),
+      exchanges.head.outputPartitioning.toString)
+    assert(write.head.count(_.isInstanceOf[SortExec]) == 1, write.head.mkString("\n"))
+
+    val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier("t_per_bucket")).location)
+    val files = loc.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    assert(files.map(f => BucketingUtils.getBucketId(f.getName)).toSeq == (0 until 4).map(Some(_)),
+      files.map(_.getName).mkString(", "))
+    var rows = 0L
+    files.zipWithIndex.foreach { case (f, bucket) =>
+      val got = spark.read.parquet(f.getPath)
+        .select(col("l_orderkey"), col("l_linenumber"), expr("pmod(hash(l_orderkey), 4)"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      assert(got.nonEmpty && got.forall(_._3 == bucket), s"${f.getName} holds another bucket's rows")
+      val keys = got.map(r => (r._1, r._2)).toSeq
+      assert(keys == keys.sorted, s"${f.getName} is not sorted on the sort keys")
+      rows += got.length
+    }
+    assert(rows == li.count())
+    spark.sql("DROP TABLE IF EXISTS t_per_bucket")
+  }
+
   test("blockgen BY INDEX reuses the matching table's bucket spec (ByIndexPartitioner.java:44)") {
     val li = sf("lineitem")
     Blockgen.blockgen(li, "t_bi_base", Seq("l_orderkey"), Seq("l_orderkey"), 4)

@@ -1076,6 +1076,41 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** (jobs, shuffle exchanges) that `body` starts; the exchanges are
+    * counted in the final plan of each query that finishes, a reused
+    * exchange once.
+    */
+  private def jobsAndExchanges(body: => Unit): (Int, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val exchanges = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = exchanges.addAndGet(
+        SparkSpec.planNodes(qe.executedPlan).count(_.isInstanceOf[ShuffleExchangeExec]))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try (counted(body)._1, exchanges.get)
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  test("Cubert Script block path: jobs and exchanges of mesh_join_cube.cmr and daily_report.cmr") {
+    // budgets are today's counts for one in-session run at sf0.001, zero
+    // tolerance, each the same in 8 of 8 repeats. mesh_join_cube's two
+    // BLOCKGENs each shuffle once into one partition per bucket (an
+    // exchange and a shuffle-map job each); no LOAD of one parquet file
+    // starts a schema job. Before both: (7, 1) and (11, 3).
+    val out = java.nio.file.Files.createTempDirectory("graft-audit-scripts").toString
+    Seq("mesh_join_cube" -> ((7, 3)), "daily_report" -> ((9, 3))).foreach {
+      case (name, budget) =>
+        val got = jobsAndExchanges(ScriptRunner.run(Array(s"examples/$name.cmr",
+          s"DIR=$dir", s"OUT=$out/$name", "ENV=dev"), stopSession = false))
+        assert(got == budget, s"$name.cmr (jobs, exchanges) = $got, budget $budget")
+    }
+  }
+
   test("graph pair: triangle wedges and k-core peels are equi-joins, never products (q155/q159)") {
     // the round-12 scale-honest fixtures must keep scale-shaped plans:
     // orientation + wedge close as equi-joins over O(E), and the k-core

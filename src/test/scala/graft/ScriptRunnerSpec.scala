@@ -286,6 +286,37 @@ class ScriptRunnerSpec extends SparkSpec {
     assert(out.contains("SCHEDULER=FAIR"), out)
   }
 
+  test("two JVMs keep separate default warehouses; a JVM's own is removed at exit") {
+    import spark.implicits._
+    // the test JVM's BLOCKGEN table, in its default warehouse
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    assert(Paths.get(wh).getFileName.toString.startsWith("graft-warehouse-"), wh)
+    graft.operators.Blockgen.blockgen(Seq(1, 2, 3).toDF("k"), "wh_shared", Seq("k"), Nil, 2)
+    // a second JVM writes a BLOCKGEN table of the same name
+    val out = Files.createTempDirectory("graft-runner-wh").toString
+    val childTmp = Files.createTempDirectory("graft-runner-tmp")
+    val path = writeScript(
+      """r = LOAD '$DIR/region.parquet' USING PARQUET;
+        |b = BLOCKGEN r PARTITIONED ON r_regionkey INTO wh_shared BUCKETS 2;
+        |STORE b INTO '$OUT/b' USING PARQUET;""".stripMargin)
+    val pb = new ProcessBuilder("dev/run.sh", "graft.ScriptRunner", path,
+      "DIR=/root/testdata/sf0.001", s"OUT=$out")
+    pb.environment().put("GRAFT_JAVA_OPTS", s"-Djava.io.tmpdir=$childTmp")
+    pb.environment().put("GRAFT_XMX", "1g")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    pb.redirectErrorStream(true)
+    val proc = pb.start()
+    val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 0, log)
+    assert(spark.read.parquet(s"$out/b").count() == 5)
+    // neither overwrote the other, and the child's warehouse left with it
+    spark.catalog.refreshTable("wh_shared")
+    assert(spark.table("wh_shared").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    val left = childTmp.toFile.list().filter(_.startsWith("graft-warehouse-"))
+    assert(left.isEmpty, left.mkString(", "))
+    spark.sql("DROP TABLE IF EXISTS wh_shared")
+  }
+
   test("run in a live session leaves its shuffle-partition confs as they were") {
     val confs = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
